@@ -107,15 +107,13 @@ object Shell {
 
   private def printResult(r: CypherResult, out: PrintStream, maxRows: Int): Unit =
     r match {
-      case CypherRows(df) =>
-        // render through the DataFrame's own table formatter; row cap keeps
-        // an interactive typo from streaming the whole store to a console
-        // bounded: maxRows+1 rows — the console render cap
-        val rows = df.limit(maxRows + 1).collect()
-        val shown = rows.take(maxRows)
+      case rows @ CypherRows(df) =>
+        // the row cap keeps an interactive typo from streaming the whole
+        // store to a console
+        val (shown, truncated) = rows.take(maxRows)
         out.println(tableString(df.columns, shown.map(_.toSeq.map(v =>
           if (v == null) "null" else v.toString))))
-        if (rows.length > maxRows) out.println(s"(truncated at $maxRows rows)")
+        if (truncated) out.println(s"(truncated at $maxRows rows)")
         else out.println(s"${shown.length} row(s)")
       case CypherMutation(_, created, matched) =>
         out.println(s"nodes created: $created, nodes matched: $matched")

@@ -435,18 +435,4 @@ object Dedup {
     blobs.map(b => org.apache.spark.util.sketch.CountMinSketch.readFrom(
         new java.io.ByteArrayInputStream(b)))
       .reduce { (a, b) => a.mergeInPlace(b); a }
-
-  /** SimHash near-dup pairs within a blocking column: signatures whose
-    * Hamming distance <= maxHamming. */
-  def nearDupPairsSimhash(df: DataFrame, idCol: String, textCol: String,
-      blockCol: String, maxHamming: Int): DataFrame = {
-    val t = df.select(col(blockCol).as("blk"), col(idCol).as("id"),
-      simHash64(col(textCol)).as("sig"))
-    val a = t.select(col("blk"), col("id").as("id_a"), col("sig").as("sig_a"))
-    val b = t.select(col("blk"), col("id").as("id_b"), col("sig").as("sig_b"))
-    a.join(b, Seq("blk")).filter(col("id_a") < col("id_b"))
-      .withColumn("hamming", hamming(col("sig_a"), col("sig_b")))
-      .filter(col("hamming") <= maxHamming)
-      .select("id_a", "id_b", "hamming")
-  }
 }

@@ -351,20 +351,6 @@ object DedupIndex {
     swapIn(s"$path/text_buckets", s"$path/text_buckets.__compact")
   }
 
-  /** [[compactText]] for the embedding store (same write-to-temp + atomic
-    * swap posture). */
-  def compactEmbedding(spark: SparkSession, path: String): Unit = {
-    recoverEmbedding(path)
-    spark.read.parquet(s"$path/emb_vectors")
-      .repartitionByRange(col("id")).sortWithinPartitions("id")
-      .write.mode("overwrite").parquet(s"$path/emb_vectors.__compact")
-    spark.read.parquet(s"$path/emb_buckets")
-      .repartitionByRange(col("bucket")).sortWithinPartitions("bucket", "id")
-      .write.mode("overwrite").parquet(s"$path/emb_buckets.__compact")
-    swapIn(s"$path/emb_vectors", s"$path/emb_vectors.__compact")
-    swapIn(s"$path/emb_buckets", s"$path/emb_buckets.__compact")
-  }
-
   // ------------------------------------------------------------- PQ side --
 
   /** Persist the PQ half of the ANN store (VERDICT r7 #1's "PQ codes as

@@ -352,9 +352,7 @@ object Similarity {
     * [[graft.functions.PqCodes]]/[[graft.functions.PqDtab]] kernels —
     * one pass per row with the codebook a task-binary reference, instead
     * of m×ksub literal-dot struct expressions whose generated code volume
-    * dominated v10/v11 (10.6 s → sub-second for a 20k-row sf1 corpus);
-    * the compositional forms below stay as the spec's bit-equivalence
-    * references. */
+    * dominated v10/v11 (10.6 s → sub-second for a 20k-row sf1 corpus). */
   private[analytics] case class PqCodebook(m: Int, dsub: Int,
       book: Array[Array[(Array[Double], Double)]]) {
     private val cen: Array[Array[Array[Double]]] = book.map(_.map(_._1))
@@ -363,24 +361,6 @@ object Similarity {
       graft.functions.NativeExpressions.pqCodes(vec, cen, cc)
     def dtabCol(vec: Column): Column =
       graft.functions.NativeExpressions.pqDtab(vec, cen, cc)
-    /** Compositional reference of [[codesCol]] (kernel-equivalence spec). */
-    def codesColComposed(vec: Column): Column = array((0 until m).map { s =>
-      val sub = slice(vec, s * dsub + 1, dsub)
-      // argmin over ‖c‖² − 2·x·c (the ‖x‖² term is constant per argmin);
-      // ties break to the smallest code via the struct ordering
-      array_min(array(book(s).zipWithIndex.map { case ((cn, c2), c) =>
-        struct((lit(c2) - lit(2.0) * graft.functions.NativeExpressions
-          .dotProduct(sub, typedlit(cn.toSeq))).as("d"), lit(c).as("c"))
-      }: _*)).getField("c")
-    }: _*)
-    /** Compositional reference of [[dtabCol]] (kernel-equivalence spec). */
-    def dtabColComposed(vec: Column): Column = array((0 until m).map { s =>
-      val sub = slice(vec, s * dsub + 1, dsub)
-      array(book(s).map { case (cn, c2) =>
-        lit(c2) - lit(2.0) * graft.functions.NativeExpressions
-          .dotProduct(sub, typedlit(cn.toSeq))
-      }: _*)
-    }: _*)
     def adcScore: Column = (0 until m).map(s =>
       element_at(element_at(col("__dtab"), s + 1),
         element_at(col("__codes"), s + 1) + 1)).reduce(_ + _)

@@ -1,6 +1,6 @@
 package graft.cypher
 
-import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.{Column, DataFrame, Row}
 import org.apache.spark.sql.functions._
 import graft.graph.PropertyGraph
 import CypherAst._
@@ -17,7 +17,18 @@ import CypherAst._
   * (/root/reference/src/crwling.py:59,174).
   */
 sealed trait CypherResult
-final case class CypherRows(df: DataFrame) extends CypherResult
+final case class CypherRows(df: DataFrame) extends CypherResult {
+  /** The first `n` rows and whether more exist — the one drain every row
+    * sink (Bolt, HTTP, the shell) uses. One `limit(n + 1)` collect: a
+    * single bounded job on a top-k/LIMIT plan instead of one job per
+    * partition, and the driver never holds more than `n + 1` rows. */
+  def take(n: Int): (Array[Row], Boolean) = {
+    require(n >= 0 && n < Int.MaxValue, s"row cap $n out of range")
+    // bounded: n + 1 rows — the caller's row cap plus one to detect more
+    val rows = df.limit(n + 1).collect()
+    if (rows.length > n) (rows.take(n), true) else (rows, false)
+  }
+}
 final case class CypherMutation(graph: PropertyGraph, nodesCreated: Long,
   nodesMatched: Long) extends CypherResult
 /** Result of a `MATCH … SET/REMOVE/DELETE/MERGE` write. */

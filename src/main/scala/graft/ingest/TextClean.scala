@@ -30,15 +30,4 @@ object TextClean {
     * publisher falls back to "Google News". */
   def publisherOrDefault(c: Column): Column =
     coalesce(c, lit("Google News"))
-
-  /** I2-I7 composed: raw article candidates → clean, filtered records.
-    * Input columns: title, link, publisher, content. */
-  def articlePipeline(raw: DataFrame): DataFrame =
-    raw.filter(validLink(col("link")))
-      .filter(validTitle(col("title")))
-      .select(
-        cleanText(col("title")).as("title"),
-        col("link"),
-        publisherOrDefault(col("publisher")).as("publisher"),
-        cleanText(coalesce(col("content"), lit(""))).as("content"))
 }

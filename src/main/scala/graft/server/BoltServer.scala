@@ -48,11 +48,20 @@ import scala.util.control.NonFatal
   * engine computes in); decimals as float64 (Neo4j's number model).
   *
   * Scale posture: the listener is a thin adapter onto the same set-oriented
-  * Spark plans every other entry point compiles to; result rows stream
-  * through `toLocalIterator` under PULL flow control with a `maxRows` cap,
-  * so a runaway `MATCH (n) RETURN n` cannot buffer an unbounded result in
-  * the server JVM. Zero new dependencies: JDK sockets + the in-repo
-  * PackStream codec; loopback-tested in BoltServerSpec.
+  * Spark plans every other entry point compiles to. RUN compiles the
+  * statement and drains it with one bounded collect
+  * ([[graft.cypher.CypherRows.take]]: at most `maxRows + 1` rows on the
+  * driver, so a runaway `MATCH (n) RETURN n` cannot buffer an unbounded
+  * result in the server JVM); PULL `{n}` / `has_more` / DISCARD then serve
+  * the collected rows. A statement that fails while its rows are computed
+  * therefore fails its RUN with a FAILURE, and the connection survives.
+  * RUN's SUCCESS reports `t_first` (ms from RUN to rows ready) and the
+  * final PULL's `t_last` (ms spent streaming). Each response is flushed
+  * once, after its last message (SUCCESS / FAILURE / IGNORED), and
+  * the socket sets `TCP_NODELAY`, so a reply of several messages never
+  * waits on the client's delayed ACK. Zero new dependencies: JDK
+  * sockets + the in-repo PackStream codec; loopback-tested in
+  * BoltServerSpec.
   */
 final class BoltServer(session: CypherSession, maxRows: Int = 10000) {
 
@@ -69,11 +78,12 @@ final class BoltServer(session: CypherSession, maxRows: Int = 10000) {
       try while (true) {
         val sock = serverSocket.accept()
         open.add(sock)
+        val connId = connIds.incrementAndGet()
         val t = new Thread(() => {
-          try serve(sock)
+          try serve(sock, connId)
           catch { case NonFatal(_) => () }
           finally { open.remove(sock); try sock.close() catch { case NonFatal(_) => () } }
-        }, s"bolt-conn-${connIds.incrementAndGet()}")
+        }, s"bolt-conn-$connId")
         t.setDaemon(true)
         t.start()
       } catch { case NonFatal(_) => () } // socket closed on stop()
@@ -94,7 +104,10 @@ final class BoltServer(session: CypherSession, maxRows: Int = 10000) {
 
   // ---- handshake + framing -------------------------------------------------
 
-  private def serve(sock: Socket): Unit = {
+  private def serve(sock: Socket, connId: Long): Unit = {
+    // replies are flushed whole (`respond`): Nagle would only hold
+    // the last segment of one back for the client's delayed ACK
+    sock.setTcpNoDelay(true)
     val in = new DataInputStream(new BufferedInputStream(sock.getInputStream))
     val out = new DataOutputStream(new BufferedOutputStream(sock.getOutputStream))
     val hello = new Array[Byte](4)
@@ -108,7 +121,7 @@ final class BoltServer(session: CypherSession, maxRows: Int = 10000) {
         // Bolt 5+ uses the UTC DateTime structs ('I'/'i'); 4.4 the legacy
         // pair ('F'/'f'). The engine computes in UTC (offset 0), where the
         // two encodings carry identical field values — only the tag flips.
-        messageLoop(in, out, legacyDateTime = major < 5)
+        messageLoop(in, out, legacyDateTime = major < 5, connId)
     }
   }
 
@@ -145,6 +158,8 @@ final class BoltServer(session: CypherSession, maxRows: Int = 10000) {
     }
   }
 
+  /** Frames one message into the buffered stream; the caller flushes once
+    * its response is complete. */
   private def writeMessage(out: DataOutputStream, msg: Struct): Unit = {
     val body = new ByteArrayOutputStream()
     PackStream.write(new DataOutputStream(body), msg)
@@ -157,29 +172,38 @@ final class BoltServer(session: CypherSession, maxRows: Int = 10000) {
       off += n
     }
     out.writeShort(0)
-    out.flush()
   }
 
   // ---- per-connection state machine ---------------------------------------
 
-  private final class Stream(val fields: Seq[String], val rows: Iterator[Seq[Any]],
-    val summary: Map[String, Any])
+  /** A result collected at RUN: PULL batches advance `next` through
+    * `rows`; `streamNs` sums the time PULLs spent writing them. */
+  private final class Stream(val fields: Seq[String], val rows: Array[Seq[Any]],
+      summary: Map[String, Any]) {
+    var next = 0
+    var streamNs = 0L
+    def hasMore: Boolean = next < rows.length
+    def done: Map[String, Any] = summary + ("t_last" -> streamNs / 1000000L)
+  }
 
   private def messageLoop(in: DataInputStream, out: DataOutputStream,
-      legacyDateTime: Boolean): Unit = {
+      legacyDateTime: Boolean, connId: Long): Unit = {
     var failed = false
     var stream: Stream = null
     // explicit-transaction state: writes enqueued between BEGIN and COMMIT
     var inTx = false
     val txQueue = scala.collection.mutable.ArrayBuffer.empty[(String, Map[String, Any])]
-    def success(meta: Map[String, Any]): Unit = writeMessage(out, Struct(0x70, Seq(meta)))
+    /** Writes a response's last message and flushes: the RECORDs of a PULL
+      * wait in the buffer, so a whole response leaves in one write. */
+    def respond(msg: Struct): Unit = { writeMessage(out, msg); out.flush() }
+    def success(meta: Map[String, Any]): Unit = respond(Struct(0x70, Seq(meta)))
     def failure(code: String, message: String): Unit = {
       // a FAILURE inside an explicit transaction rolls it back (Neo4j's
       // rule: a failed tx cannot be committed, only RESET away)
       failed = true; stream = null; inTx = false; txQueue.clear()
-      writeMessage(out, Struct(0x7F, Seq(Map("code" -> code, "message" -> message))))
+      respond(Struct(0x7F, Seq(Map("code" -> code, "message" -> message))))
     }
-    def ignored(): Unit = writeMessage(out, Struct(0x7E, Seq.empty))
+    def ignored(): Unit = respond(Struct(0x7E, Seq.empty))
     /** Statement classification without execution: EXPLAIN/PROFILE are
       * plan-reads; otherwise parse and dispatch on the AST form. A parse
       * error surfaces HERE (at RUN), not at COMMIT — same as Neo4j. */
@@ -218,7 +242,7 @@ final class BoltServer(session: CypherSession, maxRows: Int = 10000) {
         case 0x01 => // HELLO
           success(Map(
             "server" -> "Neo4j/5.4.0 (compatible; graft-spark)",
-            "connection_id" -> s"bolt-${connIds.get()}",
+            "connection_id" -> s"bolt-$connId",
             "hints" -> Map.empty[String, Any]))
         case 0x6A | 0x6B => success(Map.empty) // LOGON / LOGOFF (5.1+)
         case 0x11 => // BEGIN: open the write-buffering transaction
@@ -249,7 +273,7 @@ final class BoltServer(session: CypherSession, maxRows: Int = 10000) {
                 }
                 applied += 1
               }
-              success(Map("bookmark" -> s"graft:${connIds.get()}",
+              success(Map("bookmark" -> s"graft:$connId",
                 "stats" -> Map(
                   "nodes-created" -> created, "nodes-matched" -> matched,
                   "properties-set" -> propsSet,
@@ -291,6 +315,12 @@ final class BoltServer(session: CypherSession, maxRows: Int = 10000) {
               Map("addresses" -> Seq(addr), "role" -> "ROUTE")))))
         case 0x54 => success(Map.empty) // TELEMETRY
         case 0x10 => // RUN(query, params, extra)
+          val t0 = System.nanoTime()
+          def runSuccess(): Unit = success(Map("fields" -> stream.fields,
+            "t_first" -> (System.nanoTime() - t0) / 1000000L, "qid" -> 0L))
+          // compile errors keep their client code; an error raised while
+          // the rows are computed is the engine's, not the statement text's
+          var compiled = false
           try {
             val query = msg.fields.head.asInstanceOf[String]
             val params = msg.fields.lift(1) match {
@@ -312,19 +342,20 @@ final class BoltServer(session: CypherSession, maxRows: Int = 10000) {
                 // validated above (parse errors fail the RUN, as in Neo4j),
                 // applied at COMMIT; reads in this tx see the committed store
                 txQueue += ((query, params))
-                stream = new Stream(Seq.empty, Iterator.empty,
-                  Map("type" -> "w", "t_last" -> 0L, "db" -> "graft",
-                    "deferred_until_commit" -> true))
-                success(Map("fields" -> stream.fields, "t_first" -> 0L,
-                  "qid" -> 0L))
+                stream = new Stream(Seq.empty, Array.empty,
+                  Map("type" -> "w", "db" -> "graft", "deferred_until_commit" -> true))
+                runSuccess()
               }
             } else {
-              stream = toStream(session.run(query, params), legacyDateTime)
-              success(Map("fields" -> stream.fields, "t_first" -> 0L,
-                "qid" -> 0L))
+              val res = session.run(query, params)
+              compiled = true
+              stream = toStream(res, legacyDateTime)
+              runSuccess()
             }
           } catch {
-            case NonFatal(e) => failure("Neo.ClientError.Statement.SyntaxError",
+            case NonFatal(e) => failure(
+              if (compiled) "Neo.DatabaseError.Statement.ExecutionFailed"
+              else "Neo.ClientError.Statement.SyntaxError",
               Option(e.getMessage).getOrElse(e.getClass.getName))
           }
         case 0x3F => // PULL {n: -1 | k}
@@ -335,17 +366,20 @@ final class BoltServer(session: CypherSession, maxRows: Int = 10000) {
                 .get("n").collect { case l: Long => l }.getOrElse(-1L)
               case _ => -1L
             }
-            var sent = 0L
-            while (stream.rows.hasNext && (n < 0 || sent < n)) {
-              writeMessage(out, Struct(0x71, Seq(stream.rows.next())))
-              sent += 1
+            val t0 = System.nanoTime()
+            val end = if (n < 0) stream.rows.length
+              else math.min(stream.rows.length.toLong, stream.next + n).toInt
+            while (stream.next < end) {
+              writeMessage(out, Struct(0x71, Seq(stream.rows(stream.next))))
+              stream.next += 1
             }
-            if (stream.rows.hasNext) success(Map("has_more" -> true))
-            else { val s = stream; stream = null; success(s.summary) }
+            stream.streamNs += System.nanoTime() - t0
+            if (stream.hasMore) success(Map("has_more" -> true))
+            else { val s = stream; stream = null; success(s.done) }
           }
         case 0x2F => // DISCARD
           if (stream == null) failure("Neo.ClientError.Request.Invalid", "DISCARD with no open result")
-          else { val s = stream; stream = null; success(s.summary) }
+          else { val s = stream; stream = null; success(s.done) }
         case other =>
           failure("Neo.ClientError.Request.Invalid", f"unsupported message tag 0x$other%02X")
       }
@@ -354,27 +388,18 @@ final class BoltServer(session: CypherSession, maxRows: Int = 10000) {
 
   // ---- result adaptation ---------------------------------------------------
 
-  private def toStream(res: CypherResult, legacyDateTime: Boolean = false): Stream = res match {
-    case CypherRows(df) =>
-      val base = Map[String, Any]("type" -> "r", "t_last" -> 0L, "db" -> "graft")
-      // bounded: streams row-at-a-time; PULL flow control caps at maxRows
-      val it = df.toLocalIterator()
-      val capped = new Iterator[Seq[Any]] {
-        private var n = 0
-        def hasNext: Boolean = n < maxRows && it.hasNext
-        def next(): Seq[Any] = {
-          n += 1
-          val row = it.next()
-          (0 until row.length).map(i =>
-            if (row.isNullAt(i)) null else toBolt(row.get(i), legacyDateTime))
-        }
-      }
-      new Stream(df.columns.toSeq, capped, base)
+  private def toStream(res: CypherResult, legacyDateTime: Boolean): Stream = res match {
+    case r @ CypherRows(df) =>
+      // rows past maxRows are dropped: the cap bounds the server's memory
+      val (rows, _) = r.take(maxRows)
+      new Stream(df.columns.toSeq, rows.map(row => (0 until row.length).map(i =>
+        if (row.isNullAt(i)) null else toBolt(row.get(i), legacyDateTime))),
+        Map("type" -> "r", "db" -> "graft"))
     case CypherMutation(_, created, matched) =>
-      new Stream(Seq.empty, Iterator.empty, Map("type" -> "w", "t_last" -> 0L, "db" -> "graft",
+      new Stream(Seq.empty, Array.empty, Map("type" -> "w", "db" -> "graft",
         "stats" -> Map("nodes-created" -> created, "nodes-matched" -> matched)))
     case w: CypherWrite =>
-      new Stream(Seq.empty, Iterator.empty, Map("type" -> "w", "t_last" -> 0L, "db" -> "graft",
+      new Stream(Seq.empty, Array.empty, Map("type" -> "w", "db" -> "graft",
         "stats" -> Map(
           "properties-set" -> w.propertiesSet,
           "properties-removed" -> w.propertiesRemoved,

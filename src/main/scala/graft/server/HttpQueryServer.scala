@@ -32,12 +32,13 @@ import scala.jdk.CollectionConverters._
   *
   * Scale posture: the server is a thin adapter — every statement compiles
   * to the same set-oriented Spark plans the library runs everywhere else;
-  * result rows stream through `toLocalIterator` capped at `maxRows`, so a
-  * runaway `MATCH (n) RETURN n` cannot buffer an unbounded result in the
-  * server JVM. Write statements report Neo4j-style counters instead of
-  * rows. JSON via the Jackson already on Spark's classpath; HTTP via the
-  * JDK's HttpServer — zero new dependencies, loopback-tested in
-  * HttpQueryServerSpec.
+  * a read drains with one bounded collect ([[graft.cypher.CypherRows.take]]:
+  * at most `maxRows + 1` rows on the driver), so a runaway
+  * `MATCH (n) RETURN n` cannot buffer an unbounded result in the server
+  * JVM, and `truncated` reports whether the cap cut rows off. Write
+  * statements report Neo4j-style counters instead of rows. JSON via the
+  * Jackson already on Spark's classpath; HTTP via the JDK's HttpServer —
+  * zero new dependencies, loopback-tested in HttpQueryServerSpec.
   */
 final class HttpQueryServer(session: CypherSession, maxRows: Int = 10000) {
 
@@ -127,16 +128,12 @@ final class HttpQueryServer(session: CypherSession, maxRows: Int = 10000) {
   private def render(res: CypherResult): ObjectNode = {
     val node = mapper.createObjectNode()
     res match {
-      case CypherRows(df) =>
+      case r @ CypherRows(df) =>
         val cols = node.putArray("columns")
         df.columns.foreach(cols.add)
         val data = node.putArray("data")
-        // stream, never collect: the cap bounds server-side buffering
-        // bounded: row-at-a-time stream capped at maxRows
-        val it = df.toLocalIterator()
-        var n = 0
-        while (it.hasNext && n < maxRows) {
-          val row = it.next()
+        val (rows, truncated) = r.take(maxRows)
+        rows.foreach { row =>
           val arr = data.addObject().putArray("row")
           (0 until row.length).foreach { i =>
             if (row.isNullAt(i)) arr.addNull()
@@ -148,9 +145,8 @@ final class HttpQueryServer(session: CypherSession, maxRows: Int = 10000) {
               case other => arr.add(String.valueOf(other))
             }
           }
-          n += 1
         }
-        node.put("truncated", it.hasNext)
+        node.put("truncated", truncated)
       case CypherMutation(_, created, matched) =>
         node.putArray("columns"); node.putArray("data")
         val st = node.putObject("stats")

@@ -2,7 +2,7 @@ package graft.server
 
 import graft.SparkTestBase
 import graft.cypher.CypherSession
-import graft.graph.PropertyGraph
+import graft.graph.{GraphStore, PropertyGraph}
 import graft.server.PackStream.Struct
 import org.apache.spark.sql.functions._
 
@@ -68,12 +68,59 @@ class BoltServerSpec extends SparkTestBase {
   private def propose(major: Int, minor: Int, range: Int = 0): Int =
     (range << 16) | (minor << 8) | major
 
-  private def newServer(): (BoltServer, Int, CypherSession) = {
+  private def newServer(maxRows: Int = 10000): (BoltServer, Int, CypherSession) = {
     val sess = new CypherSession(PropertyGraph.empty(spark),
       clock = () => lit("2026-01-01 00:00:00"))
-    val server = new BoltServer(sess)
+    val server = new BoltServer(sess, maxRows)
     val port = server.start()
     (server, port, sess)
+  }
+
+  /** A server over a persisted store of `n` Articles: the parquet scan
+    * `graft.Serve` boots from, so plans run as they do in production
+    * rather than over in-memory local relations. The store keeps its
+    * range partitions as separate files (a tiny store would otherwise be
+    * coalesced into one), so a scan spans several partitions as a real
+    * store's does. */
+  private def storeServer(n: Int): (BoltServer, Int) = {
+    import spark.implicits._
+    val dir = java.nio.file.Files.createTempDirectory("graft_bolt_store").toString + "/g"
+    val arts = (1 to n).map { i =>
+      ("Article", s"https://ex.org/$i", Map("link" -> s"https://ex.org/$i", "title" -> s"title $i"))
+    }.toDF("label", "key", "props")
+    val coalesce = "spark.sql.adaptive.coalescePartitions.enabled"
+    spark.conf.set(coalesce, "false")
+    try GraphStore.write(PropertyGraph.empty(spark).mergeNodes(arts), dir)
+    finally spark.conf.unset(coalesce)
+    val server = new BoltServer(new CypherSession(GraphStore.read(spark, dir)))
+    (server, server.start())
+  }
+
+  /** A connected 5.4 client past HELLO; returns it with HELLO's metadata. */
+  private def hello(port: Int): (Client, Map[String, Any]) = {
+    val c = new Client(port)
+    assert(c.handshake(Seq(propose(5, 4), 0, 0, 0)).contains((5, 4)))
+    c.send(0x01, Map("user_agent" -> "spec/1.0"))
+    val h = c.recv()
+    assert((h.tag & 0xFF) == 0x70, h)
+    (c, meta(h))
+  }
+
+  /** PULLs in batches of `n` until the summary; returns the records of
+    * each batch and the final summary. */
+  private def pullAll(c: Client, n: Long): (Seq[Seq[Seq[Any]]], Map[String, Any]) = {
+    val batches = Seq.newBuilder[Seq[Seq[Any]]]
+    var summary: Map[String, Any] = null
+    while (summary == null) {
+      c.send(0x3F, Map("n" -> n))
+      val batch = Seq.newBuilder[Seq[Any]]
+      var m = c.recv()
+      while ((m.tag & 0xFF) == 0x71) { batch += m.fields.head.asInstanceOf[Seq[Any]]; m = c.recv() }
+      assert((m.tag & 0xFF) == 0x70, m)
+      batches += batch.result()
+      if (!meta(m).get("has_more").contains(true)) summary = meta(m)
+    }
+    (batches.result(), summary)
   }
 
   test("handshake: range expansion picks the highest supported; unsupported gets 00000000") {
@@ -573,5 +620,116 @@ class BoltServerSpec extends SparkTestBase {
       c.recv()
       c.close()
     } finally server.stop()
+  }
+
+  test("concurrent connections each report their own connection id") {
+    val (server, port, _) = newServer()
+    try {
+      // both connections are open before either says HELLO, so an id read
+      // from a server-wide counter would give both the newest one
+      val a = new Client(port)
+      assert(a.handshake(Seq(propose(5, 4), 0, 0, 0)).contains((5, 4)))
+      val (b, helloB) = hello(port)
+      a.send(0x01, Map("user_agent" -> "spec/1.0"))
+      val helloA = meta(a.recv())
+      assert(helloA("connection_id") != helloB("connection_id"), (helloA, helloB))
+      // COMMIT's bookmark names the committing connection too
+      def commitBookmark(c: Client): Any = {
+        c.send(0x11, Map.empty[String, Any]); c.recv()
+        c.send(0x12)
+        meta(c.recv())("bookmark")
+      }
+      assert(commitBookmark(a) != commitBookmark(b))
+      a.close(); b.close()
+    } finally server.stop()
+  }
+
+  test("a statement that fails while its rows are computed gets a FAILURE " +
+      "and the connection survives") {
+    val (server, port) = storeServer(8)
+    try {
+      val (c, _) = hello(port)
+      // parses and compiles; the ANSI cast of a non-numeric title throws
+      // only when the scan's rows are evaluated
+      c.send(0x10, "MATCH (a:Article) RETURN a.title * 2 AS x",
+        Map.empty[String, Any], Map.empty[String, Any])
+      val fail = c.recv()
+      assert((fail.tag & 0xFF) == 0x7F, fail)
+      assert(meta(fail)("code") == "Neo.DatabaseError.Statement.ExecutionFailed", fail)
+      c.send(0x0F)
+      assert((c.recv().tag & 0xFF) == 0x70)
+      c.send(0x10, "RETURN 1 AS x", Map.empty[String, Any], Map.empty[String, Any])
+      assert((c.recv().tag & 0xFF) == 0x70)
+      val (batches, _) = pullAll(c, -1L)
+      assert(batches.flatten == Seq(Seq(1L)))
+      c.close()
+    } finally server.stop()
+  }
+
+  test("t_first and t_last report the RUN-to-rows and streaming times") {
+    val (server, port) = storeServer(8)
+    try {
+      val (c, _) = hello(port)
+      c.send(0x10, "MATCH (a:Article) RETURN a.title AS t ORDER BY t",
+        Map.empty[String, Any], Map.empty[String, Any])
+      val run = meta(c.recv())
+      val (batches, summary) = pullAll(c, 3L)
+      assert(batches.map(_.size) == Seq(3, 3, 2))
+      run("t_first") match {
+        case t: Long => assert(t >= 1L, run) // compile + a Spark job
+        case other => fail(s"t_first is not a Long: $other")
+      }
+      assert(summary("t_last").isInstanceOf[Long], summary)
+      c.close()
+    } finally server.stop()
+  }
+
+  test("maxRows caps the records streamed, across PULL batches too") {
+    val (server, port, _) = newServer(maxRows = 5)
+    try {
+      val (c, _) = hello(port)
+      val q = "UNWIND range(1, 7) AS x RETURN x ORDER BY x"
+      c.send(0x10, q, Map.empty[String, Any], Map.empty[String, Any]); c.recv()
+      val (all, _) = pullAll(c, -1L)
+      assert(all.flatten == (1L to 5L).map(Seq(_)))
+      c.send(0x10, q, Map.empty[String, Any], Map.empty[String, Any]); c.recv()
+      val (batched, summary) = pullAll(c, 2L)
+      assert(batched.map(_.size) == Seq(2, 2, 1))
+      assert(batched.flatten == (1L to 5L).map(Seq(_)))
+      assert(summary("type") == "r")
+      c.close()
+    } finally server.stop()
+  }
+
+  test("a LIMIT read over Bolt runs one job, one stage and no shuffle") {
+    import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart, SparkListenerStageCompleted}
+    val (server, port) = storeServer(40)
+    val sc = spark.sparkContext
+    val counts = new java.util.concurrent.atomic.AtomicLongArray(3) // jobs, stages, shuffle bytes
+    val listener = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit = counts.incrementAndGet(0)
+      override def onStageCompleted(e: SparkListenerStageCompleted): Unit = {
+        counts.incrementAndGet(1)
+        val m = e.stageInfo.taskMetrics
+        counts.addAndGet(2, m.shuffleWriteMetrics.bytesWritten + m.shuffleReadMetrics.totalBytesRead)
+      }
+    }
+    try {
+      val (c, _) = hello(port)
+      val q = "MATCH (a:Article) RETURN a.title LIMIT 5"
+      def readBack(): Seq[Seq[Any]] = {
+        c.send(0x10, q, Map.empty[String, Any], Map.empty[String, Any])
+        assert((c.recv().tag & 0xFF) == 0x70)
+        pullAll(c, -1L)._1.flatten
+      }
+      assert(readBack().size == 5) // a warm-up run, not counted
+      org.apache.spark.ListenerBusDrain(sc)
+      sc.addSparkListener(listener)
+      assert(readBack().size == 5)
+      org.apache.spark.ListenerBusDrain(sc)
+      assert((counts.get(0), counts.get(1), counts.get(2)) == ((1L, 1L, 0L)),
+        "jobs, stages, shuffle bytes")
+      c.close()
+    } finally { sc.removeSparkListener(listener); server.stop() }
   }
 }
