@@ -655,28 +655,28 @@ final class CypherSession(
     * moved: docs = (key, node map, dl), postings = (key, fprop, pos,
     * term) — one tokenize pass per indexed property, pinned. avgDl is an
     * exact long-sum / count division. Returns (docs, termPostings, n,
-    * avgDl): `termPostings(t)` is the postings frame for ONE query term —
-    * an in-memory filter below [[CypherSession.IndexMemThresholdKey]]
-    * postings rows, a term-bucket-partition-pruned parquet read at/above
-    * it (VERDICT r11 #2: per-query IO then tracks the query's own terms,
-    * never the corpus). */
+    * avgDl): `termPostings(ts)` is the postings frame for a query's term
+    * set, read ONCE — an in-memory filter below
+    * [[CypherSession.IndexMemThresholdKey]] postings rows, at/above it one
+    * parquet scan pruned to the terms' bucket directories (per-query IO
+    * tracks the query's own terms, never the corpus). */
   private def fulltextServe(name: String,
       d: CypherSession.FulltextIndexDef)
-      : (DataFrame, String => DataFrame, Long, Double) = {
+      : (DataFrame, Seq[String] => DataFrame, Long, Double) = {
     val spark = graph.nodes.sparkSession
     // termFn captures the ONE state struct it serves — the probe never
     // re-reads d.state, so a racing patch can't pair its new overlay
     // with this probe's older docs (ADVICE r13: consistent-pair capture)
-    def termFn(st: CypherSession.FulltextState): String => DataFrame =
-      if (st.postings != null) { t => st.postings.filter(col("term") === t) }
-      else { t =>
+    def termFn(st: CypherSession.FulltextState): Seq[String] => DataFrame =
+      if (st.postings != null) { ts => st.postings.filter(col("term").isin(ts: _*)) }
+      else { ts =>
         // persisted probe: pruned LIVE layout rows (generation ≥ any
         // tombstone's dropBelow for the key — round 15 compaction), minus
-        // overlaid keys, plus the overlay's rows for this term (round 13
+        // overlaid keys, plus the overlay's rows for these terms (round 13
         // — same effective-index algebra as the vector overlay)
         val pruned = st.postingsFrame
-          .filter(col("tb") === lit(CypherSession.termBucket(t)) &&
-            col("term") === t)
+          .filter(col("tb").isin(ts.map(CypherSession.termBucket): _*) &&
+            col("term").isin(ts: _*))
         val live =
           if (st.tombstones == null) pruned
           else pruned.join(broadcast(st.tombstones), Seq("key"), "left")
@@ -686,11 +686,11 @@ final class CypherSession(
         val ov = st.overlay
         if (ov == null) baseRows
         else baseRows.join(broadcast(ov._2), Seq("key"), "left_anti")
-          .unionByName(ov._1.filter(col("term") === t)
+          .unionByName(ov._1.filter(col("term").isin(ts: _*))
             .select(col("key"), col("fprop"), col("pos"), col("term")))
       }
     def serve(st: CypherSession.FulltextState)
-        : (DataFrame, String => DataFrame, Long, Double) =
+        : (DataFrame, Seq[String] => DataFrame, Long, Double) =
       (st.docs, termFn(st), st.n, st.avgDl)
     val cur = graph
     val cached = d.state
@@ -803,8 +803,9 @@ final class CypherSession(
       // query term's probe prunes to its bucket's directory and the
       // pushed term equality finishes the cut — postings IO per query is
       // the query's own terms' lists, independent of corpus size. The
-      // docs side (one skinny row per doc) stays pinned: scores and the
-      // final node join touch it only for matched candidates.
+      // docs side (one row per doc: key, node map, dl) stays pinned in
+      // memory; a query streams it once through a hash join built on the
+      // query's candidate docs, never broadcasting it.
       val dir = indexScratchDir("ft")
       postings
         .withColumn("gen", lit(0)) // compactions append higher generations
@@ -1152,94 +1153,91 @@ final class CypherSession(
   /** Evaluate a fulltext query against an index: (node, score) rows for
     * every matching document.
     *
-    * Matching: a doc matches when SOME OR-group has every clause present;
-    * a phrase is present when its tokens occur at consecutive positions
-    * within one indexed property (adjacency = |phrase|−1 equi-joins on
-    * (key, fprop, pos), clause-term prefilter first — the postings that
-    * reach any join are only the query's own terms, never the corpus).
+    * One plan for both index layouts: the query's postings are read ONCE
+    * (`termPostings` over its whole term set) and grouped per document,
+    * so each doc carries only its own (term, fprop, pos) list. Every
+    * clause's tf is a higher-order function over that list; a phrase
+    * occurs at each posting of its first token whose later tokens sit at
+    * the following positions of the same property. Docs with no clause
+    * present drop out. The candidates join the docs frame (docs stream
+    * through a hash built on the candidates, never broadcast) and are
+    * pinned; the clause dfs are observed on the pin's own action.
+    *
+    * Matching: a doc matches when SOME OR-group has every clause present
+    * (NOT = absence) — a column expression over the tfs. Docs containing
+    * NO query clause can never match (parseFtQuery rejects trees that
+    * would accept them), so the candidates are complete.
     *
     * Scoring: the log-free BM25 (t21's bit-determinism posture) —
     * idf = (N − df + 0.5)/(df + 0.5), tf normalized by the Lucene-default
-    * k1/b length correction — summed over the doc's matching clauses in
-    * CLAUSE ORDER via a sorted-array left fold, so the double additions
+    * k1/b length correction, the dfs as literals — summed over the doc's
+    * positive clauses in CLAUSE ORDER from 0.0, so the double additions
     * associate identically in Spark and the DuckDB oracle. */
   private def fulltextQuery(name: String,
       d: CypherSession.FulltextIndexDef, q: String): DataFrame = {
+    import graft.analytics.IterCheckpoint.IterCheckpointOps
+    import CypherSession.{FtNode, FtLeaf, FtAnd, FtOr, FtNot, Bm25K1, Bm25B}
     val (docs, termPostings, nDocs, avgDl) = fulltextServe(name, d)
-    val (ftRoot, distinctClauses) = parseFtQuery(q)
+    val (ftRoot, clauses) = parseFtQuery(q)
     // clause polarity: a cid contributes to the SCORE only where it
     // appears under an even number of NOTs (Lucene: prohibited clauses
     // filter, never score). A clause may appear both ways.
     val positiveCids = {
       val out = scala.collection.mutable.Set.empty[Int]
-      def walk(n: CypherSession.FtNode, neg: Boolean): Unit = n match {
-        case CypherSession.FtLeaf(c) => if (!neg) out += c
-        case CypherSession.FtAnd(l, r) => walk(l, neg); walk(r, neg)
-        case CypherSession.FtOr(l, r) => walk(l, neg); walk(r, neg)
-        case CypherSession.FtNot(e) => walk(e, !neg)
+      def walk(n: FtNode, neg: Boolean): Unit = n match {
+        case FtLeaf(c) => if (!neg) out += c
+        case FtAnd(l, r) => walk(l, neg); walk(r, neg)
+        case FtOr(l, r) => walk(l, neg); walk(r, neg)
+        case FtNot(e) => walk(e, !neg)
       }
       walk(ftRoot, neg = false)
       out.toSeq.sorted
     }
-    // per-clause per-doc term frequency
-    val tfs = distinctClauses.zipWithIndex.map { case (toks, cid) =>
-      val occ =
-        if (toks.size == 1)
-          termPostings(toks.head)
-            .select(col("key"), col("fprop"), col("pos"))
-        else
-          toks.zipWithIndex.map { case (t, off) =>
-            termPostings(t)
-              .select(col("key"), col("fprop"),
-                (col("pos") - off).as("pos"))
-          }.reduce(_.join(_, Seq("key", "fprop", "pos")))
-      occ.groupBy(col("key"))
-        .agg(count(lit(1)).as("tf"))
-        .select(col("key"), lit(cid).as("cid"), col("tf"))
-    }.reduce(_ unionByName _)
-    // clause document frequencies (over the indexed population)
-    val dfs = tfs.groupBy(col("cid")).agg(count(lit(1)).as("df"))
-    // matched docs: one grouped pass collects each doc's present clause
-    // ids; the query tree evaluates as a pure column expression over the
-    // set (NOT = absence). Docs containing NO query clause can never
-    // match (parseFtQuery rejects trees that would accept them), so the
-    // tfs universe is complete.
-    def evalFt(n: CypherSession.FtNode, cids: Column): Column = n match {
-      case CypherSession.FtLeaf(c) => array_contains(cids, c)
-      case CypherSession.FtAnd(l, r) => evalFt(l, cids) && evalFt(r, cids)
-      case CypherSession.FtOr(l, r) => evalFt(l, cids) || evalFt(r, cids)
-      case CypherSession.FtNot(e) => !evalFt(e, cids)
-    }
-    val matched = tfs.groupBy(col("key"))
-      .agg(collect_set(col("cid")).as("__cids"))
-      .filter(evalFt(ftRoot, col("__cids")))
-      .select(col("key"))
-    // BM25-family contribution per (doc, clause); constants written as
-    // the same arithmetic the oracle SQL uses so both engines fold the
-    // identical doubles
-    val contribs = tfs
-      .join(broadcast(dfs), Seq("cid"))
-      .join(docs.select(col("key"), col("dl")), Seq("key"))
-      .withColumn("contrib",
-        (col("tf").cast("double") * lit(CypherSession.Bm25K1 + 1.0) /
-          (col("tf").cast("double") + lit(CypherSession.Bm25K1) *
-            (lit(1.0 - CypherSession.Bm25B) +
-              lit(CypherSession.Bm25B) * col("dl").cast("double") /
-                lit(avgDl)))) *
-          ((lit(nDocs.toDouble) - col("df").cast("double") + lit(0.5)) /
-            (col("df").cast("double") + lit(0.5))))
-    // prohibited (NOT-only) clauses filter matches but never score
-    val posContribs =
-      if (positiveCids.size == distinctClauses.size) contribs
-      else contribs.filter(
-        col("cid").isin(positiveCids.map(x => x: Any): _*))
-    val scored = posContribs.join(matched, Seq("key"), "left_semi")
+    val ps = col("__ps")
+    def tf(toks: Seq[String]): Column = size(filter(ps, p =>
+      toks.zipWithIndex.map {
+        case (t, 0) => p.getField("term") === t
+        case (t, off) => exists(ps, o => o.getField("term") === t &&
+          o.getField("fprop") === p.getField("fprop") &&
+          o.getField("pos") === p.getField("pos") + off)
+      }.reduce(_ && _)))
+    val tfs = clauses.indices.map(c => s"__tf$c")
+    val present = tfs.map(c => col(c) > 0)
+    // the docs frame streams through a hash built on the candidates
+    val (cands, m) = broadcast(termPostings(clauses.flatten.distinct)
       .groupBy(col("key"))
-      .agg(aggregate(
-        sort_array(collect_list(struct(col("cid"), col("contrib")))),
-        lit(0.0), (acc, s) => acc + s.getField("contrib")).as("score"))
-    scored.join(docs.select(col("key"), col("node")), Seq("key"))
-      .select(col("node"), col("score"), col("key"))
+      .agg(collect_list(struct(col("term"), col("fprop"), col("pos"))).as("__ps"))
+      .select(col("key") +: clauses.zip(tfs).map { case (toks, c) => tf(toks).as(c) }: _*)
+      .filter(present.reduce(_ || _)))
+      .join(docs, Seq("key"))
+      .iterCheckpointObserve(
+        tfs.zip(present).map { case (c, p) => count(when(p, 1)).as(c) }: _*)
+    def evalFt(n: FtNode): Column = n match {
+      case FtLeaf(c) => present(c)
+      case FtAnd(l, r) => evalFt(l) && evalFt(r)
+      case FtOr(l, r) => evalFt(l) || evalFt(r)
+      case FtNot(e) => !evalFt(e)
+    }
+    // BM25-family contribution per clause; constants written as the same
+    // arithmetic the oracle SQL uses so both engines fold the identical
+    // doubles. An absent clause adds +0.0, which leaves a score exact.
+    def contrib(c: Int): Column = {
+      val tfD = col(tfs(c)).cast("double")
+      val df = lit(m(tfs(c)).asInstanceOf[Long].toDouble)
+      when(present(c),
+        tfD * lit(Bm25K1 + 1.0) / (tfD + lit(Bm25K1) *
+          (lit(1.0 - Bm25B) + lit(Bm25B) * col("dl").cast("double") /
+            lit(avgDl))) *
+          ((lit(nDocs.toDouble) - df + lit(0.5)) / (df + lit(0.5))))
+        .otherwise(lit(0.0))
+    }
+    val hits = cands.filter(evalFt(ftRoot))
+      .select(col("node"),
+        positiveCids.foldLeft(lit(0.0))((acc, c) => acc + contrib(c))
+          .as("score"), col("key"))
+    // the hits go to one consumer: sorting them in one task skips the
+    // range-partitioning sample and shuffle of a distributed sort
+    hits.coalesce(1)
       // same (length, lex) tie collation as queryNodes (ADVICE r11 #1)
       .orderBy(col("score").desc, length(col("key")), col("key"))
       .select(col("node"), col("score"))

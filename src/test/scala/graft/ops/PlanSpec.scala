@@ -625,13 +625,21 @@ class PlanSpec extends SparkTestBase {
     * wrappers and materialized query stages (plain `plan.collect` stops
     * at those boundaries). */
   private def allFileScans(p: org.apache.spark.sql.execution.SparkPlan)
-      : Seq[org.apache.spark.sql.execution.FileSourceScanExec] = p match {
+      : Seq[org.apache.spark.sql.execution.FileSourceScanExec] =
+    planLeaves(p).collect {
+      case f: org.apache.spark.sql.execution.FileSourceScanExec => f
+    }
+
+  /** Every leaf of an executed plan, descending through AQE wrappers and
+    * materialized query stages. */
+  private def planLeaves(p: org.apache.spark.sql.execution.SparkPlan)
+      : Seq[org.apache.spark.sql.execution.SparkPlan] = p match {
     case a: org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanExec =>
-      allFileScans(a.executedPlan)
+      planLeaves(a.executedPlan)
     case q: org.apache.spark.sql.execution.adaptive.QueryStageExec =>
-      allFileScans(q.plan)
-    case f: org.apache.spark.sql.execution.FileSourceScanExec => Seq(f)
-    case other => other.children.flatMap(allFileScans)
+      planLeaves(q.plan)
+    case l if l.children.isEmpty => Seq(l)
+    case other => other.children.flatMap(planLeaves)
   }
 
   test("round-12: persisted vector-index serving — a query reads ONLY its probed buckets' files") {
@@ -1193,20 +1201,29 @@ class PlanSpec extends SparkTestBase {
         sess
       }
       val sess = build()
-      val df = sess.run(
-        "CALL db.index.fulltext.queryNodes('fe', 'spark AND table') " +
-          "YIELD node, score RETURN node.name AS nm, score")
-        .asInstanceOf[graft.cypher.CypherRows].df
-      val rows = df.collect()
+      // the postings scan runs in the probe's per-document pin, inside
+      // the statement's compile — so read the scans of every plan the
+      // statement executed, not only the final one
+      val (rows, plans, _) = tracePlans {
+        sess.run(
+          "CALL db.index.fulltext.queryNodes('fe', 'spark AND table') " +
+            "YIELD node, score RETURN node.name AS nm, score")
+          .asInstanceOf[graft.cypher.CypherRows].df.collect()
+      }
       assert(rows.length === 60)
-      val scans = allFileScans(df.queryExecution.executedPlan)
+      val scans = plans.flatMap(allFileScans)
       assert(scans.nonEmpty,
         "postings above the lowered threshold must serve from parquet")
-      // each of the two query terms probes its own bucket directory —
-      // never the whole postings layout
+      // the two query terms are read by one scan pruned to their own
+      // bucket directories — one file per probed bucket, never the whole
+      // postings layout
+      val buckets = Seq("spark", "table")
+        .map(graft.cypher.CypherSession.termBucket).distinct.size
+      assert(scans.size === 1, scans.mkString("\n"))
       scans.foreach { f =>
-        assert(f.metrics("numFiles").value <= 1,
-          s"a term probe read ${f.metrics("numFiles").value} files")
+        assert(f.metrics("numFiles").value <= buckets,
+          s"a ${buckets}-bucket term probe read " +
+            s"${f.metrics("numFiles").value} files")
       }
       // equivalence with the in-memory path
       spark.conf.set(graft.cypher.CypherSession.IndexMemThresholdKey,
@@ -1249,6 +1266,86 @@ class PlanSpec extends SparkTestBase {
           "ORDER BY score DESC, nm")
         .asInstanceOf[graft.cypher.CypherRows].df.collect()
       assert(patchedScores.toSeq === freshScores.toSeq)
+    } finally spark.conf.set(
+      graft.cypher.CypherSession.IndexMemThresholdKey,
+      graft.cypher.CypherSession.IndexMemThresholdDefault.toString)
+  }
+
+  /** Run `body` and return its value, the executed plan of every query it
+    * ran — the eager pins a statement runs while it compiles as well as
+    * its final action — and the number of Spark jobs it started. */
+  private def tracePlans[T](body: => T)
+      : (T, Seq[org.apache.spark.sql.execution.SparkPlan], Int) = {
+    import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
+    import org.apache.spark.sql.execution.{QueryExecution, SparkPlan}
+    val sc = spark.sparkContext
+    val plans = new java.util.concurrent.ConcurrentLinkedQueue[SparkPlan]
+    val jobs = new java.util.concurrent.atomic.AtomicInteger
+    val qel = new org.apache.spark.sql.util.QueryExecutionListener {
+      def onSuccess(f: String, qe: QueryExecution, ns: Long): Unit =
+        plans.add(qe.executedPlan)
+      def onFailure(f: String, qe: QueryExecution, e: Exception): Unit = ()
+    }
+    val sl = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit =
+        jobs.incrementAndGet()
+    }
+    org.apache.spark.ListenerBusDrain(sc)
+    spark.listenerManager.register(qel)
+    sc.addSparkListener(sl)
+    val out =
+      try { val v = body; org.apache.spark.ListenerBusDrain(sc); v }
+      finally {
+        spark.listenerManager.unregister(qel)
+        sc.removeSparkListener(sl)
+      }
+    (out, plans.toArray(Array.empty[SparkPlan]).toSeq, jobs.get)
+  }
+
+  test("fulltext probe budget — one postings read, docs never " +
+      "broadcast, at most 4 jobs, in both index layouts") {
+    val queries = Seq("spark", "spark AND table", "\"doc number\"",
+      "spark AND NOT row7")
+    def probe(threshold: Long): Seq[Seq[(String, Double)]] = {
+      spark.conf.set(graft.cypher.CypherSession.IndexMemThresholdKey,
+        threshold.toString)
+      val sess = new graft.cypher.CypherSession(
+        graft.graph.PropertyGraph.empty(spark))
+      sess.run("UNWIND $data AS row MERGE (d:Doc {name: row.name}) " +
+        "SET d.title = row.title", Map("data" -> (0 until 60).map(i =>
+          Map("name" -> s"n$i",
+            "title" -> s"spark doc number $i fast table row$i"))))
+      sess.run("CREATE FULLTEXT INDEX fb FOR (d:Doc) ON EACH [d.title]")
+      queries.map { q =>
+        val (rows, plans, jobs) = tracePlans {
+          sess.run(
+            s"CALL db.index.fulltext.queryNodes('fb', '$q') " +
+              "YIELD node, score RETURN node.name AS nm, score")
+            .asInstanceOf[graft.cypher.CypherRows].df.collect()
+            .map(r => (r.getString(0), r.getDouble(1))).toSeq
+        }
+        val where = s"'$q' at threshold $threshold"
+        assert(rows.nonEmpty, where)
+        def names(l: org.apache.spark.sql.execution.SparkPlan) =
+          l.output.map(_.name).toSet
+        // the postings frame is the one leaf carrying `term`, the docs
+        // frame the one carrying `dl`
+        assert(plans.flatMap(planLeaves).count(l => names(l)("term")) === 1,
+          s"$where: the postings must be read by exactly one scan\n" +
+            plans.mkString("\n"))
+        val bts = plans.flatMap(broadcastSubtrees)
+        assert(!bts.exists(planLeaves(_).exists(l => names(l)("dl"))),
+          s"$where: the docs frame must stream, never broadcast\n" +
+            bts.mkString("\n"))
+        assert(jobs <= 4, s"$where ran $jobs Spark jobs")
+        rows
+      }
+    }
+    try {
+      val persisted = probe(64)
+      val inMemory =
+        probe(graft.cypher.CypherSession.IndexMemThresholdDefault)
+      assert(persisted === inMemory)
     } finally spark.conf.set(
       graft.cypher.CypherSession.IndexMemThresholdKey,
       graft.cypher.CypherSession.IndexMemThresholdDefault.toString)
