@@ -339,16 +339,14 @@ object Dedup {
   }
 
   /** Cluster-level dedup: near-dup PAIRS promoted to transitive CLUSTERS
-    * (min-label propagation over the pair graph) with one survivor per
+    * (connected components of the pair graph) with one survivor per
     * cluster — the minimum id, so survivorship is deterministic and
     * engine-independent. This is the step an actual training-data pipeline
     * runs after pair generation: A≈B and B≈C must drop two of {A,B,C}, not
     * one. Returns the input rows plus (component, is_survivor). */
   def clusterSurvivors(df: DataFrame, idCol: String, pairs: DataFrame): DataFrame = {
-    // Round 16 (guide §2.4 — do fewer passes): alternatingComponents
-    // replaces minLabelPropagation here. Same (id, component = min
-    // reachable id) contract (property-spec'd equal on random graphs),
-    // but O(log n) contraction rounds instead of O(diameter) propagation
+    // Round 16 (guide §2.4 — do fewer passes): alternatingComponents runs
+    // O(log n) contraction rounds instead of O(diameter) propagation
     // rounds — the sf0.1 near-dup graph took 18 propagation supersteps
     // (~150 ms each, measured round 16) where the alternating form
     // converges in ~6; at 100 TB a mutation chain of depth 10^4 would

@@ -5,80 +5,30 @@ import org.apache.spark.sql.functions._
 import graft.graph.PropertyGraph
 import IterCheckpoint.IterCheckpointOps
 
-/** Whole-graph analytics via GraphX/Pregel (BASELINE.json "spark_approach").
+/** Whole-graph analytics over the property graph's node/edge DataFrames.
   * The reference delegates all traversal to Neo4j; these are the iterative
   * algorithms a Neo4j user would reach for (PageRank, connected components,
-  * shortest paths), run on the same node/edge Datasets through the GraphX
-  * bridge and returned as DataFrames joined back to graph keys.
+  * shortest paths, centralities, communities), returned as DataFrames
+  * joined back to graph keys.
   *
-  * Scale posture: Pregel supersteps shuffle messages by vertex id — the
-  * standard distributed formulation; no driver-side iteration state beyond
-  * loop control.
+  * Scale posture: every superstep is an ordinary dataflow plan — a join of
+  * the round's state onto the edge list and a map-side-combining aggregate
+  * keyed by vertex id, with `iterCheckpoint` truncating lineage; no
+  * driver-side iteration state beyond loop control.
   */
 object GraphAlgorithms {
 
-  /** Partition count for the GraphX bridge, derived from the optimizer's
-    * size estimates of the node+edge *leaf* relations (plan statistics —
-    * no job runs): one partition per `targetBytes` of estimated input,
-    * floored at `floor` and capped at 64k. Leaf stats (parquet file sizes,
-    * local relation sizes) are the reliable part of non-CBO statistics —
-    * whole-plan sizeInBytes inflates multiplicatively through joins, which
-    * a MERGE-built graph's lineage is full of. Pregel shuffles every
-    * superstep, so the count must track graph size: a fixture-sized graph
-    * lands on the floor, a 100 TB store derives thousands — the hardcoded
-    * 8 this replaces was right for sf0.1 and a bottleneck at any real
-    * scale. */
-  def sizedPartitions(g: PropertyGraph, targetBytes: Long = 64L << 20,
-      floor: Int = 8): Int = {
-    // LogicalRDD leaves (localCheckpoint output) carry NO real estimate:
-    // they report either defaultSizeInBytes ≈ Long.MaxValue or an
-    // attribute-width × row-count guess that wildly inflates map/string
-    // columns — round 10 measured a 5k-node checkpointed projection
-    // "estimated" at 74 GB, which sized GraphX to 1192 partitions and
-    // turned a 1.4 s pageRank into 146 s of pure task scheduling. Exclude
-    // them from the byte signal entirely (file scans, ranges and local
-    // relations keep their believable stats); a checkpoint-only graph
-    // falls through to the RDD-partition fallback below.
-    val unknown = BigInt(Long.MaxValue) / 4
-    def leafBytes(df: DataFrame): Seq[BigInt] =
-      df.queryExecution.optimizedPlan.collectLeaves()
-        .filterNot(_.getClass.getSimpleName.contains("LogicalRDD"))
-        .map(_.stats.sizeInBytes).filter(_ < unknown)
-    val known = leafBytes(g.nodes) ++ leafBytes(g.edges)
-    if (known.nonEmpty)
-      (known.sum / targetBytes).min(BigInt(1 << 16)).toInt.max(floor)
-    else // checkpointed lineage: the RDD's own partitioning tracked the
-         // shuffles that built it — use it as the size signal
-      math.max(floor, g.edges.rdd.getNumPartitions)
-  }
-
-  /** Resolve a caller partition request: negative = derive from size. */
-  private def resolveParts(g: PropertyGraph, requested: Int): Int =
-    if (requested < 0) sizedPartitions(g) else requested
-
-  /** Static PageRank, `numIter` supersteps (deterministic iteration count;
-    * ranks unnormalized, reset probability 0.15 as published).
-    * `numPartitions`: -1 = derive from graph size ([[sizedPartitions]]),
-    * 0 = keep natural partitioning, >0 = explicit. */
-  def pageRank(g: PropertyGraph, numIter: Int, resetProb: Double = 0.15,
-      numPartitions: Int = -1): DataFrame = {
-    val spark = g.nodes.sparkSession
-    import spark.implicits._
-    val ranks = g.toGraphX(resolveParts(g, numPartitions))
-      .staticPageRank(numIter, resetProb)
-      .vertices.map { case (id, rank) => (id, rank) }
-    ranks.toDF("id", "rank")
-      .join(g.nodes.select(col("id"), col("label"), col("key")), Seq("id"))
-  }
-
-  /** DataFrame-native static PageRank with GraphX `staticPageRank`
-    * semantics (rank init 1.0, no dangling redistribution, `numIter` fixed
-    * supersteps): each iteration is one edge⋈rank join + a map-side-combining
-    * sum — contribution flow is hash-partitioned by vertex id, the same
-    * shuffle structure Pregel uses but through Catalyst/AQE (skew-splittable,
-    * codegen'd, spill-safe). `localCheckpoint` truncates lineage per
-    * superstep. Equality with the GraphX implementation is spec-asserted. */
-  def pageRankDF(g: PropertyGraph, numIter: Int, resetProb: Double = 0.15): DataFrame = {
+  /** Static PageRank with GraphX `staticPageRank` semantics (rank init 1.0,
+    * reset probability 0.15 as published, no dangling redistribution,
+    * `numIter` fixed supersteps, final ranks rescaled to sum to the vertex
+    * count). Each superstep is one edge⋈rank join and ONE aggregation: the
+    * contributions union with a zero row per vertex (so a vertex without
+    * in-edges keeps the reset mass) and a map-side-combining sum keyed by
+    * vertex id yields every new rank — the Bellman-Ford round shape, no
+    * join back onto the vertex set. `iterCheckpoint` truncates lineage
+    * every few supersteps. Equality with Spark's `staticPageRank` is
+    * spec-asserted. */
+  def pageRank(g: PropertyGraph, numIter: Int, resetProb: Double = 0.15): DataFrame = {
     val edges = g.edges.select(col("srcId").as("src"), col("dstId").as("dst"))
       .iterCheckpoint()
     val outDeg = edges.groupBy("src").agg(count(lit(1)).as("deg"))
@@ -86,39 +36,34 @@ object GraphAlgorithms {
     val wEdges = edges.join(outDeg, Seq("src"))
       .select(col("src"), col("dst"), (lit(1.0) / col("deg")).as("w"))
       .iterCheckpoint()
-    val ids = g.nodes.select(col("id")).iterCheckpoint()
-    var ranks = ids.select(col("id"), lit(1.0).as("rank"))
+    val zeros = g.nodes.select(col("id"), lit(0.0).as("msg")).iterCheckpoint()
+    var ranks = zeros.select(col("id"), lit(1.0).as("rank"))
     var i = 0
     while (i < numIter) {
-      val contribs = wEdges.join(ranks.withColumnRenamed("id", "src"), Seq("src"))
-        .groupBy(col("dst").as("id"))
-        .agg(sum(col("rank") * col("w")).as("msg"))
-      ranks = ids.join(contribs, Seq("id"), "left")
-        .select(col("id"),
-          (lit(resetProb) + lit(1 - resetProb) * coalesce(col("msg"), lit(0.0))).as("rank"))
+      ranks = wEdges.join(ranks.withColumnRenamed("id", "src"), Seq("src"))
+        .select(col("dst").as("id"), (col("rank") * col("w")).as("msg"))
+        .unionByName(zeros)
+        .groupBy("id").agg(sum("msg").as("msg"))
+        .select(col("id"), (lit(resetProb) + lit(1 - resetProb) * col("msg")).as("rank"))
       // truncate lineage every few supersteps — an eager checkpoint per
       // iteration serializes the pipeline into numIter blocking jobs
       if (i % 4 == 3 && i != numIter - 1) ranks = ranks.iterCheckpoint()
       i += 1
     }
-    // GraphX staticPageRank rescales final ranks to sum to the vertex count;
-    // match it so both implementations are interchangeable.
+    // staticPageRank's contract: final ranks sum to the vertex count
     val stats = ranks.agg(sum("rank").as("__s"), count(lit(1)).as("__n"))
     ranks.crossJoin(broadcast(stats))
       .select(col("id"), (col("rank") * col("__n") / col("__s")).as("rank"))
       .join(g.nodes.select(col("id"), col("label"), col("key")), Seq("id"))
   }
 
-  /** Connected components (Pregel min-id propagation): (id, label, key,
-    * component) where component = lowest vertex id in the component. */
-  def connectedComponents(g: PropertyGraph, numPartitions: Int = -1): DataFrame = {
-    val spark = g.nodes.sparkSession
-    import spark.implicits._
-    val cc = g.toGraphX(resolveParts(g, numPartitions)).connectedComponents()
-      .vertices.map { case (id, comp) => (id, comp) }
-    cc.toDF("id", "component")
+  /** Connected components of the undirected view of the edge list:
+    * (id, label, key, component) where component = lowest vertex id in the
+    * component ([[alternatingComponents]]). */
+  def connectedComponents(g: PropertyGraph): DataFrame =
+    alternatingComponents(g.nodes.select(col("id")),
+        g.edges.select(col("srcId"), col("dstId")))
       .join(g.nodes.select(col("id"), col("label"), col("key")), Seq("id"))
-  }
 
   /** Directed strongly connected components — the DIRECTED twin of
     * [[connectedComponents]]. Component label = the lowest member vertex
@@ -128,12 +73,7 @@ object GraphAlgorithms {
     * helper's budget check) rather than returning a silently partial
     * labeling — raise `numIter` for adversarially deep graphs
     * (ADVICE r15: documented here where callers look, not only on the
-    * helper). Round 15 (VERDICT r14 #6): delegates
-    * to [[sccColoringDF]] — the warmed sf1 sweep showed GraphX's
-    * `stronglyConnectedComponents` paying a 13× slope that is NOT JIT
-    * (47 s warmed at 500k vertices where the DataFrame WCC runs 1.8 s):
-    * each GraphX outer round rebuilds subgraphs + a reversed graph and
-    * runs several inner Pregels with their own materializations. */
+    * helper). Runs [[sccColoringDF]]. */
   def stronglyConnectedComponents(g: PropertyGraph,
       numIter: Int = 30): DataFrame = {
     val comps = sccColoringDF(
@@ -155,7 +95,7 @@ object GraphAlgorithms {
     *   3. BACKWARD within color — from each root r (color(r) = r), the
     *      vertices that reach r through same-colored vertices are
     *      exactly FW(r) ∩ BW(r) = SCC(r); peel them, labeled min member
-    *      id (GraphX's labeling), and repeat on the remainder.
+    *      id, and repeat on the remainder.
     * Every superstep is one join + map-side-combining aggregate over the
     * REMAINING edges with iterCheckpoint truncating lineage — the x01
     * cost model. Superstep count is bounded by the longest remaining
@@ -300,67 +240,24 @@ object GraphAlgorithms {
       s"sccColoringDF: $left vertices unresolved after $maxRounds rounds — " +
         "raise maxRounds (each round peels every current color root's SCC)")
     // empty input (ADVICE r15): done holds only empty lazy anti-joins (or
-    // nothing at all) — reduce would throw on Nil, so return the typed
-    // empty frame the GraphX path used to produce.
+    // nothing at all) — reduce would throw on Nil, so return a typed empty
+    // frame.
     if (done.isEmpty)
       ids.toDF("id").limit(0).select(col("id"), col("id").as("component"))
     else done.reduce(_ unionByName _)
   }
 
-  /** Generic min-label propagation over an undirected pair list: returns
-    * (id, component) where component = lowest id reachable. Each iteration
-    * is one edge⋈label join + a map-side-combining `min` aggregate, with
-    * `localCheckpoint` truncating lineage so plans stay O(1) across
-    * iterations; iteration count is bounded by graph diameter. No
-    * driver-side state beyond the loop counter and a per-iteration
-    * `changed` count. */
-  def minLabelPropagation(ids: DataFrame, pairs: DataFrame,
-      maxIter: Int = 50): DataFrame = {
-    val e = pairs.toDF("a", "b")
-    val sym = e.union(e.select(col("b").as("a"), col("a").as("b")))
-      .iterCheckpoint()
-    // Propagate over the edge-touched subgraph ONLY: an id in no pair can
-    // never change label, so iterating over it is pure per-round waste —
-    // in a near-dup corpus the overwhelming majority of ids are isolated
-    // (at 100 TB, billions of rows re-joined per round for nothing).
-    // Isolated ids rejoin as their own singleton component at the end.
-    var labels = sym.select(col("a").as("id")).distinct()
-      .select(col("id"), col("id").as("comp"))
-      .iterCheckpoint()
-    var changed = 1L
-    var i = 0
-    while (changed > 0 && i < maxIter) {
-      val msgs = sym.join(labels.withColumnRenamed("id", "a"), Seq("a"))
-        .groupBy(col("b").as("id")).agg(min("comp").as("nc"))
-      // changed-count observed during the checkpoint job: one action per
-      // propagation round, not two (round 17, VERDICT r16 #3)
-      val (next, m) = labels.join(msgs, Seq("id"), "left")
-        .select(col("id"), least(col("comp"), coalesce(col("nc"), col("comp"))).as("comp"),
-          (coalesce(col("nc"), col("comp")) < col("comp")).as("ch"))
-        .iterCheckpointObserve(
-          sum(when(col("ch"), 1L).otherwise(0L)).as("changed"))
-      changed = m.get("changed").collect { case l: Long => l }.getOrElse(0L)
-      labels = next.select("id", "comp")
-      i += 1
-    }
-    ids.toDF("id")
-      .join(labels, Seq("id"), "left")
-      .select(col("id"), coalesce(col("comp"), col("id")).as("component"))
-  }
-
   /** Connected components by ALTERNATING large-star / small-star rounds
     * (Kiveris et al., "Connected Components in MapReduce and Beyond",
-    * SoCC'14) — the third CC formulation in this file, and the one that
-    * survives HIGH-DIAMETER graphs at 100 TB. [[minLabelPropagation]]
-    * needs `diameter` rounds (a 10^6-hop chain → 10^6 shuffles); Pregel
-    * [[connectedComponents]] likewise propagates one hop per superstep.
-    * The alternating algorithm contracts the graph toward min-id stars in
-    * O(log n) rounds regardless of diameter, and each round is nothing but
-    * groupBy-min + join-back — no collect_list of neighborhoods (a
-    * high-degree node's min is computed map-side-combining; the fan-out
-    * back to edges is linear in edge count), no per-vertex state carried
-    * between rounds, `localCheckpoint` truncating lineage exactly like the
-    * propagation loop.
+    * SoCC'14) — the one CC formulation in this file, and one that survives
+    * HIGH-DIAMETER graphs at 100 TB. Min-label propagation alone needs
+    * `diameter` rounds (a 10^6-hop chain → 10^6 shuffles); the alternating
+    * algorithm contracts the graph toward min-id stars in O(log n) rounds
+    * regardless of diameter, and each round is nothing but groupBy-min +
+    * join-back — no collect_list of neighborhoods (a high-degree node's min
+    * is computed map-side-combining; the fan-out back to edges is linear in
+    * edge count), no per-vertex state carried between rounds,
+    * `localCheckpoint` truncating lineage every round.
     *
     * large-star: for each u, every neighbor v > u re-attaches to
     * m(u) = min(Γ(u) ∪ {u}). small-star: orient edges toward the smaller
@@ -369,8 +266,8 @@ object GraphAlgorithms {
     * order-independent fingerprint (count + xor of xxhash64(u,v)) so the
     * driver holds two longs, never edges. Returns (id, component) with
     * component = min reachable id; ids absent from `pairs` are their own
-    * singleton component — same contract as [[minLabelPropagation]]
-    * (property-spec'd equal on random graphs).
+    * singleton component. A round budget overrun fails loudly, never a
+    * partial labeling.
     */
   def alternatingComponents(ids: DataFrame, pairs: DataFrame,
       maxIter: Int = 40, propPrefixRounds: Int = 4): DataFrame = {
@@ -533,54 +430,14 @@ object GraphAlgorithms {
     else alive
   }
 
-  /** Connected components as pure DataFrame min-label propagation (see
-    * [[minLabelPropagation]]) — the right trade at 100 TB for the
-    * short-diameter graphs ingest produces (publisher stars, social
-    * graphs); for high-diameter graphs use the Pregel
-    * [[connectedComponents]] instead. */
-  def connectedComponentsDF(g: PropertyGraph, maxIter: Int = 50): DataFrame = {
-    val comps = minLabelPropagation(
-      g.nodes.select("id"),
-      g.edges.select(col("srcId"), col("dstId")), maxIter)
-    comps.join(g.nodes.select(col("id"), col("label"), col("key")), Seq("id"))
-  }
-
   /** Per-component roll-up with engine-independent identity: each component
     * reported as (min_key, size) — min over member keys, not internal ids,
-    * so results are comparable across engines. Runs on the DataFrame CC
-    * (diameter-bound label propagation; see [[connectedComponentsDF]]). */
+    * so results are comparable across engines. */
   def componentSummary(g: PropertyGraph): DataFrame =
-    connectedComponentsDF(g)
+    connectedComponents(g)
       .groupBy("component")
       .agg(min(col("key")).as("min_key"), count(lit(1)).as("size"))
       .select("min_key", "size")
-
-  /** Shortest-path hop counts from every vertex to each landmark
-    * (GraphX lib.ShortestPaths; edges traversed as undirected is NOT
-    * assumed — GraphX follows out-edges toward landmarks).
-    *
-    * Landmarks are processed in bounded batches of `landmarkBatch`: the
-    * algorithm carries a per-vertex map of size |landmarks| through every
-    * superstep, so an unbatched run over a large landmark set blows up both
-    * superstep state and the driver-side landmark list. Batching caps the
-    * per-vertex map at `landmarkBatch` entries and the per-batch runs union
-    * into one result. */
-  def shortestPathLengths(g: PropertyGraph, landmarks: Seq[Long],
-      landmarkBatch: Int = 128): DataFrame =
-    shortestPathBatches(g, landmarks.grouped(landmarkBatch))
-
-  /** [[shortestPathLengths]] with the landmark ids taken as a DataFrame
-    * (single `id` column): ids stream to the driver one bounded batch at a
-    * time via `toLocalIterator` — the full landmark set is never collected
-    * at once, so landmark count can scale with the graph. */
-  def shortestPathLengthsFrom(g: PropertyGraph, landmarks: DataFrame,
-      landmarkBatch: Int = 128): DataFrame = {
-    import scala.jdk.CollectionConverters._
-    val ids = landmarks.select(col("id").cast("long")).sort("id")
-      // bounded: streams landmark ids one at a time into fixed batches
-      .toLocalIterator().asScala.map(_.getLong(0))
-    shortestPathBatches(g, ids.grouped(landmarkBatch))
-  }
 
   /** Weighted single-source shortest paths, bounded at `rounds` edges —
     * frontier-based Bellman-Ford over a `(src, dst, w)` edge DataFrame.
@@ -639,7 +496,7 @@ object GraphAlgorithms {
     * this as `gds.allShortestPaths.dijkstra.stream`. One O(1) emptiness
     * probe per round adjudicates the stop (round count is bounded by the
     * weighted-path hop diameter, the same driver-side loop class as
-    * [[minLabelPropagation]]); the hard `maxRounds` cap fails LOUDLY
+    * [[hopDistances]]); the hard `maxRounds` cap fails LOUDLY
     * instead of returning silently-truncated distances. */
   def weightedSSSPConverged(edges: DataFrame, source: Long,
       maxRounds: Int = 100): DataFrame = {
@@ -702,17 +559,6 @@ object GraphAlgorithms {
           .otherwise(lit(0.0)).as("coefficient"))
   }
 
-  /** Pairwise Jaccard similarity of out-neighbor sets (the GDS
-    * `nodeSimilarity` shape): score(a,b) = |N(a)∩N(b)| / |N(a)∪N(b)|, one
-    * row per unordered pair with at least one shared neighbor.
-    *
-    * Distributed formulation — never materializes neighbor sets as rows:
-    * intersections come from the self-join on the SHARED neighbor
-    * (shuffle keyed on dst, so work is Σ co-degree², the same bound as
-    * any co-occurrence enumeration), degrees are one hash aggregate
-    * broadcast back onto the pair stream. `minScore` prunes the long tail
-    * before the result shuffle. The single integer division is exact IEEE
-    * on any engine — safe for hash-matched oracles. */
   /** Multi-source Brandes betweenness centrality (unweighted, undirected),
     * accumulated over an explicit SOURCE SET — the sampled form that scales:
     * exact all-sources betweenness is O(V·E), so production runs pick a
@@ -725,7 +571,7 @@ object GraphAlgorithms {
     * (level joins + map-side-combined sums), backward accumulation folds
     * dependencies δ(v) = Σ_w σ_v/σ_w·(1+δ(w)) down the level stack. Level
     * count = graph diameter bounds the rounds (the doc graph's is 2);
-    * localCheckpoint cuts lineage per level like [[minLabelPropagation]].
+    * localCheckpoint cuts lineage per level like [[hopDistances]].
     */
   def betweennessFromSources(edges: DataFrame, sources: DataFrame,
       maxDepth: Int = 10, requireExhausted: Boolean = false): DataFrame = {
@@ -803,6 +649,17 @@ object GraphAlgorithms {
       .agg(round(sum("delta"), 6).as("betweenness"))
   }
 
+  /** Pairwise Jaccard similarity of out-neighbor sets (the GDS
+    * `nodeSimilarity` shape): score(a,b) = |N(a)∩N(b)| / |N(a)∪N(b)|, one
+    * row per unordered pair with at least one shared neighbor.
+    *
+    * Distributed formulation — never materializes neighbor sets as rows:
+    * intersections come from the self-join on the SHARED neighbor
+    * (shuffle keyed on dst, so work is Σ co-degree², the same bound as
+    * any co-occurrence enumeration), degrees are one hash aggregate
+    * broadcast back onto the pair stream. `minScore` prunes the long tail
+    * before the result shuffle. The single integer division is exact IEEE
+    * on any engine — safe for hash-matched oracles. */
   def nodeSimilarity(edges: DataFrame, minScore: Double = 0.0): DataFrame = {
     val e = edges.select(col("src"), col("dst")).dropDuplicates()
     val deg = e.groupBy("src").agg(count(lit(1)).as("deg"))
@@ -954,7 +811,7 @@ object GraphAlgorithms {
     * high-degree hub costs a combiner, not a memory spike).
     * `localCheckpoint` truncates lineage per round. Nodes with no edges
     * are excluded (they stay their own singleton community; callers
-    * re-attach them like [[minLabelPropagation]] does). Returns
+    * re-attach them like [[alternatingComponents]] does). Returns
     * (id, community). */
   def labelPropagation(pairs: DataFrame, rounds: Int): DataFrame = {
     // canonicalize BEFORE distinct: (a,b) and (b,a) are the same
@@ -1463,21 +1320,21 @@ object GraphAlgorithms {
       .select(col("id"), coalesce(col("community"), col("id")).as("community"))
   }
 
-  /** Hop distances between ALL pairs of nodes (undirected view of the edge
-    * list), as (s, v, dist) rows with dist ≥ 1 — the distance table
-    * closeness-family centralities aggregate. Multi-source BFS: every node
-    * is a source and each round advances the whole (source, vertex)
-    * frontier at once — one job per LEVEL, never a per-source loop. State
-    * is O(reachable pairs): this is the all-pairs primitive, inherently
-    * quadratic in component size — the GDS in-memory-projection contract;
-    * the projection's node bound IS the scale knob. Runs to the BFS
-    * fixpoint; a graph deeper than `maxDepth` fails loudly. */
-  def hopDistancesAllPairs(nodes: DataFrame, edges: DataFrame,
+  /** Hop distances from every source along the edges AS GIVEN (src → dst;
+    * pass both orientations for the undirected view), as (s, v, dist) rows
+    * with dist ≥ 1 — a source itself and the vertices it cannot reach are
+    * absent. Multi-source BFS: each round advances the whole (source,
+    * vertex) frontier at once — one job per LEVEL, never a per-source
+    * loop. State is O(reachable pairs): with every node a source this is
+    * the all-pairs distance table closeness-family centralities aggregate,
+    * inherently quadratic in component size — the GDS in-memory-projection
+    * contract; the projection's node bound IS the scale knob. Runs to the
+    * BFS fixpoint; a graph deeper than `maxDepth` fails loudly. */
+  def hopDistances(sources: DataFrame, edges: DataFrame,
       maxDepth: Int = 100): DataFrame = {
     val e = edges.toDF("src", "dst")
-    val sym = e.union(e.select(col("dst").as("src"), col("src").as("dst")))
       .filter(col("src") =!= col("dst")).distinct().iterCheckpoint()
-    var frontier = nodes.toDF("s").select(col("s"), col("s").as("v"))
+    var frontier = sources.toDF("s").select(col("s"), col("s").as("v"))
       .iterCheckpoint()
     var visited = frontier
     var acc: Seq[DataFrame] = Nil
@@ -1491,7 +1348,7 @@ object GraphAlgorithms {
       // ever-growing visited set (quadratic total re-materialization in
       // the pair count). visited now accumulates as a lazy union of the
       // pinned levels, re-pinned every 8 levels to bound plan depth.
-      val (next, nm) = frontier.join(sym, col("v") === col("src"))
+      val (next, nm) = frontier.join(e, col("v") === col("src"))
         .select(col("s"), col("dst").as("v")).distinct()
         .join(visited, Seq("s", "v"), "left_anti")
         .iterCheckpointObserve(count(lit(1)).as("n"))
@@ -1510,29 +1367,10 @@ object GraphAlgorithms {
     }
     if (!exhausted)
       throw new IllegalStateException(
-        s"hopDistancesAllPairs: BFS still expanding at depth $maxDepth — " +
+        s"hopDistances: BFS still expanding at depth $maxDepth — " +
           "graph deeper than the budget; raise maxDepth")
     if (acc.isEmpty)
       frontier.select(col("s"), col("v"), lit(0L).as("dist")).limit(0)
     else acc.reduce(_ unionByName _)
-  }
-
-  private def shortestPathBatches(g: PropertyGraph,
-      batches: Iterator[Seq[Long]]): DataFrame = {
-    val spark = g.nodes.sparkSession
-    import spark.implicits._
-    val gx = g.toGraphX(sizedPartitions(g))
-    gx.cache() // each batch re-traverses the same graph
-    val parts = batches.map { batch =>
-      org.apache.spark.graphx.lib.ShortestPaths.run(gx, batch)
-        .vertices.flatMap { case (id, spMap) =>
-          spMap.map { case (landmark, dist) => (id, landmark, dist) }
-        }
-        .toDF("id", "landmark", "hops")
-    }.toSeq
-    val all =
-      if (parts.isEmpty) Seq.empty[(Long, Long, Int)].toDF("id", "landmark", "hops")
-      else parts.reduce(_ unionByName _)
-    all.join(g.nodes.select(col("id"), col("key")), Seq("id"))
   }
 }

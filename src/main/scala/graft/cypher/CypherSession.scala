@@ -4627,8 +4627,10 @@ final class CypherSession(
           // stays defined on disconnected graphs. 6-dp pinned (x10's float
           // posture: Σ 1/d association order cannot flip the hash).
           val nNodes = pgraph.nodes.count()
-          val dists = graft.analytics.GraphAlgorithms.hopDistancesAllPairs(
-            pgraph.nodes.select(col("key")), edgeKeys)
+          val dists = graft.analytics.GraphAlgorithms.hopDistances(
+            pgraph.nodes.select(col("key")),
+            edgeKeys.unionByName(edgeKeys.select(col("dst").as("src"),
+              col("src").as("dst"))))
           val agg = dists.groupBy(col("s").as("key"))
             .agg(count(lit(1)).as("__r"), sum("dist").as("__sd"),
               sum(lit(1.0) / col("dist")).as("__h"))

@@ -345,32 +345,6 @@ final case class PropertyGraph(nodes: DataFrame, edges: DataFrame,
       .orderBy(col("b_key"), col("a_key"), col("c_key"))
       .limit(k)
   }
-
-  /** GraphX bridge for whole-graph analytics (Pregel PageRank / CC / SSSP).
-    *
-    * `numPartitions` right-sizes the RDDs before iterating: Pregel shuffles
-    * every superstep, so partition count should track graph size, not the
-    * SQL-side shuffle setting (32 near-empty partitions × 20 supersteps is
-    * pure overhead on small graphs; at cluster scale pass 0 to keep the
-    * natural partitioning). */
-  def toGraphX(numPartitions: Int = 0): org.apache.spark.graphx.Graph[(String, String), String] = {
-    import org.apache.spark.graphx.{Graph => XGraph, Edge => XEdge}
-    var vs = nodes.select("id", "label", "key").rdd
-      .map(r => (r.getLong(0), (r.getString(1), r.getString(2))))
-    var es = edges.select("srcId", "dstId", "relType").rdd
-      .map(r => XEdge(r.getLong(0), r.getLong(1), r.getString(2)))
-    if (numPartitions > 0) {
-      // coalesce can only SHRINK — after a localCheckpoint the parent RDD
-      // may have few partitions, and a size-derived target in the thousands
-      // must still take effect, so growing uses a real repartition.
-      def resize[T](rdd: org.apache.spark.rdd.RDD[T]): org.apache.spark.rdd.RDD[T] =
-        if (rdd.getNumPartitions >= numPartitions) rdd.coalesce(numPartitions)
-        else rdd.repartition(numPartitions)
-      vs = resize(vs)
-      es = resize(es)
-    }
-    XGraph(vs, es)
-  }
 }
 
 object PropertyGraph {

@@ -6771,21 +6771,15 @@ object AnalyticsCatalog {
     (s, dir) => {
       // Connected components by alternating large-star/small-star rounds
       // (GraphAlgorithms.alternatingComponents) — the O(log n)-round CC
-      // that is immune to graph diameter, where x01's label propagation
-      // pays one shuffle per hop. On the publisher-star fixture both
-      // converge to identical components (same oracle as x01); the spec
-      // proves equality on high-diameter chains/rings where the round
-      // counts diverge (log n vs n). Per round: two groupBy-min +
-      // join-back stages over the edge list only — no per-vertex state,
-      // no neighborhood collect_list, driver holds a 2-long fingerprint.
+      // that is immune to graph diameter, where min-label propagation
+      // alone pays one shuffle per hop; the spec proves it equal to
+      // propagation run to its fixpoint on high-diameter chains/rings.
+      // Per round: two groupBy-min + join-back stages over the edge list
+      // only — no per-vertex state, no neighborhood collect_list, driver
+      // holds a 2-long fingerprint. Same oracle as x01, which runs the
+      // same function.
       val g = docGraph(s, dir)
-      val comps = GraphAlgorithms.alternatingComponents(
-        g.nodes.select("id"), g.edges.select(col("srcId"), col("dstId")))
-      comps.join(g.nodes.select(col("id"), col("key")), Seq("id"))
-        .groupBy("component")
-        .agg(min(col("key")).as("min_key"), count(lit(1)).as("size"))
-        .select("min_key", "size")
-        .orderBy("min_key")
+      GraphAlgorithms.componentSummary(g).orderBy("min_key")
     },
     Some("""SELECT least(source, min(CAST(doc_id AS VARCHAR))) AS min_key,
            |  COUNT(*) + 1 AS size
@@ -7024,7 +7018,7 @@ object AnalyticsCatalog {
   private val x20 = Entry("x20_strongly_connected",
     (s, dir) => {
       // Directed SCC (round 10) — the directed twin of x01's WCC, via
-      // GraphX stronglyConnectedComponents (coloring/peel). The graph:
+      // forward-backward coloring (GraphAlgorithms.sccColoringDF). The graph:
       // a directed ring inside each DECADE of doc_ids (one mutual-reach
       // class of 10); decades with decade % 7 == 3 carry NO edges (their
       // nodes are singleton SCCs), and sparse decade→decade+1 DAG edges
@@ -7050,10 +7044,6 @@ object AnalyticsCatalog {
       val cross = ids.filter(col("id") % 100 === 0)
         .filter(col("id") + 10 < n)
         .select(col("id").as("src"), (col("id") + 10).as("dst"))
-      // round 15 (VERDICT r14 #6): the warmed sf1 re-measure showed the
-      // 13× slope was GraphX's SCC itself, not JIT — replaced by the
-      // DataFrame forward-backward coloring (sccColoringDF), whose
-      // supersteps are the x01 join+aggregate cost model
       graft.analytics.GraphAlgorithms
         .sccColoringDF(ids, ring.unionByName(cross))
         .groupBy("component").agg(count(lit(1)).as("size"))
@@ -7068,9 +7058,10 @@ object AnalyticsCatalog {
 
   private val x01 = Entry("x01_connected_components",
     (s, dir) => {
-      // Pregel min-id propagation; reported per component as (min member
-      // key, size) so identity is engine-independent. The doc graph is a
-      // union of per-publisher stars → one component per publisher.
+      // Connected components (GraphAlgorithms.connectedComponents);
+      // reported per component as (min member key, size) so identity is
+      // engine-independent. The doc graph is a union of per-publisher
+      // stars → one component per publisher.
       val g = docGraph(s, dir)
       graft.analytics.GraphAlgorithms.componentSummary(g).orderBy("min_key")
     },
@@ -7080,13 +7071,12 @@ object AnalyticsCatalog {
 
   private val x02 = Entry("x02_pagerank",
     (s, dir) => {
-      // Iterative Pregel PageRank (GraphX: VertexRDD keeps one partitioning
-      // across supersteps, where the DataFrame formulation re-shuffles ranks
-      // every iteration — both exist, spec'd equal to 1e-9). Cross-engine
-      // oracle: on the bipartite article→publisher star graph the 10-iter
-      // static PageRank has a CLOSED FORM — articles hold the reset mass
-      // 0.15, a publisher with in-degree d holds 0.15 + 0.85·0.15·d, and
-      // GraphX rescales final ranks to sum to the vertex count. Ranks are
+      // Static PageRank, 10 supersteps, with GraphX staticPageRank's
+      // contract (spec'd equal to it to 1e-9). Cross-engine oracle: on the
+      // bipartite article→publisher star graph the 10-iter static
+      // PageRank has a CLOSED FORM — articles hold the reset mass 0.15, a
+      // publisher with in-degree d holds 0.15 + 0.85·0.15·d, and final
+      // ranks are rescaled to sum to the vertex count. Ranks are
       // quantized to 6 decimals on both sides so iterative fp noise (~1e-10)
       // cannot flip the hash; fixture values sit ≥0.25e-6 from every
       // rounding boundary.
@@ -7109,15 +7099,21 @@ object AnalyticsCatalog {
 
   private val x03 = Entry("x03_shortest_paths",
     (s, dir) => {
-      // Pregel hop counts to every Publisher landmark, in bounded landmark
-      // batches (ids stream to the driver via toLocalIterator — never an
-      // unbounded collect; per-vertex superstep state is capped at the batch
-      // size). The oracle reconstructs hops relationally from the bipartite
-      // WRITTEN_BY graph: each publisher 0 from itself, each article 1 from
-      // its publisher.
+      // Hop counts from every vertex to every Publisher landmark it
+      // reaches: one multi-source BFS from the publishers over the
+      // REVERSED edges, plus each landmark's own 0-hop row. The oracle
+      // reconstructs hops relationally from the bipartite WRITTEN_BY
+      // graph: each publisher 0 from itself, each article 1 from its
+      // publisher.
       val g = docGraph(s, dir)
       val pubs = g.matchLabel("Publisher").select(col("id"), col("key"))
-      graft.analytics.GraphAlgorithms.shortestPathLengthsFrom(g, pubs.select("id"))
+      GraphAlgorithms.hopDistances(pubs.select("id"),
+          g.edges.select(col("dstId"), col("srcId")))
+        .select(col("v").as("id"), col("s").as("landmark"),
+          col("dist").cast("int").as("hops"))
+        .unionByName(pubs.select(col("id"), col("id").as("landmark"),
+          lit(0).as("hops")))
+        .join(g.nodes.select(col("id"), col("key")), Seq("id"))
         .join(pubs.select(col("id").as("landmark"), col("key").as("landmark_key")),
           Seq("landmark"))
         .select(col("key"), col("landmark_key"), col("hops"))
@@ -7131,13 +7127,11 @@ object AnalyticsCatalog {
 
   private val x04 = Entry("x04_degree_distribution",
     (s, dir) => {
-      // in-degree histogram via GraphX degrees (how many publishers have d
-      // articles), exact oracle from the relational formulation
+      // in-degree histogram (how many publishers have d articles), exact
+      // oracle from the relational formulation
       val g = docGraph(s, dir)
-      val spark = s
-      import spark.implicits._
-      val inDeg = g.toGraphX(GraphAlgorithms.sizedPartitions(g))
-        .inDegrees.toDF("id", "deg")
+      val inDeg = g.edges.groupBy(col("dstId").as("id"))
+        .agg(count(lit(1)).cast("int").as("deg"))
       inDeg.join(g.matchLabel("Publisher").select(col("id")), Seq("id"))
         .groupBy("deg").agg(count(lit(1)).as("n_publishers"))
         .select(col("deg"), col("n_publishers"))
@@ -7149,22 +7143,17 @@ object AnalyticsCatalog {
 
   private val x05 = Entry("x05_triangle_count",
     (s, dir) => {
-      // Triangle counting (GraphX TriangleCount over the exact near-dup
-      // pair graph — dedup output feeding graph analytics). The oracle
-      // recounts triangles relationally: a 3-way self-join over the ordered
-      // pair list. GraphX reports per-vertex membership; total = sum / 3.
-      val spark = s
-      import spark.implicits._
+      // Triangle counting over the exact near-dup pair graph (dedup output
+      // feeding graph analytics). The oracle recounts triangles
+      // relationally: a 3-way self-join over the ordered pair list.
+      // triangleStats reports per-vertex membership; total = sum / 3.
       val docs = Tables(s, dir, "documents")
       val pairs = Dedup.nearDupPairsExact(docs, "doc_id", "text",
         blockCol = "source", shingleN = 1, threshold = 0.9)
-        .select(col("id_a").cast("long"), col("id_b").cast("long"))
-      val gx = org.apache.spark.graphx.Graph.fromEdgeTuples(
-        pairs.as[(Long, Long)].rdd, defaultValue = 1)
-        .partitionBy(org.apache.spark.graphx.PartitionStrategy.RandomVertexCut)
-      val perVertex = org.apache.spark.graphx.lib.TriangleCount.run(gx)
-        .vertices.map(_._2.toLong).toDF("n")
-      perVertex.agg((sum(col("n")) / 3).cast("long").as("n_triangles"))
+        .select(col("id_a").cast("long").as("src"),
+          col("id_b").cast("long").as("dst"))
+      GraphAlgorithms.triangleStats(pairs)
+        .agg((sum(col("triangles")) / 3).cast("long").as("n_triangles"))
     },
     Some("""WITH t AS (
            |  SELECT doc_id, source,
@@ -7352,7 +7341,7 @@ object AnalyticsCatalog {
       // join keys on the hub node and the closing edge probes the ORDERED
       // pair list, so work is Σ deg² (the same bound as any triangle
       // enumeration), hash-partitioned on node id at every step; no
-      // GraphX round trip, no driver state. deg<2 nodes report 0.0, as
+      // driver state. deg<2 nodes report 0.0, as
       // networkx does.
       val docs = Tables(s, dir, "documents")
       val pairs = Dedup.nearDupPairsExact(docs, "doc_id", "text",

@@ -13,7 +13,7 @@ class DedupSpec extends SparkTestBase {
     val docs = Seq((1L, "aaaaa"), (2L, "bbbbbbbbb"), (3L, "ccccccccc"),
       (4L, "dd")).toDF("doc_id", "text")
     val pairs = Seq((1L, 2L), (2L, 3L)).toDF("id_a", "id_b")
-    val comps = GraphAlgorithms.minLabelPropagation(
+    val comps = GraphAlgorithms.alternatingComponents(
       docs.select("doc_id"), pairs)
     val best = docs
       .select(col("doc_id"), length(col("text")).cast("long").as("len"))

@@ -24,13 +24,21 @@ class GraphAlgorithmsSpec extends SparkTestBase {
     PropertyGraph.empty(spark).mergeNodes(nodes).mergeEdgesByKey(edges)
   }
 
+  /** Spark's own GraphX view of a property graph — the reference the
+    * DataFrame algorithms are checked against. */
+  private def graphX(g: PropertyGraph): org.apache.spark.graphx.Graph[Int, Int] =
+    org.apache.spark.graphx.Graph(
+      g.nodes.select($"id").as[Long].rdd.map(id => (id, 1)),
+      g.edges.select($"srcId", $"dstId").as[(Long, Long)].rdd
+        .map { case (s, d) => org.apache.spark.graphx.Edge(s, d, 1) })
+
   test("reliable iteration checkpointing: identical results, guarded setup") {
     // VERDICT r8 #4: the iterative seams default to executor-local
     // checkpoints; spark.graft.iterCheckpoint=reliable routes the SAME
     // boundaries through setCheckpointDir-backed reliable checkpoints so
     // a lost executor cannot kill a mid-flight iteration. Semantics must
-    // be untouched: LPA and min-label CC rerun under reliable mode must
-    // match the default exactly.
+    // be untouched: LPA and CC rerun under reliable mode must match the
+    // default exactly.
     val rnd = new scala.util.Random(23)
     val edges = Seq.fill(80)((rnd.nextInt(40).toLong, rnd.nextInt(40).toLong))
       .filter(p => p._1 != p._2).toDF("u", "v")
@@ -38,7 +46,7 @@ class GraphAlgorithmsSpec extends SparkTestBase {
       .union(edges.select(col("v").as("id"))).distinct()
     val lpaDefault = GraphAlgorithms.labelPropagation(edges, rounds = 4)
       .as[(Long, Long)].collect().toMap
-    val ccDefault = GraphAlgorithms.minLabelPropagation(ids, edges)
+    val ccDefault = GraphAlgorithms.alternatingComponents(ids, edges)
       .as[(Long, Long)].collect().toMap
     // reliable mode without a checkpoint dir fails with a clear message
     spark.conf.set(IterCheckpoint.ModeKey, "reliable")
@@ -52,7 +60,7 @@ class GraphAlgorithmsSpec extends SparkTestBase {
       spark.sparkContext.setCheckpointDir(dir)
       val lpaReliable = GraphAlgorithms.labelPropagation(edges, rounds = 4)
         .as[(Long, Long)].collect().toMap
-      val ccReliable = GraphAlgorithms.minLabelPropagation(ids, edges)
+      val ccReliable = GraphAlgorithms.alternatingComponents(ids, edges)
         .as[(Long, Long)].collect().toMap
       assert(lpaReliable === lpaDefault)
       assert(ccReliable === ccDefault)
@@ -107,6 +115,20 @@ class GraphAlgorithmsSpec extends SparkTestBase {
     assert(comp.map(_._2).sorted === Seq(2L, 4L))
   }
 
+  test("componentSummary: a 120-node directed chain is one component") {
+    // node ids are key hashes, so hop distance from the min id is unrelated
+    // to chain position: some node sits ≥ 60 hops from the min id, past
+    // any fixed propagation-round budget of 50
+    val nodes = (0 until 120).map(i => ("N", s"c$i", Map.empty[String, String]))
+      .toDF("label", "key", "props")
+    val edges = (0 until 119).map(i => ("N", s"c$i", "NEXT", "N", s"c${i + 1}"))
+      .toDF("srcLabel", "srcKey", "relType", "dstLabel", "dstKey")
+    val chain = PropertyGraph.empty(spark).mergeNodes(nodes).mergeEdgesByKey(edges)
+    val comp = GraphAlgorithms.componentSummary(chain)
+      .as[(String, Long)].collect().toSeq
+    assert(comp === Seq(("c0", 120L)))
+  }
+
   test("DataFrame CC agrees with Pregel CC, including on a chain graph") {
     // chain c1→c2→c3→c4 stresses multi-iteration propagation (diameter 3)
     val nodes = (1 to 4).map(i => ("N", s"c$i", Map.empty[String, String]))
@@ -115,11 +137,12 @@ class GraphAlgorithmsSpec extends SparkTestBase {
       .toDF("srcLabel", "srcKey", "relType", "dstLabel", "dstKey")
     val chain = PropertyGraph.empty(spark).mergeNodes(nodes).mergeEdgesByKey(edges)
     for (g <- Seq(graph, chain)) {
-      val pregel = GraphAlgorithms.connectedComponents(g)
+      val keyOf = g.nodes.select($"id", $"key").as[(Long, String)].collect().toMap
+      val pregel = graphX(g).connectedComponents().vertices.collect()
+        .map { case (id, comp) => keyOf(id) -> comp }.toMap
+      val df = GraphAlgorithms.connectedComponents(g)
         .select($"key", $"component").as[(String, Long)].collect().toMap
-      val df = GraphAlgorithms.connectedComponentsDF(g)
-        .select($"key", $"component").as[(String, Long)].collect().toMap
-      // component ids may differ between engines; the partition must not
+      // both label by the min member id; compare the partitions anyway
       val byPregel = pregel.groupBy(_._2).values.map(_.keys.toSet).toSet
       val byDf = df.groupBy(_._2).values.map(_.keys.toSet).toSet
       assert(byPregel === byDf)
@@ -146,7 +169,10 @@ class GraphAlgorithmsSpec extends SparkTestBase {
       val pairs = es.toDF("a", "b")
       val alt = GraphAlgorithms.alternatingComponents(idsDf, pairs)
         .as[(Long, Long)].collect().toMap
-      val prop = GraphAlgorithms.minLabelPropagation(idsDf, pairs, maxIter = 200)
+      // pure min-label propagation: the prefix reaches its fixpoint within
+      // 200 rounds on every case here, so no alternating round runs
+      val prop = GraphAlgorithms.alternatingComponents(idsDf, pairs,
+          propPrefixRounds = 200)
         .as[(Long, Long)].collect().toMap
       assert(alt === prop) // both label by min reachable id — exact equality
     }
@@ -175,7 +201,8 @@ class GraphAlgorithmsSpec extends SparkTestBase {
   test("pagerank: sink publisher accumulates rank from its articles") {
     val pr = GraphAlgorithms.pageRank(graph, numIter = 20)
       .select($"key", $"rank").as[(String, Double)].collect().toMap
-    // GraphX normalizes final ranks; relative structure is what's invariant:
+    // final ranks are rescaled to the vertex count; relative structure is
+    // what's invariant:
     // symmetric leaves tie exactly, and the publisher sink holds
     // (0.15 + 0.85*3*0.15) / 0.15 = 3.55x a leaf's rank.
     assert(pr("a1") === pr("a2"))
@@ -185,52 +212,25 @@ class GraphAlgorithmsSpec extends SparkTestBase {
   }
 
   test("DataFrame PageRank matches GraphX staticPageRank to 1e-9") {
-    val gx = GraphAlgorithms.pageRank(graph, numIter = 15)
-      .select($"key", $"rank").as[(String, Double)].collect().toMap
-    val df = GraphAlgorithms.pageRankDF(graph, numIter = 15)
+    val keyOf = graph.nodes.select($"id", $"key").as[(Long, String)].collect().toMap
+    val gx = graphX(graph).staticPageRank(15, 0.15).vertices.collect()
+      .map { case (id, rank) => keyOf(id) -> rank }.toMap
+    val df = GraphAlgorithms.pageRank(graph, numIter = 15)
       .select($"key", $"rank").as[(String, Double)].collect().toMap
     assert(gx.keySet === df.keySet)
     gx.foreach { case (k, r) => assert(math.abs(r - df(k)) < 1e-9, s"key=$k $r vs ${df(k)}") }
   }
 
   test("shortest paths: articles one hop from publisher landmark") {
+    // BFS from the landmark over the REVERSED edges = hops toward it
     val pubId = graph.matchLabel("Publisher").select("id").as[Long].head()
-    val sp = GraphAlgorithms.shortestPathLengths(graph, Seq(pubId))
-      .select($"key", $"hops").as[(String, Int)].collect().toMap
-    assert(sp("p1") === 0)
-    assert(sp("a1") === 1 && sp("a2") === 1 && sp("a3") === 1)
-    assert(!sp.contains("u1")) // unreachable: no path to landmark
-  }
-
-  test("GraphX partition count derives from estimated graph size") {
-    // fixture-sized graph sits on the floor
-    assert(GraphAlgorithms.sizedPartitions(graph) === 8)
-    // a graph whose leaf-scan stats say ~3.2 GB derives more partitions —
-    // spark.range leaves carry exact size estimates (8 bytes/row), so no
-    // data materializes here (plan statistics only, no job)
-    val bigNodes = spark.range(200000000L)
-      .select(col("id"), lit("N").as("label"),
-        concat(lit("k"), col("id")).as("key"),
-        typedLit(Map.empty[String, String]).as("props"))
-    val bigEdges = spark.range(200000000L)
-      .select(col("id").as("srcId"), (col("id") + 1).as("dstId"),
-        lit("NEXT").as("relType"), typedLit(Map.empty[String, String]).as("props"))
-    val big = PropertyGraph(bigNodes, bigEdges)
-    val p = GraphAlgorithms.sizedPartitions(big)
-    assert(p > 8, s"expected size-derived count above the floor, got $p")
-    assert(p <= (1 << 16))
-  }
-
-  test("shortest paths: batched landmarks equal one unbatched run") {
-    import org.apache.spark.sql.functions.col
-    val landmarks = graph.nodes.select(col("id"))
-    // batch size 1 forces one Pregel run per landmark — same union result
-    val batched = GraphAlgorithms.shortestPathLengthsFrom(graph, landmarks, landmarkBatch = 1)
-      .select($"key", $"landmark", $"hops").as[(String, Long, Int)].collect().toSet
-    val wide = GraphAlgorithms.shortestPathLengthsFrom(graph, landmarks, landmarkBatch = 1000)
-      .select($"key", $"landmark", $"hops").as[(String, Long, Int)].collect().toSet
-    assert(batched.nonEmpty)
-    assert(batched === wide)
+    val keyOf = graph.nodes.select($"id", $"key").as[(Long, String)].collect().toMap
+    val sp = GraphAlgorithms.hopDistances(Seq(pubId).toDF("id"),
+        graph.edges.select($"dstId", $"srcId"))
+      .select($"v", $"dist").as[(Long, Long)].collect()
+      .map { case (v, d) => keyOf(v) -> d }.toMap
+    assert(sp === Map("a1" -> 1L, "a2" -> 1L, "a3" -> 1L))
+    // the landmark itself (0 hops) and u1 (no path to it) are absent
   }
 
   test("weightedSSSP: multi-hop cheap route beats the direct heavy edge") {
@@ -471,13 +471,24 @@ class GraphAlgorithmsSpec extends SparkTestBase {
   test("round-10: hopDistancesAllPairs — undirected distances, loud depth cap") {
     val edges = Seq(("a", "b"), ("b", "c")).toDF("src", "dst")
     val nodes = Seq("a", "b", "c", "iso").toDF("id")
-    val d = GraphAlgorithms.hopDistancesAllPairs(nodes, edges)
+    // both orientations = the undirected view, every node a source
+    val undirected = edges.unionByName(edges.select($"dst".as("src"), $"src".as("dst")))
+    val d = GraphAlgorithms.hopDistances(nodes, undirected)
       .as[(String, String, Long)].collect()
       .map(t => (t._1, t._2) -> t._3).toMap
     assert(d === Map(("a", "b") -> 1L, ("b", "a") -> 1L, ("b", "c") -> 1L,
       ("c", "b") -> 1L, ("a", "c") -> 2L, ("c", "a") -> 2L))
+    // directed: one source, one orientation — from "c" the edges reach "b"
+    // and "a"; "iso" (whose edge points INTO "c") is absent, and the sink
+    // "a" reaches nothing
+    val directed = Seq(("c", "b"), ("b", "a"), ("iso", "c")).toDF("src", "dst")
+    val fromC = GraphAlgorithms.hopDistances(Seq("c").toDF("id"), directed)
+      .as[(String, String, Long)].collect().toSet
+    assert(fromC === Set(("c", "b", 1L), ("c", "a", 2L)))
+    assert(GraphAlgorithms.hopDistances(Seq("a").toDF("id"), directed)
+      .count() === 0L)
     val e = intercept[IllegalStateException](
-      GraphAlgorithms.hopDistancesAllPairs(nodes, edges, maxDepth = 1))
+      GraphAlgorithms.hopDistances(nodes, undirected, maxDepth = 1))
     assert(e.getMessage.contains("deeper than the budget"), e.getMessage)
   }
 

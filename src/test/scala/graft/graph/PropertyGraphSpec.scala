@@ -152,29 +152,4 @@ class PropertyGraphSpec extends SparkTestBase {
       .select("a_key", "c_key").as[(String, String)].collect().toSeq
     assert(topk === full.toSeq)
   }
-
-  test("toGraphX round-trips vertices and edges") {
-    val g = PropertyGraph.empty(spark)
-      .mergeNodes(articleBatch)
-      .mergeEdgesByKey(Seq(("Article", "http://a/1", "WRITTEN_BY", "Publisher", "Daily Planet"))
-        .toDF("srcLabel", "srcKey", "relType", "dstLabel", "dstKey"))
-    val x = g.toGraphX()
-    assert(x.vertices.count() === 3)
-    assert(x.edges.count() === 1)
-  }
-
-  test("toGraphX raises partition count past a narrow checkpointed parent") {
-    val g0 = PropertyGraph.empty(spark)
-      .mergeNodes(articleBatch)
-      .mergeEdgesByKey(Seq(("Article", "http://a/1", "WRITTEN_BY", "Publisher", "Daily Planet"))
-        .toDF("srcLabel", "srcKey", "relType", "dstLabel", "dstKey"))
-    // a localCheckpoint'd graph has few, fixed partitions — the size-derived
-    // target (thousands on a big graph) must still take effect
-    val g = PropertyGraph(
-      g0.nodes.coalesce(1).localCheckpoint(),
-      g0.edges.coalesce(1).localCheckpoint())
-    val x = g.toGraphX(numPartitions = 8)
-    assert(x.edges.getNumPartitions === 8)
-    assert(x.vertices.getNumPartitions === 8)
-  }
 }
