@@ -249,7 +249,7 @@ object GraphAlgorithms {
 
   /** Connected components by ALTERNATING large-star / small-star rounds
     * (Kiveris et al., "Connected Components in MapReduce and Beyond",
-    * SoCC'14) — the one CC formulation in this file, and one that survives
+    * SoCC'14) — this file's only CC formulation; it survives
     * HIGH-DIAMETER graphs at 100 TB. Min-label propagation alone needs
     * `diameter` rounds (a 10^6-hop chain → 10^6 shuffles); the alternating
     * algorithm contracts the graph toward min-id stars in O(log n) rounds
