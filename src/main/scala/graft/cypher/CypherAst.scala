@@ -266,13 +266,6 @@ object CypherAst {
     }
   }
 
-  /** `CALL db.labels() [YIELD col [AS alias], …]` — a built-in procedure
-    * invocation (vs [[CallSub]]'s `CALL { }` subquery form). The supported
-    * procedures are the schema-introspection set the Neo4j browser and
-    * drivers issue on connect; each yields a fixed row schema
-    * ([[Procedures.schema]], validated at parse time). An empty `yields`
-    * binds every column under its default name (Neo4j's bare-CALL rule for
-    * a standalone call). */
   /** A bound-variable positional argument to a procedure call — the node
     * slot of `db.create.setNodeVectorProperty(n, key, $vector)`. Resolved
     * against the pipeline's bindings at execution. NOT a [[Value]]: it
@@ -292,17 +285,23 @@ object CypherAst {
     * `{}` property slots of LangChain's add_graph_documents statements
     * (`CALL apoc.merge.node([row.type], {id: row.id}, row.properties,
     * {})`). Values are literals, $parameters, bound variables or
-    * row-bound `var.prop` expressions. For config-consuming procedures
-    * (gds.*, db.index.*) a trailing all-literal map keeps its historical
-    * CONFIG role; everywhere else maps are ordinary positional
-    * arguments. Same containment rule as [[ProcVarArg]]. */
+    * row-bound `var.prop` expressions. For a procedure whose
+    * [[Procedure.takesConfig]] holds, a trailing all-literal map is the
+    * CONFIG; everywhere else maps are ordinary positional arguments.
+    * Same containment rule as [[ProcVarArg]]. */
   final case class ProcMapArg(entries: Seq[(String, Any)])
 
+  /** `CALL db.labels() [YIELD col [AS alias], …]` — a built-in procedure
+    * invocation (vs [[CallSub]]'s `CALL { }` subquery form). Each name is
+    * a [[Procedures]] entry and yields that entry's fixed row schema
+    * (validated at parse time). An empty `yields` binds every column
+    * under its default name (Neo4j's bare-CALL rule for a standalone
+    * call). */
   final case class ProcCall(name: String, yields: Seq[(String, String)],
       config: Map[String, Any] = Map.empty, args: Seq[Any] = Nil) {
     /** Column names this call binds into the pipeline. */
     def boundNames: Seq[String] =
-      if (yields.nonEmpty) yields.map(_._2) else Procedures.schema(name)
+      if (yields.nonEmpty) yields.map(_._2) else Procedures(name).yields
     /** A PRESENT but mistyped key raises instead of silently using the
       * default (ADVICE r8 #5 — {topK: 1.5} used to fall through). */
     def confLong(key: String, default: Long): Long =
@@ -335,20 +334,64 @@ object CypherAst {
     def has(key: String): Boolean = config.keys.exists(_.equalsIgnoreCase(key))
   }
 
-  /** Built-in procedure registry: name → yielded columns, in order. */
+  /** How a procedure takes its arguments. The parser reads it to decide
+    * whether a trailing all-literal map is the CONFIG; the session checks
+    * it before the body runs. */
+  object ProcArgs extends Enumeration {
+    val NoArgs = Value // no positional argument, no config map
+    // an optional projected-graph name, then an optional config map
+    val GraphConfig = Value
+    // positional arguments the body checks itself, then an optional config
+    val PositionalConfig = Value
+    // positional arguments the body checks itself; maps are ordinary ones
+    val Positional = Value
+  }
+
+  /** One built-in procedure: the columns it yields (in order), the one-line
+    * description SHOW PROCEDURES carries, whether it writes (the store or
+    * a session catalog) and its argument shape. A WRITE call takes the
+    * session write lock, and EXPLAIN/PROFILE reject it — the engine runs
+    * procedure calls eagerly at compile time, so "compile without
+    * executing" cannot hold for them. */
+  final case class Procedure(yields: Seq[String], description: String,
+      write: Boolean = false, args: ProcArgs.Value = ProcArgs.NoArgs) {
+    def mode: String = if (write) "WRITE" else "READ"
+    def takesConfig: Boolean =
+      args == ProcArgs.GraphConfig || args == ProcArgs.PositionalConfig
+  }
+
+  /** Built-in procedure table: name → [[Procedure]]. SHOW PROCEDURES, the
+    * EXPLAIN/PROFILE rejection, the write lock, the parser's config rule
+    * and the session's argument check all read it; CypherSpec derives its
+    * SHOW PROCEDURES expectations from it. */
   object Procedures {
-    val all: Map[String, Seq[String]] = Map(
-      "db.labels" -> Seq("label"),
-      "db.relationshipTypes" -> Seq("relationshipType"),
-      "db.propertyKeys" -> Seq("propertyKey"),
-      "dbms.components" -> Seq("name", "versions", "edition"),
+    import ProcArgs._
+    /** A gds algorithm's stream form. */
+    private def gds(yields: String*)(description: String) =
+      Procedure(yields, description, args = GraphConfig)
+    /** A gds algorithm's write form: it yields the written-node count, the
+      * `counters` (distinct written values) and the property name. */
+    private def gdsWrite(counters: String*)(description: String) =
+      Procedure(("nodePropertiesWritten" +: counters) :+ "writeProperty",
+        description, write = true, args = GraphConfig)
+    val all: Map[String, Procedure] = Map(
+      "db.labels" -> Procedure(Seq("label"),
+        "List all node labels in the store."),
+      "db.relationshipTypes" -> Procedure(Seq("relationshipType"),
+        "List all relationship types in the store."),
+      "db.propertyKeys" -> Procedure(Seq("propertyKey"),
+        "List all property keys in use."),
+      "dbms.components" -> Procedure(Seq("name", "versions", "edition"),
+        "List DBMS components and their versions."),
       // data-modeling introspection (flattened: nodes carry exactly one
       // label, properties are string-valued in the store)
-      "db.schema.nodeTypeProperties" ->
+      "db.schema.nodeTypeProperties" -> Procedure(
         Seq("nodeType", "nodeLabels", "propertyName", "propertyTypes",
           "mandatory"),
-      "db.schema.relTypeProperties" ->
+        "Node property schema: per-label property inventory with types and a data-derived mandatory flag."),
+      "db.schema.relTypeProperties" -> Procedure(
         Seq("relType", "propertyName", "propertyTypes", "mandatory"),
+        "Relationship property schema: per-type property inventory with types and a data-derived mandatory flag."),
       // APOC's schema census — the procedure LangChain's Neo4jGraph
       // refuses to initialize without (its refresh_schema derives the
       // whole prompt-visible schema from these rows; reference stack:
@@ -358,200 +401,155 @@ object CypherAst {
       // relationship topology (elementType='node', type='RELATIONSHIP',
       // property=relType, other=[end labels]), and relationship
       // properties (elementType='relationship', type='STRING').
-      "apoc.meta.data" ->
+      "apoc.meta.data" -> Procedure(
         Seq("label", "property", "count", "type", "elementType", "other"),
-      // graph-algorithm procedures (the GDS `.stream` surface): results
-      // identify nodes by KEY (engine-independent), never internal ids
+        "APOC schema census: node properties, relationship topology (start label, type, end labels) and relationship properties."),
       // graph-catalog management (named projections — the first line of
       // every GDS tutorial: project once, stream many times)
-      "gds.graph.project" -> Seq("graphName", "nodeCount", "relationshipCount"),
-      "gds.graph.list" -> Seq("graphName", "nodeCount", "relationshipCount"),
-      "gds.graph.drop" -> Seq("graphName"),
-      "gds.pageRank.stream" -> Seq("key", "score"),
-      "gds.wcc.stream" -> Seq("key", "componentKey"),
-      "gds.scc.stream" -> Seq("key", "componentKey"),
-      "gds.degree.stream" -> Seq("key", "degree"),
-      "gds.nodeSimilarity.stream" -> Seq("key1", "key2", "similarity"),
-      "gds.labelPropagation.stream" -> Seq("key", "communityKey"),
-      "gds.fastRP.stream" -> Seq("key", "e0", "e1", "e2", "e3"),
-      "gds.hits.stream" -> Seq("key", "authority", "hub"),
-      // write-mode procedures: compute over the (projected) graph, write a
-      // node property back into the STORE by key, yield summary counters —
-      // the other half of the GDS lifecycle (stream reads, write persists)
-      "gds.degree.write" -> Seq("nodePropertiesWritten", "writeProperty"),
-      "gds.pageRank.write" -> Seq("nodePropertiesWritten", "writeProperty"),
-      "gds.wcc.write" ->
-        Seq("nodePropertiesWritten", "componentCount", "writeProperty"),
-      "gds.louvain.write" ->
-        Seq("nodePropertiesWritten", "communityCount", "writeProperty"),
-      "gds.labelPropagation.write" ->
-        Seq("nodePropertiesWritten", "communityCount", "writeProperty"),
-      "gds.scc.write" ->
-        Seq("nodePropertiesWritten", "componentCount", "writeProperty"),
-      "gds.kcore.write" -> Seq("nodePropertiesWritten", "writeProperty"),
-      "gds.betweenness.write" -> Seq("nodePropertiesWritten", "writeProperty"),
+      "gds.graph.project" -> Procedure(
+        Seq("graphName", "nodeCount", "relationshipCount"),
+        "Project a named label/relType-filtered snapshot of the store into the GDS graph catalog.",
+        write = true, args = PositionalConfig),
+      "gds.graph.list" -> Procedure(
+        Seq("graphName", "nodeCount", "relationshipCount"),
+        "List the named projections in the GDS graph catalog.",
+        args = PositionalConfig),
+      "gds.graph.drop" -> Procedure(Seq("graphName"),
+        "Drop a named projection from the GDS graph catalog.",
+        write = true, args = PositionalConfig),
+      // graph-algorithm procedures (the GDS `.stream` surface): results
+      // identify nodes by KEY (engine-independent), never internal ids
+      "gds.pageRank.stream" -> gds("key", "score")(
+        "PageRank (10 supersteps, 6-dp scores) streamed per node key."),
+      "gds.wcc.stream" -> gds("key", "componentKey")(
+        "Weakly connected components (min-member-key identity); {relationshipWeightProperty, threshold} filters edges."),
+      "gds.scc.stream" -> gds("key", "componentKey")(
+        "Strongly connected components over the directed edge set (min-member-key identity)."),
+      "gds.degree.stream" -> gds("key", "degree")(
+        "Undirected degree per node key."),
+      "gds.nodeSimilarity.stream" -> gds("key1", "key2", "similarity")(
+        "Jaccard similarity over out-neighbor sets; {topK, degreeCutoff, similarityCutoff} bound the pair stream."),
+      "gds.labelPropagation.stream" -> gds("key", "communityKey")(
+        "Deterministic synchronous label propagation (min-key ties); {maxIterations} bounds rounds."),
+      "gds.fastRP.stream" -> gds("key", "e0", "e1", "e2", "e3")(
+        "FastRP node embeddings (portable md5 init); {embeddingDimension} is mandatory."),
+      "gds.hits.stream" -> gds("key", "authority", "hub")(
+        "HITS authority/hub scores (exact-integer rounds); {hitsIterations} is mandatory."),
+      // write-mode procedures: run the matching `.stream`, write its value
+      // column back into the STORE by node, yield summary counters — the
+      // other half of the GDS lifecycle (stream reads, write persists)
+      "gds.degree.write" -> gdsWrite()(
+        "Persist degree per node as {writeProperty}."),
+      "gds.pageRank.write" -> gdsWrite()(
+        "Persist PageRank scores as {writeProperty}."),
+      "gds.wcc.write" -> gdsWrite("componentCount")(
+        "Persist WCC component keys as {writeProperty}."),
+      "gds.louvain.write" -> gdsWrite("communityCount")(
+        "Persist Louvain community keys as {writeProperty}."),
+      "gds.labelPropagation.write" -> gdsWrite("communityCount")(
+        "Persist label-propagation community keys as {writeProperty}."),
+      "gds.scc.write" -> gdsWrite("componentCount")(
+        "Persist SCC component keys as {writeProperty}."),
+      "gds.kcore.write" -> gdsWrite()(
+        "Persist coreness values as {writeProperty}."),
+      "gds.betweenness.write" -> gdsWrite()(
+        "Persist (sampled-Brandes) betweenness scores as {writeProperty}."),
       // source→target form of the dijkstra surface (GDS's
       // gds.shortestPath.dijkstra): same engine, result filtered to the
       // one target row
       "gds.shortestPath.dijkstra.stream" ->
-        Seq("sourceKey", "targetKey", "totalCost"),
+        gds("sourceKey", "targetKey", "totalCost")(
+        "Shortest path cost from {sourceNode} to {targetNode} (non-negative integer weights)."),
       // single-source shortest paths, GDS's dijkstra surface: node identity
       // by key, integer weights from a relationship property
       "gds.allShortestPaths.dijkstra.stream" ->
-        Seq("sourceKey", "targetKey", "totalCost"),
+        gds("sourceKey", "targetKey", "totalCost")(
+        "Single-source shortest path costs from {sourceNode} (non-negative integer weights)."),
       // triangle census family (undirected simple view of the edge list)
-      "gds.triangleCount.stream" -> Seq("key", "triangleCount"),
+      "gds.triangleCount.stream" -> gds("key", "triangleCount")(
+        "Triangles per node over the undirected simple view."),
       "gds.localClusteringCoefficient.stream" ->
-        Seq("key", "localClusteringCoefficient"),
+        gds("key", "localClusteringCoefficient")(
+        "Local clustering coefficient per node over the undirected simple view."),
       // centrality family beyond pageRank/degree/hits: sampled Brandes
       // betweenness, closeness + its harmonic variant, and the full k-core
       // decomposition (coreness per node) — GDS's column names
-      "gds.betweenness.stream" -> Seq("key", "score"),
-      "gds.closeness.stream" -> Seq("key", "score"),
-      "gds.closeness.harmonic.stream" -> Seq("key", "centrality"),
-      "gds.kcore.stream" -> Seq("key", "coreValue"),
+      "gds.betweenness.stream" -> gds("key", "score")(
+        "Brandes betweenness; {samplingSize} picks deterministic sources and rescales by |V|/K."),
+      "gds.closeness.stream" -> gds("key", "score")(
+        "Closeness centrality (reachable-set form, defined on disconnected graphs)."),
+      "gds.closeness.harmonic.stream" -> gds("key", "centrality")(
+        "Harmonic closeness centrality."),
+      "gds.kcore.stream" -> gds("key", "coreValue")(
+        "Full k-core decomposition (coreness per node)."),
       // modularity-optimizing community detection (deterministic
       // single-level synchronous local moving; see louvainLocalMoving)
-      "gds.louvain.stream" -> Seq("key", "communityKey"),
+      "gds.louvain.stream" -> gds("key", "communityKey")(
+        "Deterministic single-level Louvain local moving; {maxIterations} bounds rounds."),
       // index query procedures (the GraphRAG statements — LangChain's
       // Neo4jVector issues vector.queryNodes, its hybrid mode adds
       // fulltext.queryNodes): `node` is the whole node as a property map
       // (key folded in), `score` the similarity/relevance
-      "db.index.vector.queryNodes" -> Seq("node", "score"),
-      "db.index.fulltext.queryNodes" -> Seq("node", "score"),
+      "db.index.vector.queryNodes" -> Procedure(Seq("node", "score"),
+        "Query a vector index: top-k nodes by cosine similarity to the query embedding (sign-LSH candidates, exact re-scoring).",
+        args = PositionalConfig),
+      "db.index.fulltext.queryNodes" -> Procedure(Seq("node", "score"),
+        "Query a fulltext index: nodes matching the query (terms, AND/OR/NOT, parentheses, quoted phrases) with a deterministic BM25-family score.",
+        args = PositionalConfig),
       // the RELATIONSHIP-index twins (Neo4j 5 indexes relationship
       // properties too): `relationship` is the edge's property bag
-      "db.index.vector.queryRelationships" -> Seq("relationship", "score"),
-      "db.index.fulltext.queryRelationships" -> Seq("relationship", "score"),
+      "db.index.vector.queryRelationships" -> Procedure(
+        Seq("relationship", "score"),
+        "Query a relationship vector index: top-k relationships by similarity to the query embedding.",
+        args = PositionalConfig),
+      "db.index.fulltext.queryRelationships" -> Procedure(
+        Seq("relationship", "score"),
+        "Query a relationship fulltext index: relationships matching the query with a deterministic BM25-family score.",
+        args = PositionalConfig),
       // APOC's data-driven merges — the procedures LangChain's
       // Neo4jGraph.add_graph_documents issues to import LLM-extracted
       // knowledge graphs (labels and relationship types arrive WITH the
       // data): set-oriented over the whole driving batch, never per row
-      "apoc.merge.node" -> Seq("node"),
-      "apoc.merge.relationship" -> Seq("rel"),
+      "apoc.merge.node" -> Procedure(Seq("node"),
+        "MERGE a node with data-driven label, identity and properties (one set-oriented merge per statement over the driving batch).",
+        write = true, args = Positional),
+      "apoc.merge.relationship" -> Procedure(Seq("rel"),
+        "MERGE a relationship between two bound nodes with a data-driven type and properties (set-oriented over the driving batch).",
+        write = true, args = Positional),
       // the PROCEDURE form of vector-index creation (pre-5.15 Neo4j — the
       // statement LangChain/Neo4jVector issued for years and still emits
       // on installed versions). Pure alias onto the CREATE VECTOR INDEX
       // machinery: same validation, same SHOW INDEXES row. Neo4j's form
       // returns void; this engine yields the DDL's (name, added) row —
       // an additive divergence a void-expecting caller ignores.
-      "db.index.vector.createNodeIndex" -> Seq("name", "added"),
+      "db.index.vector.createNodeIndex" -> Procedure(Seq("name", "added"),
+        "Create a vector index (procedure form of CREATE VECTOR INDEX; the pre-5.15 statement LangChain issues).",
+        write = true, args = PositionalConfig),
       // the embedding SETTER LangChain's Neo4jVector.add_embeddings
       // issues (Neo4j 5.13+). Neo4j's form returns void; this engine
       // yields the write counter, the gds.*.write convention — an
       // additive divergence a void-expecting caller simply ignores
-      "db.create.setNodeVectorProperty" -> Seq("nodePropertiesWritten"))
-    /** One-line description per registered procedure — the text SHOW
-      * PROCEDURES carries (Browser and cypher-shell render it on
-      * connect). Keyed identically to [[all]]; the init-time require
-      * below makes a registry/description drift fail at class load, and
-      * CypherSpec derives its SHOW PROCEDURES expectations from these
-      * maps rather than hardcoding counts. */
-    val descriptions: Map[String, String] = Map(
-      "db.labels" -> "List all node labels in the store.",
-      "db.relationshipTypes" -> "List all relationship types in the store.",
-      "db.propertyKeys" -> "List all property keys in use.",
-      "dbms.components" -> "List DBMS components and their versions.",
-      "db.schema.nodeTypeProperties" ->
-        "Node property schema: per-label property inventory with types and a data-derived mandatory flag.",
-      "db.schema.relTypeProperties" ->
-        "Relationship property schema: per-type property inventory with types and a data-derived mandatory flag.",
-      "apoc.meta.data" ->
-        "APOC schema census: node properties, relationship topology (start label, type, end labels) and relationship properties.",
-      "gds.graph.project" ->
-        "Project a named label/relType-filtered snapshot of the store into the GDS graph catalog.",
-      "gds.graph.list" -> "List the named projections in the GDS graph catalog.",
-      "gds.graph.drop" -> "Drop a named projection from the GDS graph catalog.",
-      "gds.pageRank.stream" ->
-        "PageRank (10 supersteps, 6-dp scores) streamed per node key.",
-      "gds.wcc.stream" ->
-        "Weakly connected components (min-member-key identity); {relationshipWeightProperty, threshold} filters edges.",
-      "gds.scc.stream" ->
-        "Strongly connected components over the directed edge set (min-member-key identity).",
-      "gds.degree.stream" -> "Undirected degree per node key.",
-      "gds.nodeSimilarity.stream" ->
-        "Jaccard similarity over out-neighbor sets; {topK, degreeCutoff, similarityCutoff} bound the pair stream.",
-      "gds.labelPropagation.stream" ->
-        "Deterministic synchronous label propagation (min-key ties); {maxIterations} bounds rounds.",
-      "gds.fastRP.stream" ->
-        "FastRP node embeddings (portable md5 init); {embeddingDimension} is mandatory.",
-      "gds.hits.stream" ->
-        "HITS authority/hub scores (exact-integer rounds); {hitsIterations} is mandatory.",
-      "gds.degree.write" -> "Persist degree per node as {writeProperty}.",
-      "gds.pageRank.write" -> "Persist PageRank scores as {writeProperty}.",
-      "gds.wcc.write" -> "Persist WCC component keys as {writeProperty}.",
-      "gds.louvain.write" -> "Persist Louvain community keys as {writeProperty}.",
-      "gds.labelPropagation.write" ->
-        "Persist label-propagation community keys as {writeProperty}.",
-      "gds.scc.write" -> "Persist SCC component keys as {writeProperty}.",
-      "gds.kcore.write" -> "Persist coreness values as {writeProperty}.",
-      "gds.betweenness.write" ->
-        "Persist (sampled-Brandes) betweenness scores as {writeProperty}.",
-      "gds.shortestPath.dijkstra.stream" ->
-        "Shortest path cost from {sourceNode} to {targetNode} (non-negative integer weights).",
-      "gds.allShortestPaths.dijkstra.stream" ->
-        "Single-source shortest path costs from {sourceNode} (non-negative integer weights).",
-      "gds.triangleCount.stream" ->
-        "Triangles per node over the undirected simple view.",
-      "gds.localClusteringCoefficient.stream" ->
-        "Local clustering coefficient per node over the undirected simple view.",
-      "gds.betweenness.stream" ->
-        "Brandes betweenness; {samplingSize} picks deterministic sources and rescales by |V|/K.",
-      "gds.closeness.stream" ->
-        "Closeness centrality (reachable-set form, defined on disconnected graphs).",
-      "gds.closeness.harmonic.stream" -> "Harmonic closeness centrality.",
-      "gds.kcore.stream" -> "Full k-core decomposition (coreness per node).",
-      "gds.louvain.stream" ->
-        "Deterministic single-level Louvain local moving; {maxIterations} bounds rounds.",
-      "db.index.vector.queryNodes" ->
-        "Query a vector index: top-k nodes by cosine similarity to the query embedding (sign-LSH candidates, exact re-scoring).",
-      "db.index.fulltext.queryNodes" ->
-        "Query a fulltext index: nodes matching the query (terms, AND/OR/NOT, parentheses, quoted phrases) with a deterministic BM25-family score.",
-      "db.index.vector.queryRelationships" ->
-        "Query a relationship vector index: top-k relationships by similarity to the query embedding.",
-      "db.index.fulltext.queryRelationships" ->
-        "Query a relationship fulltext index: relationships matching the query with a deterministic BM25-family score.",
-      "apoc.merge.node" ->
-        "MERGE a node with data-driven label, identity and properties (one set-oriented merge per statement over the driving batch).",
-      "apoc.merge.relationship" ->
-        "MERGE a relationship between two bound nodes with a data-driven type and properties (set-oriented over the driving batch).",
-      "db.index.vector.createNodeIndex" ->
-        "Create a vector index (procedure form of CREATE VECTOR INDEX; the pre-5.15 statement LangChain issues).",
-      "db.create.setNodeVectorProperty" ->
-        "Set a vector-valued property on the bound nodes (one set-oriented join; the embedding setter LangChain issues).")
+      "db.create.setNodeVectorProperty" -> Procedure(
+        Seq("nodePropertiesWritten"),
+        "Set a vector-valued property on the bound nodes (one set-oriented join; the embedding setter LangChain issues).",
+        write = true, args = Positional))
 
-    /** Pseudo-procedure schemas the PARSER binds into a pipeline but which
-      * are not user-callable names (no SHOW PROCEDURES row): `SHOW INDEXES
+    /** Pseudo-procedures the PARSER binds into a pipeline but which are
+      * not user-callable names (no SHOW PROCEDURES row): `SHOW INDEXES
       * YIELD …` compiles to a first-stage binding of this relation —
       * Neo4j 5's FULL SHOW INDEXES column set (list-typed labelsOrTypes /
       * properties and the options map), the shape Neo4jVector's
       * retrieve_existing_index statement filters on. The bare `SHOW
       * INDEXES` keeps its stable flat columns (c63's hashed subset). */
-    val internal: Map[String, Seq[String]] = Map(
-      "internal.show.indexes" -> Seq("name", "state", "populationPercent",
-        "type", "entityType", "labelsOrTypes", "properties",
-        "indexProvider", "owningConstraint", "options"))
+    val internal: Map[String, Procedure] = Map(
+      "internal.show.indexes" -> Procedure(Seq("name", "state",
+        "populationPercent", "type", "entityType", "labelsOrTypes",
+        "properties", "indexProvider", "owningConstraint", "options"), ""))
 
-    def schema(name: String): Seq[String] =
+    def apply(name: String): Procedure =
       all.getOrElse(name, internal.getOrElse(name,
         throw new IllegalArgumentException(
           s"unknown procedure '$name' — supported: ${all.keys.toSeq.sorted.mkString(", ")}")))
-
-    /** Procedures that mutate the store or a session catalog when invoked.
-      * EXPLAIN/PROFILE reject statements containing these — the engine
-      * executes procedure calls eagerly at compile time, so "compile
-      * without executing" cannot hold for them (ADVICE r10 #2). */
-    def sideEffecting(name: String): Boolean =
-      name.endsWith(".write") ||
-        name == "gds.graph.project" || name == "gds.graph.drop" ||
-        name == "db.create.setNodeVectorProperty" ||
-        name == "db.index.vector.createNodeIndex" ||
-        name.startsWith("apoc.merge.")
-
-    require(descriptions.keySet == all.keySet,
-      "procedure registry drift: descriptions vs yields differ on " +
-        ((descriptions.keySet diff all.keySet) ++
-          (all.keySet diff descriptions.keySet)).toSeq.sorted.mkString(", "))
   }
 
   /** The scalar/temporal/aggregate FUNCTION surface the expression compiler

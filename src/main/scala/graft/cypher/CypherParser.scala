@@ -240,7 +240,7 @@ object CypherParser {
               // composes like any CALL: seed the pipeline's first stage
               // with the pseudo-procedure and parse the rest normally.
               next()
-              val cols = Procedures.internal("internal.show.indexes")
+              val cols = Procedures.internal("internal.show.indexes").yields
               val yields = ArrayBuffer.empty[(String, String)]
               if (peek.contains(Sym("*"))) {
                 next(); cols.foreach(c0 => yields += ((c0, c0)))
@@ -985,7 +985,8 @@ object CypherParser {
             val parts = ArrayBuffer(nameSegment())
             while (peek.contains(Sym("."))) { next(); parts += nameSegment() }
             val name = parts.mkString(".")
-            val cols = Procedures.schema(name)
+            val proc = Procedures(name)
+            val cols = proc.yields
             expectSym("(")
             // Arguments: positional LITERALS (a graph name string, a
             // label/relType spec string or string list — the GDS
@@ -1107,23 +1108,21 @@ object CypherParser {
                 "bound variable, a var.prop row expression or a " +
                 s"config map, got $t")
             }
-            // config-consuming procedures (gds.*, db.index.*) keep their
-            // historical contract: one all-literal map, LAST — it becomes
-            // the CONFIG. Batch procedures (apoc.merge.*) take maps as
-            // ordinary positional arguments, anywhere, any number.
-            val consumesConfig = name.startsWith("gds.") ||
-              name.startsWith("db.index.")
+            // a config-taking procedure (gds.*, db.index.*) takes one
+            // all-literal map, LAST — it becomes the CONFIG. The others
+            // (apoc.merge.*) take maps as ordinary positional arguments,
+            // anywhere, any number.
             if (!peek.contains(Sym(")"))) {
               parseArg()
               while (peek.contains(Sym(","))) {
                 next()
-                if (sawConfig && consumesConfig)
+                if (sawConfig && proc.takesConfig)
                   fail("the config map must be the LAST procedure argument")
                 parseArg()
               }
             }
             expectSym(")")
-            if (consumesConfig) posArgs.lastOption match {
+            if (proc.takesConfig) posArgs.lastOption match {
               case Some(ProcMapArg(entries)) =>
                 entries.foreach {
                   case (k, (_: ProcVarArg | _: ProcPropArg)) =>

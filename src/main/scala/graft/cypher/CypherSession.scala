@@ -231,7 +231,7 @@ final class CypherSession(
 
   private def rejectSideEffectingProcs(verb: String,
       procs: Seq[ProcCall]): Unit = {
-    val bad = procs.map(_.name).filter(CypherAst.Procedures.sideEffecting)
+    val bad = procs.map(_.name).filter(Procedures(_).write)
     if (bad.nonEmpty) throw new IllegalArgumentException(
       s"$verb cannot inspect a statement calling ${bad.distinct.mkString(", ")} " +
         "— write-mode and graph-catalog procedures execute their side " +
@@ -333,18 +333,15 @@ final class CypherSession(
       .orderBy("name"))
   }
 
-  /** `SHOW PROCEDURES` — one row per registry entry (Browser and
-    * cypher-shell issue this on connect). Everything is DERIVED from the
-    * [[CypherAst.Procedures]] registry: the signature from the registered
-    * YIELD schema, the mode from the side-effect classifier EXPLAIN
-    * already trusts — there is no second list to drift. */
+  /** `SHOW PROCEDURES` — one row per [[CypherAst.Procedures]] table
+    * entry (Browser and cypher-shell issue this on connect): the signature
+    * from the entry's yields, its mode and its description. */
   private def executeShowProcedures(): CypherResult = {
     val spark = graph.nodes.sparkSession
     import spark.implicits._
-    val rows = CypherAst.Procedures.all.toSeq.map { case (name, yields) =>
-      val mode = if (CypherAst.Procedures.sideEffecting(name)) "WRITE" else "READ"
-      (name, s"$name() :: (${yields.mkString(", ")})", mode,
-        CypherAst.Procedures.descriptions(name))
+    val rows = CypherAst.Procedures.all.toSeq.map { case (name, proc) =>
+      (name, s"$name() :: (${proc.yields.mkString(", ")})", proc.mode,
+        proc.description)
     }.sortBy(_._1)
     CypherRows(rows.toDF("name", "signature", "mode", "description"))
   }
@@ -2088,20 +2085,11 @@ final class CypherSession(
     * DROPS the first's rows (lost update) without this. Reads stay
     * lock-free: a query captures the immutable `graph` instance once and
     * sees a consistent snapshot either side of any concurrent write.
-    * Read-pipeline statements that carry a mutating procedure (apoc.merge,
-    * the embedding setter, gds *.write, the DDL procedure forms) take the
-    * lock too — [[mutatesSession]] decides from the parsed shape. */
+    * Read-pipeline statements that CALL a WRITE-mode procedure (its
+    * [[CypherAst.Procedure]] entry says so: apoc.merge, the embedding
+    * setter, gds *.write, the GDS catalog, the DDL procedure forms) take
+    * the lock too. */
   private val sessionWriteLock = new Object
-
-  /** True when executing `m` can move the session graph or the index
-    * catalog: any CALL of a write procedure inside the pipeline. */
-  private def mutatesSession(procs: Seq[ProcCall]): Boolean =
-    procs.exists { p =>
-      p.name.startsWith("apoc.merge.") ||
-      p.name == "db.create.setNodeVectorProperty" ||
-      p.name == "db.index.vector.createNodeIndex" ||
-      (p.name.startsWith("gds.") && p.name.endsWith(".write"))
-    }
 
   /** Pin pending merge lineage before a READ compiles (round 16, guide
     * §3.3 "very wide plans: materialise intermediates"): consecutive
@@ -2172,7 +2160,7 @@ final class CypherSession(
       case ShowVectorIndexes => executeShowKindIndexes("VECTOR")
       case ShowFulltextIndexes => executeShowKindIndexes("FULLTEXT")
       case m: MatchStatement
-          if m.stages.exists(st => mutatesSession(st.procs)) =>
+          if m.stages.exists(_.procs.exists(p => Procedures(p.name).write)) =>
         sessionWriteLock.synchronized {
           compactForRead()
           CypherRows(compileMatch(m, params))
@@ -2183,7 +2171,8 @@ final class CypherSession(
       // a UNION arm carrying a write procedure mutates the session just
       // like a bare pipeline would — it takes the same lock (ADVICE r13)
       case u: UnionStatement
-          if u.parts.exists(_.stages.exists(st => mutatesSession(st.procs))) =>
+          if u.parts.exists(_.stages.exists(_.procs.exists(p =>
+            Procedures(p.name).write))) =>
         sessionWriteLock.synchronized {
           compactForRead()
           CypherRows(compileUnion(u, params))
@@ -2944,6 +2933,1178 @@ final class CypherSession(
     last.skip.foreach(n => out = out.offset(n))
     last.limit.foreach(n => out = out.limit(n))
     out
+  }
+
+  /** Built-in procedure call in a read pipeline (`CALL db.labels() YIELD
+    * …`): runs `call` and binds its rows onto the pipeline frame `df`
+    * (crossed per driving row; a first-stage call starts the pipeline).
+    * Returns the new pipeline frame and the names it binds — ordinary
+    * scalars every later clause (WHERE, WITH, RETURN, UNION) composes
+    * with. apoc.merge.* binds one struct per driving row instead.
+    * Schema rows come off the store's partition columns (a partition
+    * listing at the scan, not a full-table distinct at 100 TB) and are
+    * sorted for determinism (procedure result order is unspecified in
+    * Neo4j; a stable order costs nothing at schema cardinality). */
+  private def callProcedure(call: ProcCall, params: Map[String, Any],
+      df: DataFrame, scalarVars: Set[String]): (DataFrame, Seq[String]) = {
+    val spark = graph.nodes.sparkSession
+    // resolve $parameter positional arguments (the query-embedding slot
+    // of db.index.vector.queryNodes) and config values ({limit: $k} in
+    // Neo4jVector's hybrid template) against the statement's params
+    val p = call.copy(
+      args = call.args.map {
+        case Param(nm) => params.getOrElse(nm,
+          throw new IllegalArgumentException(s"missing parameter $$$nm"))
+        case a => a
+      },
+      config = call.config.map {
+        case (k, Param(nm)) => k -> params.getOrElse(nm,
+          throw new IllegalArgumentException(s"missing parameter $$$nm"))
+        case kv => kv
+      })
+    val proc = Procedures(p.name)
+    // Graph-name first argument on the gds algorithm surface: the
+    // algorithm runs over the NAMED projection's snapshot instead of
+    // the whole store; an unknown name fails typed.
+    val pgraph: PropertyGraph = proc.args match {
+      case ProcArgs.GraphConfig =>
+        require(p.args.size <= 1, s"${p.name} takes at most one " +
+          s"positional argument (a projected graph name), got ${p.args}")
+        p.args.headOption match {
+          case None => graph
+          case Some(name: String) =>
+            projections.getOrElse(name, throw new IllegalArgumentException(
+              s"graph '$name' does not exist in the GDS graph catalog — " +
+                "project it first with CALL gds.graph.project(" +
+                s"'$name', <nodeLabels>, <relTypes>)")).graph
+          case Some(other) => throw new IllegalArgumentException(
+            s"${p.name}'s first argument must be a graph name string, " +
+              s"got $other")
+        }
+      case ProcArgs.NoArgs =>
+        require(p.args.isEmpty,
+          s"${p.name} takes no positional arguments, got ${p.args}")
+        graph
+      case _ => graph
+    }
+    // edge list projected to node KEYS — the identity every gds.*
+    // procedure computes over (internal ids are engine noise)
+    def edgeKeys: DataFrame = pgraph.edges
+      .join(pgraph.nodes.select(col("id").as("srcId"), col("key").as("src")),
+        Seq("srcId"))
+      .join(pgraph.nodes.select(col("id").as("dstId"), col("key").as("dst")),
+        Seq("dstId"))
+      .select(col("src"), col("dst"))
+    // a '*'/label/label-list projection spec → None = all, Some = the set
+    def specSet(arg: Any, what: String): Option[Seq[String]] = arg match {
+      case "*" => None
+      case s: String => Some(Seq(s))
+      case items: Seq[_] =>
+        val ss = items.map {
+          case s: String if s != "*" => s
+          case other => throw new IllegalArgumentException(
+            s"a $what projection list takes plain $what strings, got $other")
+        }
+        require(ss.nonEmpty, s"a $what projection list cannot be empty")
+        Some(ss)
+      case other => throw new IllegalArgumentException(
+        s"a $what projection must be '*', a string or a string list, " +
+          s"got $other")
+    }
+    /** The rows of procedure `name`; a gds.*.write runs its .stream here. */
+    def rowsOf(name: String): DataFrame = name match {
+      case "gds.graph.project" =>
+        // CALL gds.graph.project(name, nodeLabels, relTypes): snapshot
+        // a label/relType-filtered subgraph into the catalog. Specs
+        // are validated against the store's ACTUAL labels/relTypes
+        // (schema-bounded distincts) so a typo fails typed instead of
+        // projecting an empty graph; edges keep only those whose BOTH
+        // endpoints survive the node filter.
+        import spark.implicits._
+        require(p.args.size == 3, "gds.graph.project takes exactly " +
+          "(graphName, nodeProjection, relationshipProjection), got " +
+          s"${p.args.size} argument(s)")
+        val name = p.args.head match {
+          case s: String => s
+          case other => throw new IllegalArgumentException(
+            s"gds.graph.project's graph name must be a string, got $other")
+        }
+        require(!projections.contains(name),
+          s"graph '$name' already exists in the GDS graph catalog — " +
+            s"drop it first with CALL gds.graph.drop('$name')")
+        val nodeSpec = specSet(p.args(1), "label")
+        val relSpec = specSet(p.args(2), "relationship type")
+        // Round 16 (guide §1.2 — fewer actions): both schema-bounded
+        // distinct sets come back in ONE job (tagged union) instead of
+        // one collect per side — the two separate collects cost
+        // ~250 + ~400 ms per projection at sf0.1, paid by every
+        // gds entry. Messages and semantics are unchanged.
+        if (nodeSpec.isDefined || relSpec.isDefined) {
+          val sides =
+            (if (nodeSpec.isDefined)
+              Seq(graph.nodes.select(lit("n").as("side"),
+                col("label").as("v"))) else Nil) ++
+            (if (relSpec.isDefined)
+              Seq(graph.edges.select(lit("r").as("side"),
+                col("relType").as("v"))) else Nil)
+          // bounded: schema-bounded distinct label/relType sets
+          val known = sides.reduce(_ unionByName _).distinct().collect()
+            .map(r => (r.getString(0), r.getString(1)))
+          val knownLabels = known.collect { case ("n", v) => v }.toSet
+          val knownRels = known.collect { case ("r", v) => v }.toSet
+          nodeSpec.foreach { ls =>
+            val bad = ls.filterNot(knownLabels)
+            require(bad.isEmpty, s"node projection references unknown " +
+              s"label(s) ${bad.mkString(", ")} — store has " +
+              s"${knownLabels.toSeq.sorted.mkString(", ")}")
+          }
+          relSpec.foreach { rs =>
+            val bad = rs.filterNot(knownRels)
+            require(bad.isEmpty, s"relationship projection references " +
+              s"unknown type(s) ${bad.mkString(", ")} — store has " +
+              s"${knownRels.toSeq.sorted.mkString(", ")}")
+          }
+        }
+        val pn = nodeSpec.fold(graph.nodes)(ls =>
+          graph.nodes.filter(col("label").isin(ls: _*)))
+        // snapshot semantics: pin the projection now (GDS materializes
+        // the in-memory graph at project time); one pass each side.
+        // Through the iterCheckpoint seam (VERDICT r10 #7): default is
+        // localCheckpoint (fastest, non-reliable — executor loss kills
+        // the projection), spark.graft.iterCheckpoint=reliable routes
+        // the same pin through reliable checkpoint() so a long-lived
+        // projection survives executor loss on a real cluster.
+        import graft.analytics.IterCheckpoint.IterCheckpointOps
+        val snapN = pn.iterCheckpoint()
+        val pe0 = relSpec.fold(graph.edges)(rs =>
+          graph.edges.filter(col("relType").isin(rs: _*)))
+        // endpoint closure reads the PINNED node snapshot, not the
+        // unpinned store filter — the store-layer label filter would
+        // otherwise execute three times (round 16)
+        val pnIds = snapN.select(col("id"))
+        val pe = pe0
+          .join(pnIds.withColumnRenamed("id", "srcId"), Seq("srcId"),
+            "left_semi")
+          .join(pnIds.withColumnRenamed("id", "dstId"), Seq("dstId"),
+            "left_semi")
+        val snapE = pe.iterCheckpoint()
+        val proj = CypherSession.GdsProjection(PropertyGraph(snapN, snapE),
+          snapN.count(), snapE.count())
+        projections(name) = proj
+        spark.range(1).select(lit(name).as("graphName"),
+          lit(proj.nodeCount).as("nodeCount"),
+          lit(proj.relationshipCount).as("relationshipCount"))
+      case "gds.graph.list" =>
+        require(p.args.isEmpty || p.args == Seq("*"),
+          s"gds.graph.list takes no arguments, got ${p.args}")
+        val listed = projections.toSeq.map { case (n, pr) =>
+          (n, pr.nodeCount, pr.relationshipCount)
+        }.sortBy(_._1)
+        spark.createDataFrame(listed)
+          .toDF("graphName", "nodeCount", "relationshipCount")
+      case "gds.graph.drop" =>
+        require(p.args.size == 1, "gds.graph.drop takes exactly one " +
+          s"argument (the graph name), got ${p.args}")
+        val name = p.args.head match {
+          case s: String => s
+          case other => throw new IllegalArgumentException(
+            s"gds.graph.drop's graph name must be a string, got $other")
+        }
+        require(projections.remove(name).isDefined,
+          s"graph '$name' does not exist in the GDS graph catalog")
+        spark.range(1).select(lit(name).as("graphName"))
+      case "db.labels" =>
+        graph.nodes.select(col("label")).distinct().orderBy("label")
+      case "db.relationshipTypes" =>
+        graph.edges.select(col("relType").as("relationshipType"))
+          .distinct().orderBy("relationshipType")
+      case "db.propertyKeys" =>
+        // prop-map keys of both sides, PLUS each label's key property —
+        // stored in the `key` column, not the bag, but a property to any
+        // Cypher reader. bounded: the label list is schema-sized (one row
+        // per label partition) — the collect is O(schema), never O(data).
+        import spark.implicits._
+        val labels = graph.nodes.select(col("label")).distinct()
+          .as[String].collect()
+        val keyNames = labels.map(l => allKeyProps.getOrElse(l, "name"))
+          .distinct.toSeq
+        graph.nodes.select(explode(map_keys(col("props"))).as("propertyKey"))
+          .union(graph.edges.select(explode(map_keys(col("props"))).as("propertyKey")))
+          .union(keyNames.toDF("propertyKey"))
+          .distinct().orderBy("propertyKey")
+      case "dbms.components" =>
+        spark.range(1).select(lit("graft-spark").as("name"),
+          array(lit("5.4.0")).as("versions"), lit("community").as("edition"))
+      // data-modeling introspection (the procedures schema-inference
+      // tools call): properties union the bag keys with each label's
+      // out-of-band KEY property; `mandatory` = present on EVERY node
+      // of the label (the key always is); all store properties are
+      // string-valued. Flattened vs Neo4j: nodeLabels is the single
+      // label (this store's nodes carry exactly one).
+      case "db.schema.nodeTypeProperties" =>
+        import spark.implicits._
+        val totals = pgraph.nodes.groupBy("label")
+          .agg(count(lit(1)).as("__n"))
+        val bagProps = pgraph.nodes
+          .select(col("label"),
+            explode(map_keys(col("props"))).as("propertyName"))
+          .groupBy("label", "propertyName").agg(count(lit(1)).as("__c"))
+          .join(totals, Seq("label"))
+          .select(col("label"), col("propertyName"),
+            (col("__c") === col("__n")).as("mandatory"))
+        // bounded: schema-sized collect — one row per label partition
+        val labels = totals.select(col("label")).as[String].collect().toSeq
+        val keyRows = labels
+          .map(l => (l, allKeyProps.getOrElse(l, "name"), true))
+          .toDF("label", "propertyName", "mandatory")
+        bagProps.unionByName(keyRows)
+          .groupBy("label", "propertyName")
+          .agg(max(col("mandatory")).as("mandatory"))
+          .select(concat(lit(":`"), col("label"), lit("`")).as("nodeType"),
+            col("label").as("nodeLabels"), col("propertyName"),
+            lit("String").as("propertyTypes"), col("mandatory"))
+          .orderBy("nodeType", "propertyName")
+      case "db.schema.relTypeProperties" =>
+        val rTotals = pgraph.edges.groupBy("relType")
+          .agg(count(lit(1)).as("__n"))
+        val rProps = pgraph.edges
+          .select(col("relType"),
+            explode(map_keys(col("props"))).as("propertyName"))
+          .groupBy("relType", "propertyName").agg(count(lit(1)).as("__c"))
+        val typed = rProps.join(rTotals, Seq("relType"))
+          .select(col("relType"), col("propertyName"),
+            lit("String").as("propertyTypes"),
+            (col("__c") === col("__n")).as("mandatory"))
+        // a relType with NO properties anywhere gets one null row, as
+        // Neo4j emits it
+        val bare = rTotals
+          .join(rProps.select("relType").distinct(), Seq("relType"),
+            "left_anti")
+          .select(col("relType"),
+            lit(null).cast("string").as("propertyName"),
+            lit(null).cast("string").as("propertyTypes"),
+            lit(null).cast("boolean").as("mandatory"))
+        typed.unionByName(bare)
+          .select(concat(lit(":`"), col("relType"), lit("`")).as("relType"),
+            col("propertyName"), col("propertyTypes"), col("mandatory"))
+          .orderBy("relType", "propertyName")
+      // APOC's schema census — the procedure LangChain's Neo4jGraph
+      // issues on EVERY refresh_schema (and refuses to init without).
+      // Three row shapes in ONE relation, exactly the triples the three
+      // LangChain statements filter on:
+      //   node properties:        elementType='node', type='STRING'
+      //   relationship topology:  elementType='node', type='RELATIONSHIP',
+      //                           label=start label, property=relType,
+      //                           other=[distinct end labels]
+      //   relationship props:     elementType='relationship', type='STRING'
+      // Everything is schema-cardinality aggregates over the store's
+      // partition columns — node/edge property inventories are one
+      // map_keys explode + grouped count each, topology is two
+      // broadcast-joinable id→label lookups + one groupBy; nothing here
+      // scales with anything but the schema at 100 TB.
+      case "apoc.meta.data" =>
+        import spark.implicits._
+        val noOther = typedlit(Seq.empty[String])
+        val nTotals = pgraph.nodes.groupBy("label")
+          .agg(count(lit(1)).as("count"))
+        // bag properties + each label's out-of-band key property (a
+        // property to every Cypher reader; count = all of the label)
+        val nBag = pgraph.nodes
+          .select(col("label"), explode(map_keys(col("props"))).as("property"))
+          .groupBy("label", "property").agg(count(lit(1)).as("count"))
+        val labelSeq = nTotals.select(col("label"), col("count"))
+          .as[(String, Long)].collect().toSeq // bounded: one row/label
+        val nKey = labelSeq
+          .map { case (l, n) => (l, allKeyProps.getOrElse(l, "name"), n) }
+          .toDF("label", "property", "count")
+        val nodeProps = nBag.unionByName(nKey)
+          .groupBy("label", "property").agg(max(col("count")).as("count"))
+          .select(col("label"), col("property"), col("count"),
+            lit("STRING").as("type"), lit("node").as("elementType"),
+            noOther.as("other"))
+        val srcL = pgraph.nodes
+          .select(col("id").as("srcId"), col("label").as("__sl"))
+        val dstL = pgraph.nodes
+          .select(col("id").as("dstId"), col("label").as("__dl"))
+        val topo = pgraph.edges
+          .join(srcL, Seq("srcId")).join(dstL, Seq("dstId"))
+          .groupBy(col("__sl").as("label"), col("relType"))
+          .agg(count(lit(1)).as("count"),
+            sort_array(collect_set(col("__dl"))).as("other"))
+          .select(col("label"), col("relType").as("property"), col("count"),
+            lit("RELATIONSHIP").as("type"), lit("node").as("elementType"),
+            col("other"))
+        val relProps = pgraph.edges
+          .select(col("relType"), explode(map_keys(col("props"))).as("property"))
+          .groupBy("relType", "property").agg(count(lit(1)).as("count"))
+          .select(col("relType").as("label"), col("property"), col("count"),
+            lit("STRING").as("type"), lit("relationship").as("elementType"),
+            noOther.as("other"))
+        nodeProps.unionByName(topo).unionByName(relProps)
+          .orderBy("elementType", "type", "label", "property")
+      // `SHOW INDEXES YIELD …` — Neo4j 5's FULL column set (list-typed
+      // labelsOrTypes/properties + the options map), bound into the
+      // pipeline by the parser as this pseudo-procedure. This is what
+      // Neo4jVector's retrieve_existing_index / retrieve_existing_fts_
+      // index statements filter on before creating an index. The bare
+      // `SHOW INDEXES` keeps its flat stable columns (c63); this form
+      // carries the Neo4j-shaped schema. Catalog-cardinality rows.
+      case "internal.show.indexes" =>
+        import org.apache.spark.sql.types._
+        import org.apache.spark.sql.Row
+        val lookup = Seq(Row("node_label_lookup", "ONLINE", 100.0,
+          "LOOKUP", "NODE", null, null, "token-lookup-1.0", null,
+          null, null))
+        val backing = constraintCatalog.toSeq.map {
+          case (n, (l, p)) => Row(n, "ONLINE", 100.0, "RANGE", "NODE",
+            Seq(l), Seq(p), "range-1.0", n, null, null)
+        }
+        def entKind(isRel: Boolean) = if (isRel) "RELATIONSHIP" else "NODE"
+        val vec = vectorIndexes.toSeq.map { case (n, d) =>
+          Row(n, "ONLINE", 100.0, "VECTOR", entKind(d.isRel), Seq(d.label),
+            Seq(d.prop), "vector-2.0", null, d.dim.toLong,
+            d.similarityFunction)
+        }
+        val ften = fulltextIndexes.toSeq.map { case (n, d) =>
+          Row(n, "ONLINE", 100.0, "FULLTEXT", entKind(d.isRel), Seq(d.label),
+            d.props, "fulltext-1.0", null, null, null)
+        }
+        val rng = rangeIndexes.toSeq.map { case (n, (l, p)) =>
+          Row(n, "ONLINE", 100.0, "RANGE", "NODE", Seq(l), Seq(p),
+            "range-1.0", null, null, null)
+        }
+        val showSchema = StructType(Seq(
+          StructField("name", StringType), StructField("state", StringType),
+          StructField("populationPercent", DoubleType),
+          StructField("type", StringType),
+          StructField("entityType", StringType),
+          StructField("labelsOrTypes", ArrayType(StringType)),
+          StructField("properties", ArrayType(StringType)),
+          StructField("indexProvider", StringType),
+          StructField("owningConstraint", StringType),
+          StructField("__dims", LongType),
+          StructField("__simfn", StringType)))
+        import scala.jdk.CollectionConverters._
+        spark.createDataFrame(
+            (lookup ++ backing ++ vec ++ ften ++ rng).asJava, showSchema)
+          .select(col("name"), col("state"), col("populationPercent"),
+            col("type"), col("entityType"), col("labelsOrTypes"),
+            col("properties"), col("indexProvider"),
+            col("owningConstraint"),
+            struct(col("indexProvider"),
+              struct(col("__dims").as("vector.dimensions"),
+                col("__simfn").as("vector.similarity_function"))
+                .as("indexConfig")).as("options"))
+          .orderBy("name")
+      // GDS-style algorithm procedures: the analytics engine surfaced
+      // through Cypher CALL, the way Neo4j users actually invoke graph
+      // algorithms. Node identity is the KEY (internal ids are engine
+      // noise); pageRank scores ride x02's 6-dp quantization contract.
+      // A per-node stream that knows each node's internal id carries it
+      // too, so its .write persists by id; the binding projects it away.
+      case "gds.pageRank.stream" =>
+        graft.analytics.GraphAlgorithms.pageRank(pgraph, numIter = 10)
+          .select(col("id"), col("key"), round(col("rank"), 6).as("score"))
+      case "gds.wcc.stream" =>
+        // component identity = the min member key, engine-independent.
+        // GDS's weighted form: {relationshipWeightProperty, threshold}
+        // keeps only edges whose weight EXCEEDS the threshold (missing
+        // weights default to 1.0, the dijkstra convention) — the
+        // similarity-graph clustering idiom; threshold without a weight
+        // property is meaningless and rejects typed.
+        val wccWeight = p.confString("relationshipWeightProperty")
+        val wccThr = p.confDouble("threshold", Double.NegativeInfinity)
+        if (wccThr > Double.NegativeInfinity && wccWeight.isEmpty)
+          throw new IllegalArgumentException(s"${p.name}: {threshold} " +
+            "requires {relationshipWeightProperty} — an unweighted graph " +
+            "has nothing to threshold")
+        val wccGraph = wccWeight match {
+          case Some(prop) => pgraph.copy(edges = pgraph.edges.filter(
+            coalesce(element_at(col("props"), prop).cast("double"),
+              lit(1.0)) > wccThr))
+          case None => pgraph
+        }
+        val comps = graft.analytics.GraphAlgorithms.connectedComponents(wccGraph)
+        comps.join(
+            comps.groupBy("component").agg(min("key").as("componentKey")),
+            Seq("component"))
+          .select(col("id"), col("key"), col("componentKey"))
+      case "gds.scc.stream" =>
+        // DIRECTED components (wcc's directed twin): mutual-reachability
+        // classes, identity = the min member key
+        val comps = graft.analytics.GraphAlgorithms
+          .stronglyConnectedComponents(pgraph)
+        comps.join(
+            comps.groupBy("component").agg(min("key").as("componentKey")),
+            Seq("component"))
+          .select(col("id"), col("key"), col("componentKey"))
+      case "gds.degree.stream" =>
+        val deg = pgraph.edges.select(col("srcId").as("id"))
+          .union(pgraph.edges.select(col("dstId").as("id")))
+          .groupBy("id").agg(count(lit(1)).as("degree"))
+        pgraph.nodes.join(deg, Seq("id"), "left")
+          .select(col("id"), col("key"),
+            coalesce(col("degree"), lit(0L)).as("degree"))
+      // The r7 GDS quartet (VERDICT r7 #5) — every one runs the
+      // algorithm over the edge list mapped to node KEYS first, so all
+      // ordering-sensitive internals (pair canonicalization, label
+      // tie-breaks, md5-derived inits) are functions of the stable
+      // user-facing identity, never of internal id values.
+      case "gds.nodeSimilarity.stream" =>
+        // Jaccard over out-neighbor sets, BOUNDED BY DEFAULT exactly as
+        // GDS bounds it (VERDICT r8 #2 / ADVICE r8 #4): topK defaults to
+        // 10 (each node keeps its 10 most similar, both directions, ties
+        // to the smallest key), degreeCutoff defaults to 1 (nodes below
+        // the out-degree floor never enter the comparison), and
+        // similarityCutoff defaults to 1e-42 (GDS's >0 epsilon). The
+        // unbounded full n1 < n2 pair stream — Σdeg² rows by definition,
+        // the answer-set-bound reference shape — remains available as an
+        // EXPLICIT engine extension via {topK: 0}; it can no longer be
+        // produced by accident.
+        val degreeCutoff = p.confLong("degreeCutoff", 1L)
+        val simCutoff = p.confDouble("similarityCutoff", 1e-42)
+        val topK = p.confLong("topK", 10L)
+        require(topK >= 0,
+          s"nodeSimilarity topK must be >= 0 (0 = full pair stream), got $topK")
+        val base = edgeKeys
+        val filtered =
+          if (degreeCutoff <= 1L) base
+          else {
+            val deg = base.dropDuplicates()
+              .groupBy("src").agg(count(lit(1)).as("__deg"))
+            base.join(deg.filter(col("__deg") >= degreeCutoff).select("src"),
+              Seq("src"), "left_semi")
+          }
+        if (topK > 0)
+          // WORK-bounded exact top-k (r9): the hub members that make the
+          // full pair stream Σdeg² take a closed-form window path instead
+          // of the intersection join, so the sf10 row exists — semantics
+          // pinned equal to the naive window form by GraphAlgorithmsSpec
+          graft.analytics.GraphAlgorithms
+            .nodeSimilarityTopK(filtered, topK.toInt, minScore = simCutoff)
+        else
+          graft.analytics.GraphAlgorithms
+            .nodeSimilarity(filtered, minScore = simCutoff)
+            .select(col("n1").as("key1"), col("n2").as("key2"),
+              col("jaccard").as("similarity"))
+      case "gds.labelPropagation.stream" =>
+        // deterministic synchronous LPA, min-key tie break (x15's
+        // contract); config {maxIterations: n} sets the fixed round
+        // budget — default 10, matching GDS (ADVICE r8 #4; was 2);
+        // edgeless nodes stay their own singleton community, matching
+        // GDS's all-nodes output
+        val lp = graft.analytics.GraphAlgorithms
+          .labelPropagation(edgeKeys,
+            rounds = p.confLong("maxIterations", 10L).toInt)
+        pgraph.nodes.select(col("key"))
+          .join(lp.withColumnRenamed("id", "key"), Seq("key"), "left")
+          .select(col("key"),
+            coalesce(col("community"), col("key")).as("communityKey"))
+      case "gds.fastRP.stream" =>
+        // portable md5 ±1-sparse init over the key strings, integer
+        // propagation hops (x18's exact-integer posture). GDS has NO
+        // default embeddingDimension (it is a mandatory parameter), so
+        // the unconfigured form is rejected rather than silently using
+        // a geometry a user could mistake for GDS output (ADVICE r8 #4).
+        require(p.has("embeddingDimension"),
+          "gds.fastRP.stream requires {embeddingDimension: n} — GDS has " +
+            "no default dimension; pass it explicitly (YIELD surface " +
+            "covers e0..e3, i.e. embeddingDimension 4)")
+        // the registered YIELD schema is FIXED at key,e0..e3 — any other
+        // dimension would either fail later with a raw unresolved-column
+        // error (dim<4) or silently drop columns (dim>4); reject typed
+        // instead (ADVICE r9 #5)
+        val fastRpDim = p.confLong("embeddingDimension", 4L)
+        require(fastRpDim == 4L,
+          s"gds.fastRP.stream yields the fixed columns e0..e3, so " +
+            s"embeddingDimension must be 4 (got $fastRpDim) — other " +
+            "dimensions are not representable in the registered YIELD " +
+            "schema")
+        graft.analytics.GraphAlgorithms
+          .fastRPEmbedding(edgeKeys,
+            dim = fastRpDim.toInt,
+            rounds = p.confLong("iterations", 2L).toInt)
+          .withColumnRenamed("id", "key")
+      case "gds.hits.stream" =>
+        // exact-integer rounds + end-only normalization (x19). GDS's
+        // default hitsIterations=20 is not replayable in the exact-
+        // integer design (authority terms grow as deg^(2r) and overflow
+        // 64 bits long before 20 rounds), so the round budget must be
+        // explicit — the unconfigured form is rejected instead of
+        // returning tiny-geometry output a user could mistake for
+        // GDS-equivalent (ADVICE r8 #4).
+        require(p.has("hitsIterations"),
+          "gds.hits.stream requires {hitsIterations: n} — the engine " +
+            "computes exact-integer rounds (end-only normalization); " +
+            "GDS's default 20 is not representable, choose the budget " +
+            "explicitly (e.g. {hitsIterations: 2})")
+        graft.analytics.GraphAlgorithms.hits(edgeKeys,
+            rounds = p.confLong("hitsIterations", 2L).toInt)
+          .withColumnRenamed("id", "key")
+      // ---- triangle census (GDS requires UNDIRECTED orientation for
+      // these; the engine takes the undirected simple view of the edge
+      // list — direction and parallel edges ignored, as gds.graph.
+      // project's UNDIRECTED projection would). Kernel is join-only
+      // (canonical a<b<c listing), never a cartesian.
+      case "gds.triangleCount.stream" =>
+        val t = graft.analytics.GraphAlgorithms.triangleStats(edgeKeys)
+        pgraph.nodes.select(col("key"))
+          .join(t.withColumnRenamed("node", "key"), Seq("key"), "left")
+          .select(col("key"),
+            coalesce(col("triangles"), lit(0L)).as("triangleCount"))
+      case "gds.localClusteringCoefficient.stream" =>
+        val t = graft.analytics.GraphAlgorithms.triangleStats(edgeKeys)
+        pgraph.nodes.select(col("key"))
+          .join(t.withColumnRenamed("node", "key"), Seq("key"), "left")
+          .select(col("key"),
+            coalesce(col("coefficient"), lit(0.0))
+              .as("localClusteringCoefficient"))
+      // ---- path-based centralities + coreness (all over the UNDIRECTED
+      // simple view, the triangle family's posture). These are the GDS
+      // procedures whose cost is inherently super-linear in component
+      // size (all-pairs / per-source BFS state): the PROJECTION is the
+      // scale knob — exactly GDS's own in-memory-graph contract — and
+      // betweenness additionally takes {samplingSize} so the source set,
+      // not |V|, bounds the (source, vertex) state.
+      case "gds.betweenness.stream" =>
+        // Sampled Brandes (x12's machinery): {samplingSize: K} picks the
+        // K md5-lowest node keys as sources — DETERMINISTIC where GDS
+        // samples randomly (documented divergence; reproducibility is
+        // this engine's contract) — and rescales by |V|/K, the standard
+        // unbiased estimator. Unconfigured = exact all-sources Brandes
+        // (GDS's default; O(V·E) — sample at scale). BFS truncation
+        // fails loudly: a silently depth-capped score would under-count.
+        val nNodes = pgraph.nodes.count()
+        val k = p.confLong("samplingSize", 0L)
+        require(k >= 0, s"samplingSize must be >= 0 (0 = exact), got $k")
+        val sampled = k > 0L && k < nNodes
+        val sources =
+          if (sampled)
+            pgraph.nodes.select(col("key"))
+              .orderBy(md5(col("key")), col("key")).limit(k.toInt)
+          else pgraph.nodes.select(col("key"))
+        val scale = if (sampled) nNodes.toDouble / k else 1.0
+        val bc = graft.analytics.GraphAlgorithms.betweennessFromSources(
+          edgeKeys, sources, maxDepth = 100, requireExhausted = true)
+        pgraph.nodes.select(col("key"))
+          .join(bc.withColumnRenamed("id", "key"), Seq("key"), "left")
+          .select(col("key"),
+            round(coalesce(col("betweenness"), lit(0.0)) * lit(scale), 6)
+              .as("score"))
+      case "gds.closeness.stream" | "gds.closeness.harmonic.stream" =>
+        // one all-pairs hop-distance table serves both variants:
+        //   closeness  score(u)     = r(u) / Σ_v d(u,v)   (0 if isolated)
+        //   harmonic   centrality(u) = Σ_v 1/d(u,v) / (|V|-1)
+        // r(u) = |{v : reachable, v != u}| — the reachable-set form that
+        // stays defined on disconnected graphs. 6-dp pinned (x10's float
+        // posture: Σ 1/d association order cannot flip the hash).
+        val nNodes = pgraph.nodes.count()
+        val dists = graft.analytics.GraphAlgorithms.hopDistances(
+          pgraph.nodes.select(col("key")),
+          edgeKeys.unionByName(edgeKeys.select(col("dst").as("src"),
+            col("src").as("dst"))))
+        val agg = dists.groupBy(col("s").as("key"))
+          .agg(count(lit(1)).as("__r"), sum("dist").as("__sd"),
+            sum(lit(1.0) / col("dist")).as("__h"))
+        val joined = pgraph.nodes.select(col("key")).join(agg, Seq("key"), "left")
+        if (p.name == "gds.closeness.stream")
+          joined.select(col("key"),
+            when(col("__sd").isNull, lit(0.0))
+              .otherwise(round(col("__r").cast("double") /
+                col("__sd").cast("double"), 6)).as("score"))
+        else
+          joined.select(col("key"),
+            round(coalesce(col("__h"), lit(0.0)) /
+              lit(math.max(nNodes - 1L, 1L).toDouble), 6).as("centrality"))
+      case "gds.kcore.stream" =>
+        // full k-core decomposition (coreness per node) by iterated
+        // neighborhood h-index — converges to the peel answer without a
+        // k-by-k ladder; non-convergence inside the round budget fails
+        // loudly (see GraphAlgorithms.coreDecomposition's depth note)
+        graft.analytics.GraphAlgorithms
+          .coreDecomposition(pgraph.nodes.select(col("key")), edgeKeys)
+          .withColumnRenamed("id", "key")
+          .select(col("key"), col("coreValue"))
+      case "gds.louvain.stream" =>
+        // modularity-optimizing community detection — DETERMINISTIC
+        // single-level synchronous local moving with exact integer gain
+        // comparisons and min-label ties (classic Louvain is sequential
+        // and multi-level; this is the labelPropagation-style
+        // pin-the-nondeterminism trade, documented divergence).
+        // {maxIterations: n} bounds the rounds (default 10, GDS's);
+        // community identity = min member key. Edgeless nodes are their
+        // own singleton community, matching GDS's all-nodes output.
+        graft.analytics.GraphAlgorithms.louvainLocalMoving(
+            pgraph.nodes.select(col("key")), edgeKeys,
+            rounds = p.confLong("maxIterations", 10L).toInt)
+          .select(col("id").as("key"), col("community").as("communityKey"))
+      // ---- write mode (the persist half of the GDS lifecycle): run the
+      // matching .stream over the same projection and config, then write
+      // its one value column, as a string, into the STORE's property bag —
+      // exactly the projected node set, as GDS writes it, so write-then-
+      // MATCH reads what stream yields. A stream that carries `id` writes
+      // by id; the others resolve their node keys. The store mutation is
+      // one set-oriented left join + map rewrite (never per-row), pinned
+      // with the same snapshot posture as gds.graph.project.
+      case w if w.startsWith("gds.") && w.endsWith(".write") =>
+        val wp = p.confString("writeProperty").getOrElse(
+          throw new IllegalArgumentException(s"$w requires " +
+            "{writeProperty: '…'} — GDS has no default write property"))
+        val streamed = rowsOf(w.stripSuffix(".write") + ".stream")
+        val value = col(streamed.columns.filterNot(Set("id", "key")).head)
+        val byId =
+          if (streamed.columns.contains("id")) streamed
+          else pgraph.nodes.select(col("id"), col("key"))
+            .join(streamed, Seq("key"))
+        // componentCount / communityCount: distinct written values
+        val distinct = proc.yields.find(_.endsWith("Count"))
+          .map(_ => streamed.select(value).distinct().count())
+        val written = writeNodeProperty(wp,
+          byId.select(col("id"), value.cast("string").as("__wval")))
+        spark.range(1).select(proc.yields.map {
+          case c @ "nodePropertiesWritten" => lit(written).as(c)
+          case c @ "writeProperty" => lit(wp).as(c)
+          case c => lit(distinct.get).as(c)
+        }: _*)
+      // ---- single-source shortest paths (GDS's dijkstra surface).
+      // Engine form: frontier-only relaxation to CONVERGENCE (delta
+      // Bellman-Ford — each round's shuffle carries only the improving
+      // edge set; with non-negative weights the fixpoint IS the dijkstra
+      // answer). Weights are exact integers from a relationship property
+      // ({relationshipWeightProperty}; absent → every edge costs 1), so
+      // totalCost hashes without a float contract.
+      case "gds.allShortestPaths.dijkstra.stream" |
+           "gds.shortestPath.dijkstra.stream" =>
+        val srcKey = p.confString("sourceNode").getOrElse(
+          throw new IllegalArgumentException(
+            s"${p.name} requires {sourceNode: " +
+              "'<key>'} — the source node's key property value"))
+        // the source→target form additionally requires targetNode and
+        // returns exactly that row (absent from the result = unreachable,
+        // as GDS returns an empty stream)
+        val targetKey: Option[String] =
+          if (p.name == "gds.shortestPath.dijkstra.stream")
+            Some(p.confString("targetNode").getOrElse(
+              throw new IllegalArgumentException(
+                "gds.shortestPath.dijkstra.stream requires {targetNode: " +
+                  "'<key>'} — use gds.allShortestPaths.dijkstra.stream " +
+                  "for the full single-source result")))
+          else None
+        val wProp = p.confString("relationshipWeightProperty")
+        val srcIds = pgraph.nodes.filter(col("key") === srcKey)
+          .select(col("id")).limit(2).collect()
+        require(srcIds.length == 1,
+          s"sourceNode '$srcKey' matches ${srcIds.length} node(s) in the " +
+            "graph — it must resolve to exactly one")
+        val wCol = wProp match {
+          case Some(prop) => coalesce(
+            element_at(col("props"), prop).cast("long"), lit(1L))
+          case None => lit(1L)
+        }
+        val edges = pgraph.edges.select(col("srcId").as("src"),
+          col("dstId").as("dst"), wCol.as("w"))
+        // an EXPLICIT {maxIterations: n} selects the bounded-relaxation
+        // form (paths of ≤ n edges — x07's replayable semantics, the
+        // form an oracle can recompute); unconfigured, the engine runs
+        // frontier rounds to the fixpoint, which for non-negative
+        // weights is the exact dijkstra answer
+        val dist =
+          if (p.has("maxIterations"))
+            graft.analytics.GraphAlgorithms.weightedSSSP(edges,
+              srcIds.head.getLong(0),
+              rounds = p.confLong("maxIterations", 6L).toInt)
+          else
+            graft.analytics.GraphAlgorithms.weightedSSSPConverged(edges,
+              srcIds.head.getLong(0), maxRounds = 100)
+        val full = dist.join(pgraph.nodes.select(col("id").as("node"),
+            col("key").as("targetKey")), Seq("node"))
+          .select(lit(srcKey).as("sourceKey"), col("targetKey"),
+            col("dist").as("totalCost"))
+        targetKey.fold(full)(t => full.filter(col("targetKey") === t))
+      // ---- index query procedures (the GraphRAG surface). Vector:
+      // driver-side sign-LSH bucketing of the ONE query vector (96 dot
+      // products), candidates come off the snapshot as a literal
+      // 8-way bucket-equality filter pushed into the scan — no join, no
+      // shuffle except the top-k. Exact cosine re-scores candidates;
+      // score = (1 + cos)/2, Neo4j's cosine score normalization, left-
+      // fold dot products so the doubles replay in the DuckDB oracle.
+      case vq @ ("db.index.vector.queryNodes" |
+          "db.index.vector.queryRelationships") =>
+        val wantRel = vq.endsWith("Relationships")
+        require(p.args.size == 3, s"$vq takes " +
+          s"(indexName, k, queryVector), got ${p.args.size} argument(s)")
+        val idxName = p.args.head match {
+          case s: String => s
+          case other => throw new IllegalArgumentException(
+            s"queryNodes' index name must be a string, got $other")
+        }
+        val k = p.args(1) match {
+          // any integral type (ADVICE r11 #3): a JVM-built params map
+          // naturally carries Int where the parser produces Long
+          case l: Long if l > 0 => l.toInt
+          case i: Int if i > 0 => i
+          case other => throw new IllegalArgumentException(
+            s"queryNodes' k must be a positive integer, got $other")
+        }
+        val qv: Array[Double] = p.args(2) match {
+          case s: Seq[_] => s.map {
+            case d: Double => d
+            case f: Float => f.toDouble
+            case i: Int => i.toDouble
+            case l: Long => l.toDouble
+            case other => throw new IllegalArgumentException(
+              s"query vector components must be numeric, got $other")
+          }.toArray
+          case other => throw new IllegalArgumentException(
+            "queryNodes' query vector must be a list parameter, got " +
+              s"$other")
+        }
+        val vidx = vectorIndexes.getOrElse(idxName,
+          throw new IllegalArgumentException(
+            s"vector index '$idxName' does not exist — SHOW VECTOR " +
+              s"INDEXES lists ${vectorIndexes.keys.mkString(", ")}"))
+        // entity-kind check: a NODE index serves queryNodes, a
+        // RELATIONSHIP index serves queryRelationships — never both
+        if (vidx.isRel != wantRel) throw new IllegalArgumentException(
+          s"vector index '$idxName' indexes " +
+            (if (vidx.isRel) "RELATIONSHIP properties — query it with " +
+              "db.index.vector.queryRelationships"
+             else "NODE properties — query it with " +
+              "db.index.vector.queryNodes"))
+        require(qv.length == vidx.dim,
+          s"query vector has ${qv.length} dimensions; index '$idxName' " +
+            s"expects ${vidx.dim}")
+        val euclidean = vidx.similarityFunction == "euclidean"
+        var qn2 = 0.0
+        qv.foreach(x => qn2 += x * x)
+        // cosine is undefined at zero norm; euclidean legally queries
+        // from the origin
+        if (!euclidean)
+          require(qn2 > 0.0, "query vector must have a nonzero norm")
+        val qn = math.sqrt(qn2)
+        // bucket the query vector driver-side with the SAME plane family
+        // the snapshot used (bit i of table t set iff plane·x >= 0)
+        val planes = graft.functions.DedupKernels.lshPlanes(
+          CypherSession.VectorLshTables, CypherSession.VectorLshBits,
+          vidx.dim)
+        val qb = Array.tabulate(CypherSession.VectorLshTables) { t =>
+          var b = 0L
+          var i = 0
+          while (i < CypherSession.VectorLshBits) {
+            var dot = 0.0
+            var j = 0
+            while (j < vidx.dim) { dot += planes(t)(i)(j) * qv(j); j += 1 }
+            if (dot >= 0.0) b |= 1L << i
+            i += 1
+          }
+          b
+        }
+        val bucketHit = (0 until CypherSession.VectorLshTables)
+          .map(t => element_at(col("bks"), t + 1) === lit(qb(t)))
+          .reduce(_ || _)
+        val cand = vectorServe(idxName, vidx) match {
+          case Left(data) =>
+            // small population: the pinned in-memory frame, literal
+            // bucket-equality filter — a broadcast-scale scan
+            data.filter(bucketHit)
+              .select(col("node"), col("emb"), col("nrm"), col("key"))
+          case Right(sv) =>
+            // persisted layout (VERDICT r11 #2): one partition-pruned
+            // probe per table — the literal pbh prunes directories, the
+            // pushed bucket equality prunes pages — so per-query IO
+            // tracks CANDIDATES, never corpus size. A row colliding in
+            // several tables is kept only at its FIRST matching table
+            // (literal conjunction per probe; no distinct, no shuffle).
+            val probes = (0 until CypherSession.VectorLshTables).map { t =>
+              val pbh = t * 64 + (qb(t) >> 6).toInt
+              var pr = sv.frame
+                .filter(col("pbh") === lit(pbh) && col("t") === lit(t) &&
+                  col("bucket") === lit(qb(t)))
+              (0 until t).foreach { tp =>
+                pr = pr.filter(element_at(col("bks"), tp + 1) =!= lit(qb(tp)))
+              }
+              pr.select(col("id"), col("key"), col("node"), col("emb"),
+                col("nrm"), col("gen"))
+            }.reduce(_ unionByName _)
+            // tombstone mask (round 14): a compacted-over row is dead —
+            // its id carries a (pinned, broadcast) tombstone and its
+            // generation predates it; the superseding rows live in the
+            // appended generation's files of the same pruned partitions
+            val live =
+              if (sv.tombstones == null) probes
+              else probes
+                .join(broadcast(sv.tombstones), Seq("id"), "left")
+                .filter(col("dropBelow").isNull ||
+                  col("gen") >= col("dropBelow"))
+                .drop("dropBelow")
+            // setter patches live in the small pinned overlay: its ids
+            // mask the layout's stale rows, its rows probe in memory
+            val masked = (
+              if (sv.overlayIds == null) live
+              else live.join(broadcast(sv.overlayIds), Seq("id"),
+                "left_anti")
+            ).drop("gen")
+            val all =
+              if (sv.overlay == null) masked
+              else masked.unionByName(sv.overlay.filter(bucketHit)
+                .select(col("id"), col("key"), col("node"), col("emb"),
+                  col("nrm")))
+            all.select(col("node"), col("emb"), col("nrm"), col("key"))
+        }
+        val qlit = typedlit(qv.toSeq)
+        val dot = aggregate(zip_with(col("emb"), qlit, (a, b) => a * b),
+          lit(0.0), (acc, x) => acc + x)
+        // Neo4j's score normalizations, left-fold arithmetic so the
+        // doubles replay in the DuckDB oracle: cosine → (1 + cos)/2,
+        // euclidean → 1 / (1 + squared distance)
+        val score =
+          if (euclidean) {
+            val sqd = aggregate(
+              zip_with(col("emb"), qlit, (a, b) => (a - b) * (a - b)),
+              lit(0.0), (acc, x) => acc + x)
+            lit(1.0) / (lit(1.0) + sqd)
+          } else (lit(1.0) + dot / (col("nrm") * lit(qn))) / lit(2.0)
+        cand
+          .select(col("node"), score.as("score"), col("key"))
+          // tie-break at the k boundary (ADVICE r11 #1): (length, lex)
+          // on the key string IS numeric order for canonically-rendered
+          // nonnegative integer keys — the collation the DuckDB oracles
+          // use (ORDER BY vec_id) — and stays total for arbitrary keys,
+          // so exact score ties (duplicate embeddings) select the same
+          // rows in both engines
+          .orderBy(col("score").desc, length(col("key")), col("key"))
+          .limit(k)
+          .select(col("node").as(if (wantRel) "relationship" else "node"),
+            col("score"))
+      // the embedding SETTER (Neo4j 5.13+; LangChain's add_embeddings
+      // issues it per chunk). One set-oriented join writes the rendered
+      // vector into every matched node's bag — the statement-at-a-time
+      // form, exactly the reference's per-record write style; the write
+      // counter yields where Neo4j returns void (additive divergence).
+      // Documented divergence: property reads LATER IN THE SAME
+      // statement observe the pre-write bag (the pipeline's bindings
+      // are compiled against the statement-start graph); read the
+      // written value back with a fresh MATCH, as the lifecycle does.
+      case "db.create.setNodeVectorProperty" =>
+        require(p.args.size == 3, "db.create.setNodeVectorProperty " +
+          s"takes (node, key, vector), got ${p.args.size} argument(s)")
+        val nodeVar = p.args.head match {
+          case ProcVarArg(v) => v
+          case other => throw new IllegalArgumentException(
+            "setNodeVectorProperty's first argument must be a bound " +
+              s"node variable, got $other")
+        }
+        val keyName = p.args(1) match {
+          case s: String => s
+          case other => throw new IllegalArgumentException(
+            s"setNodeVectorProperty's key must be a string, got $other")
+        }
+        require(df != null && df.columns.contains(s"${nodeVar}__id"),
+          s"setNodeVectorProperty targets unbound node variable '$nodeVar'")
+        // the vector slot: a resolved $parameter list renders once
+        // driver-side (the per-record form); a `row.prop` expression
+        // reads per pipeline row (a map/struct binding or a stored
+        // rendered string) — in both cases the write itself is ONE
+        // set-oriented batch through the shared path.
+        val (wvalCol, conflicts) = p.args(2) match {
+          case s: Seq[_] => (lit(renderVectorSeq(s)), false)
+          case ProcPropArg(rv, pp) =>
+            val c = df.schema.fields.find(_.name == rv)
+              .map(_.dataType) match {
+              case Some(_: org.apache.spark.sql.types.StructType) =>
+                col(rv).getField(pp).cast("string")
+              case Some(_: org.apache.spark.sql.types.MapType) =>
+                col(rv).getItem(pp).cast("string")
+              case Some(_) => throw new IllegalArgumentException(
+                s"setNodeVectorProperty's $rv.$pp needs a struct/map-" +
+                  "bound row variable")
+              case None if df.columns.contains(s"${rv}__id") =>
+                element_at(col(s"${rv}__props"), pp)
+              case None => throw new IllegalArgumentException(
+                s"setNodeVectorProperty references unbound variable '$rv'")
+            }
+            (c, true)
+          case other => throw new IllegalArgumentException(
+            "setNodeVectorProperty's vector must be a list parameter " +
+              s"or a row-bound var.prop expression, got $other")
+        }
+        val written = setNodeVectorPropertyBatch(keyName,
+          df.select(col(s"${nodeVar}__id").as("id"), wvalCol.as("__wval")),
+          checkConflicts = conflicts)
+        spark.range(1).select(lit(written).as("nodePropertiesWritten"))
+      // the PROCEDURE form of vector-index creation (pre-5.15 Neo4j; the
+      // statement LangChain issued for years — VERDICT r11 #3). Pure
+      // alias onto the CREATE VECTOR INDEX machinery: same validation,
+      // same eager population, same SHOW INDEXES row.
+      case "db.index.vector.createNodeIndex" =>
+        require(p.args.size == 5, "db.index.vector.createNodeIndex " +
+          "takes (indexName, label, propertyKey, vectorDimension, " +
+          s"vectorSimilarityFunction), got ${p.args.size} argument(s)")
+        def strArg(i: Int, what: String): String = p.args(i) match {
+          case s: String => s
+          case other => throw new IllegalArgumentException(
+            s"createNodeIndex's $what must be a string, got $other")
+        }
+        val dim = p.args(3) match {
+          case l: Long if l > 0 && l <= 4096 => l.toInt
+          case i: Int if i > 0 && i <= 4096 => i
+          case other => throw new IllegalArgumentException(
+            "createNodeIndex's vectorDimension must be a positive " +
+              s"integer (<= 4096), got $other")
+        }
+        executeCreateVectorIndex(CreateVectorIndex(
+          Some(strArg(0, "indexName")), ifNotExists = false,
+          strArg(1, "label"), strArg(2, "propertyKey"), dim,
+          strArg(4, "vectorSimilarityFunction").toLowerCase)) match {
+          case CypherRows(r) => r
+          case other => throw new IllegalStateException(
+            s"unexpected createNodeIndex result $other")
+        }
+      case fq @ ("db.index.fulltext.queryNodes" |
+          "db.index.fulltext.queryRelationships") =>
+        val ftWantRel = fq.endsWith("Relationships")
+        require(p.args.size == 2, "db.index.fulltext.queryNodes takes " +
+          s"(indexName, query), got ${p.args.size} argument(s)")
+        val ftName = p.args.head match {
+          case s: String => s
+          case other => throw new IllegalArgumentException(
+            s"queryNodes' index name must be a string, got $other")
+        }
+        val ftQuery = p.args(1) match {
+          case s: String => s
+          case other => throw new IllegalArgumentException(
+            s"the fulltext query must be a string, got $other")
+        }
+        val fidx = fulltextIndexes.getOrElse(ftName,
+          throw new IllegalArgumentException(
+            s"fulltext index '$ftName' does not exist — SHOW FULLTEXT " +
+              s"INDEXES lists ${fulltextIndexes.keys.mkString(", ")}"))
+        if (fidx.isRel != ftWantRel) throw new IllegalArgumentException(
+          s"fulltext index '$ftName' indexes " +
+            (if (fidx.isRel) "RELATIONSHIP properties — query it with " +
+              "db.index.fulltext.queryRelationships"
+             else "NODE properties — query it with " +
+              "db.index.fulltext.queryNodes"))
+        // the options map (Neo4j's third argument; Neo4jVector's hybrid
+        // template passes {limit: $k}) — limit truncates the scored,
+        // score-ordered rows
+        val ftRes0 = fulltextQuery(ftName, fidx, ftQuery)
+        val ftRes =
+          if (ftWantRel) ftRes0.withColumnRenamed("node", "relationship")
+          else ftRes0
+        val ftLim = p.confLong("limit", -1L)
+        if (ftLim >= 0L) ftRes.limit(ftLim.toInt) else ftRes
+      case other => throw new IllegalArgumentException(s"unknown procedure '$other'")
+    }
+    p.name match {
+      // APOC's data-driven merges — LangChain Neo4jGraph.
+      // add_graph_documents imports LLM-extracted knowledge graphs with
+      // these (labels/types arrive WITH the data): `UNWIND $data AS row
+      // CALL apoc.merge.node([row.type], {id: row.id}, row.properties,
+      // {}) YIELD node …`. Execution is SET-ORIENTED: the whole driving
+      // batch pays one existence probe + one store merge (+ one edge
+      // merge for relationships) — never a per-row loop. The yielded
+      // node/rel binds PER DRIVING ROW (a struct carrying label/key),
+      // so chained merge.node → merge.relationship composes in one
+      // statement exactly as LangChain emits it.
+      case mn @ ("apoc.merge.node" | "apoc.merge.relationship") =>
+        import org.apache.spark.sql.types.{MapType, StructType}
+        require(df != null,
+          s"$mn needs driving rows — UNWIND the $$data batch first")
+        def rowColOf(rv: String, pp: String): Column =
+          df.schema.fields.find(_.name == rv).map(_.dataType) match {
+            case Some(_: StructType) => col(rv).getField(pp)
+            case Some(_: MapType) => col(rv).getItem(pp)
+            case Some(_) => throw new IllegalArgumentException(
+              s"$mn's $rv.$pp needs a struct/map-bound row variable")
+            case None if df.columns.contains(s"${rv}__id") =>
+              element_at(col(s"${rv}__props"), pp)
+            case None => throw new IllegalArgumentException(
+              s"$mn references unbound variable '$rv'")
+          }
+        def scalarArg(a: Any, what: String): Column = a match {
+          case s2: String => lit(s2)
+          case l: Long => lit(l).cast("string")
+          case Param(nm) => lit(params.getOrElse(nm,
+            throw new IllegalArgumentException(
+              s"missing parameter $$$nm")).toString)
+          case ProcPropArg(rv, pp) => rowColOf(rv, pp).cast("string")
+          case ProcVarArg(v) if scalarVars.contains(v) => col(v).cast("string")
+          case other => throw new IllegalArgumentException(
+            s"$mn's $what must be a string literal, a bound variable or " +
+              s"a row expression, got $other")
+        }
+        val emptyBag = typedlit(Map.empty[String, String])
+        def mapArg(a: Any, what: String): Column = a match {
+          case ProcMapArg(entries) if entries.isEmpty => emptyBag
+          case ProcMapArg(entries) => map(entries.flatMap { case (k, v) =>
+            Seq(lit(k), scalarArg(v, s"$what.$k")) }: _*)
+          case ProcPropArg(rv, pp) =>
+            df.schema.fields.find(_.name == rv).map(_.dataType) match {
+              case Some(st: StructType) if st.fieldNames.contains(pp) &&
+                  st(pp).dataType.isInstanceOf[MapType] =>
+                coalesce(col(rv).getField(pp), emptyBag)
+              case Some(_: StructType) => throw new IllegalArgumentException(
+                s"$mn's $what ($rv.$pp) must be a MAP-valued row field")
+              case _ => throw new IllegalArgumentException(
+                s"$mn's $what ($rv.$pp) needs struct-shaped driving rows " +
+                  "(a $data batch whose elements carry a nested " +
+                  "properties map)")
+            }
+          case m: scala.collection.Map[_, _] =>
+            if (m.isEmpty) emptyBag
+            else map(m.toSeq.flatMap { case (k, v) =>
+              Seq(lit(k.toString), lit(v match {
+                case null => null
+                case other => other.toString
+              })) }: _*)
+          case other => throw new IllegalArgumentException(
+            s"$mn's $what must be a map literal or a map-valued row " +
+              s"expression, got $other")
+        }
+        // dup-safe map merge (right wins) without knowing keys statically
+        def mergeBags(a: Column, b: Column): Column =
+          map_concat(map_filter(a, (k, _) => !map_contains_key(b, k)), b)
+        val alias = p.yields.headOption.map(_._2)
+          .getOrElse(if (mn == "apoc.merge.node") "node" else "rel")
+        import spark.implicits._
+        if (mn == "apoc.merge.node") {
+          require(p.args.size == 4, "apoc.merge.node takes (labels, " +
+            s"identProps, onCreateProps, onMatchProps), got ${p.args.size}")
+          val labelC = p.args.head match {
+            case items: Seq[_] =>
+              require(items.size == 1, "apoc.merge.node takes exactly ONE " +
+                "label — this store's nodes carry one label (the label " +
+                "IS the partition key)")
+              scalarArg(items.head, "label")
+            case other => throw new IllegalArgumentException(
+              s"apoc.merge.node's first argument is a label LIST, got $other")
+          }
+          val (keyName, keyC) = p.args(1) match {
+            case ProcMapArg(Seq((k, v))) =>
+              (k, scalarArg(v, s"identProps.$k"))
+            case ProcMapArg(es) => throw new IllegalArgumentException(
+              "apoc.merge.node's identProps must carry exactly ONE key " +
+                "property — the store's merge identity is (label, key); " +
+                s"got {${es.map(_._1).mkString(", ")}}")
+            case other => throw new IllegalArgumentException(
+              s"apoc.merge.node's identProps must be a map, got $other")
+          }
+          val onCreateC = mapArg(p.args(2), "onCreateProps")
+          val onMatchC = mapArg(p.args(3), "onMatchProps")
+          val parent = graph
+          // the onCreate/onMatch split needs an existence probe ONLY
+          // when the two payloads differ; LangChain's chained
+          // source/target merges pass `{}, {}` — identical either way,
+          // so the probe join (a pass over the store per CALL, and a
+          // plan layer every later action re-executes) is skipped
+          // (VERDICT r12 #3: three import merges used to pin the store
+          // separately; the probe was the per-statement pin)
+          def emptyMapA(a: Any): Boolean = a match {
+            case ProcMapArg(es) => es.isEmpty
+            case m: scala.collection.Map[_, _] => m.isEmpty
+            case _ => false
+          }
+          val needProbe = !(emptyMapA(p.args(2)) && emptyMapA(p.args(3)))
+          // ONE existence probe for the whole batch decides which
+          // property payload each row contributes (apoc's onCreate /
+          // onMatch split); then ONE set-oriented node merge
+          val batch =
+            if (!needProbe) df.select(labelC.as("label"), keyC.as("key"),
+              onCreateC.as("props"))
+            else df
+              .select(labelC.as("label"), keyC.as("key"),
+                onCreateC.as("__oc"), onMatchC.as("__om"))
+              .withColumn("__id",
+                graft.model.GraphSchema.stableId(col("label"), col("key")))
+              .join(parent.nodes.select(col("id").as("__id"),
+                lit(true).as("__ex")), Seq("__id"), "left")
+              .select(col("label"), col("key"),
+                when(col("__ex"), col("__om")).otherwise(col("__oc"))
+                  .as("props"))
+          graph = parent.mergeNodes(batch)
+          // register the data-driven merge identity so later MATCHes on
+          // the key property hit the key column (bounded: ontology-sized
+          // label set of the DRIVING rows — never through the store
+          // probe, whose join would re-execute the whole merge chain
+          // per CALL); lineage records exactly the touched labels
+          val labelsTouched = df.select(labelC.cast("string").as("label"))
+            .distinct().as[String].collect().toSet
+          labelsTouched.foreach { l =>
+            if (!allKeyProps.contains(l)) dynamicKeyProps(l) = keyName }
+          // the id delta likewise derives from the driving rows alone —
+          // the lineage plan must stay store-free so an index patch
+          // never re-executes the merge chain
+          recordWrite(parent, graph, labelsTouched, Set.empty,
+            df.select(graft.model.GraphSchema.stableId(
+              labelC.cast("string"), keyC.cast("string")).as("id"))
+              .distinct())
+          p.yields.foreach { case (c, _) => require(c == "node",
+            s"apoc.merge.node yields 'node', not '$c'") }
+          (df.withColumn(alias,
+            struct(labelC.as("label"), keyC.as("key"),
+              keyC.as(if (keyName == "label" || keyName == "key") s"__$keyName"
+                else keyName))), Seq(alias))
+        } else {
+          require(p.args.size == 5, "apoc.merge.relationship takes " +
+            "(startNode, relationshipType, identProps, props, endNode), " +
+            s"got ${p.args.size}")
+          def nodeRef(a: Any, what: String): (Column, Column) = a match {
+            case ProcVarArg(v) =>
+              if (df.columns.contains(s"${v}__id"))
+                (col(s"${v}__label"), col(s"${v}__key"))
+              else df.schema.fields.find(_.name == v).map(_.dataType) match {
+                case Some(st: StructType)
+                    if st.fieldNames.contains("label") &&
+                      st.fieldNames.contains("key") =>
+                  (col(v).getField("label"), col(v).getField("key"))
+                case _ => throw new IllegalArgumentException(
+                  s"apoc.merge.relationship's $what '$v' is not a node " +
+                    "binding (bind it with MATCH or apoc.merge.node)")
+              }
+            case other => throw new IllegalArgumentException(
+              s"apoc.merge.relationship's $what must be a bound node " +
+                s"variable, got $other")
+          }
+          val (sl, sk) = nodeRef(p.args.head, "start node")
+          val relC = scalarArg(p.args(1), "relationshipType")
+          val identC = mapArg(p.args(2), "identProps")
+          val propsC = mapArg(p.args(3), "props")
+          val (tl, tk) = nodeRef(p.args(4), "end node")
+          val parent = graph
+          // identProps distinguish PARALLEL relationships in apoc; this
+          // store keys edges on (src, dst, type), so ident entries fold
+          // into the property bag (documented divergence — one edge per
+          // triple, apoc's common case and LangChain's only case: {})
+          val batch = df.select(sl.cast("string").as("srcLabel"),
+            sk.cast("string").as("srcKey"),
+            tl.cast("string").as("dstLabel"), tk.cast("string").as("dstKey"),
+            relC.as("relType"), mergeBags(identC, propsC).as("props"))
+          graph = parent.mergeEdgesByKey(batch)
+          val typesTouched = batch.select(col("relType")).distinct()
+            // bounded: schema-bounded distinct relType set of one batch
+            .as[String].collect().toSet
+          recordWrite(parent, graph, Set.empty, typesTouched,
+            null,
+            // exact edge-pair delta (round 15): ids derive from the
+            // label+key identities the merge itself keys on
+            batch.select(
+              graft.model.GraphSchema.stableId(col("srcLabel"),
+                col("srcKey")).as("srcId"),
+              graft.model.GraphSchema.stableId(col("dstLabel"),
+                col("dstKey")).as("dstId")).distinct())
+          p.yields.foreach { case (c, _) => require(c == "rel",
+            s"apoc.merge.relationship yields 'rel', not '$c'") }
+          (df.withColumn(alias, struct(sk.as("srcKey"),
+            relC.as("relType"), tk.as("dstKey"))), Seq(alias))
+        }
+      case name =>
+        val yields =
+          if (p.yields.nonEmpty) p.yields else proc.yields.map(c => (c, c))
+        val selected =
+          rowsOf(name).select(yields.map { case (c, a) => col(c).as(a) }: _*)
+        (if (df == null) selected else df.crossJoin(selected), yields.map(_._2))
+    }
   }
 
   private def compileMatch(m: MatchStatement, params: Map[String, Any]): DataFrame = {
@@ -4065,1286 +5226,10 @@ final class CypherSession(
       scalarVars += lc.alias
     }
 
-    /** Built-in procedure call (`CALL db.labels() YIELD …`) — the
-      * schema-introspection set drivers and the browser issue on connect.
-      * Label/relType rows come off the store's partition columns (a
-      * partition listing at the scan, not a full-table distinct at 100 TB);
-      * propertyKeys unions the exploded prop-map keys of both sides. Rows
-      * are sorted for determinism (procedure result order is unspecified in
-      * Neo4j; a stable order costs nothing at schema cardinality). The
-      * yielded columns bind as ordinary scalars — every later clause
-      * (WHERE, WITH, RETURN, UNION) composes. */
-    def applyProc(p0: ProcCall): Unit = {
-      val spark = graph.nodes.sparkSession
-      // resolve $parameter positional arguments (the query-embedding slot
-      // of db.index.vector.queryNodes) and config values ({limit: $k} in
-      // Neo4jVector's hybrid template) against the statement's params
-      val p = p0.copy(
-        args = p0.args.map {
-          case Param(nm) => params.getOrElse(nm,
-            throw new IllegalArgumentException(s"missing parameter $$$nm"))
-          case a => a
-        },
-        config = p0.config.map {
-          case (k, Param(nm)) => k -> params.getOrElse(nm,
-            throw new IllegalArgumentException(s"missing parameter $$$nm"))
-          case kv => kv
-        })
-      // Graph-name first argument on the gds.*.stream family: the
-      // algorithm runs over the NAMED projection's snapshot instead of
-      // the whole store; an unknown name fails typed. Everything else
-      // takes no positional arguments (gds.graph.* validates its own).
-      val pgraph: PropertyGraph =
-        if (p.name.startsWith("gds.") &&
-            (p.name.endsWith(".stream") || p.name.endsWith(".write"))) {
-          require(p.args.size <= 1, s"${p.name} takes at most one " +
-            s"positional argument (a projected graph name), got ${p.args}")
-          p.args.headOption match {
-            case None => graph
-            case Some(name: String) =>
-              projections.getOrElse(name, throw new IllegalArgumentException(
-                s"graph '$name' does not exist in the GDS graph catalog — " +
-                  "project it first with CALL gds.graph.project(" +
-                  s"'$name', <nodeLabels>, <relTypes>)")).graph
-            case Some(other) => throw new IllegalArgumentException(
-              s"${p.name}'s first argument must be a graph name string, " +
-                s"got $other")
-          }
-        } else {
-          if (!p.name.startsWith("gds.graph.") &&
-              !p.name.startsWith("db.index.") &&
-              !p.name.startsWith("db.create.") &&
-              !p.name.startsWith("apoc.merge."))
-            require(p.args.isEmpty,
-              s"${p.name} takes no positional arguments, got ${p.args}")
-          graph
-        }
-      // edge list projected to node KEYS — the identity every gds.*
-      // procedure computes over (internal ids are engine noise)
-      def edgeKeys: DataFrame = pgraph.edges
-        .join(pgraph.nodes.select(col("id").as("srcId"), col("key").as("src")),
-          Seq("srcId"))
-        .join(pgraph.nodes.select(col("id").as("dstId"), col("key").as("dst")),
-          Seq("dstId"))
-        .select(col("src"), col("dst"))
-      // a '*'/label/label-list projection spec → None = all, Some = the set
-      def specSet(arg: Any, what: String): Option[Seq[String]] = arg match {
-        case "*" => None
-        case s: String => Some(Seq(s))
-        case items: Seq[_] =>
-          val ss = items.map {
-            case s: String if s != "*" => s
-            case other => throw new IllegalArgumentException(
-              s"a $what projection list takes plain $what strings, got $other")
-          }
-          require(ss.nonEmpty, s"a $what projection list cannot be empty")
-          Some(ss)
-        case other => throw new IllegalArgumentException(
-          s"a $what projection must be '*', a string or a string list, " +
-            s"got $other")
-      }
-      val rows: DataFrame = p.name match {
-        case "gds.graph.project" =>
-          // CALL gds.graph.project(name, nodeLabels, relTypes): snapshot
-          // a label/relType-filtered subgraph into the catalog. Specs
-          // are validated against the store's ACTUAL labels/relTypes
-          // (schema-bounded distincts) so a typo fails typed instead of
-          // projecting an empty graph; edges keep only those whose BOTH
-          // endpoints survive the node filter.
-          import spark.implicits._
-          require(p.args.size == 3, "gds.graph.project takes exactly " +
-            "(graphName, nodeProjection, relationshipProjection), got " +
-            s"${p.args.size} argument(s)")
-          val name = p.args.head match {
-            case s: String => s
-            case other => throw new IllegalArgumentException(
-              s"gds.graph.project's graph name must be a string, got $other")
-          }
-          require(!projections.contains(name),
-            s"graph '$name' already exists in the GDS graph catalog — " +
-              s"drop it first with CALL gds.graph.drop('$name')")
-          val nodeSpec = specSet(p.args(1), "label")
-          val relSpec = specSet(p.args(2), "relationship type")
-          // Round 16 (guide §1.2 — fewer actions): both schema-bounded
-          // distinct sets come back in ONE job (tagged union) instead of
-          // one collect per side — the two separate collects cost
-          // ~250 + ~400 ms per projection at sf0.1, paid by every
-          // gds entry. Messages and semantics are unchanged.
-          if (nodeSpec.isDefined || relSpec.isDefined) {
-            val sides =
-              (if (nodeSpec.isDefined)
-                Seq(graph.nodes.select(lit("n").as("side"),
-                  col("label").as("v"))) else Nil) ++
-              (if (relSpec.isDefined)
-                Seq(graph.edges.select(lit("r").as("side"),
-                  col("relType").as("v"))) else Nil)
-            // bounded: schema-bounded distinct label/relType sets
-            val known = sides.reduce(_ unionByName _).distinct().collect()
-              .map(r => (r.getString(0), r.getString(1)))
-            val knownLabels = known.collect { case ("n", v) => v }.toSet
-            val knownRels = known.collect { case ("r", v) => v }.toSet
-            nodeSpec.foreach { ls =>
-              val bad = ls.filterNot(knownLabels)
-              require(bad.isEmpty, s"node projection references unknown " +
-                s"label(s) ${bad.mkString(", ")} — store has " +
-                s"${knownLabels.toSeq.sorted.mkString(", ")}")
-            }
-            relSpec.foreach { rs =>
-              val bad = rs.filterNot(knownRels)
-              require(bad.isEmpty, s"relationship projection references " +
-                s"unknown type(s) ${bad.mkString(", ")} — store has " +
-                s"${knownRels.toSeq.sorted.mkString(", ")}")
-            }
-          }
-          val pn = nodeSpec.fold(graph.nodes)(ls =>
-            graph.nodes.filter(col("label").isin(ls: _*)))
-          // snapshot semantics: pin the projection now (GDS materializes
-          // the in-memory graph at project time); one pass each side.
-          // Through the iterCheckpoint seam (VERDICT r10 #7): default is
-          // localCheckpoint (fastest, non-reliable — executor loss kills
-          // the projection), spark.graft.iterCheckpoint=reliable routes
-          // the same pin through reliable checkpoint() so a long-lived
-          // projection survives executor loss on a real cluster.
-          import graft.analytics.IterCheckpoint.IterCheckpointOps
-          val snapN = pn.iterCheckpoint()
-          val pe0 = relSpec.fold(graph.edges)(rs =>
-            graph.edges.filter(col("relType").isin(rs: _*)))
-          // endpoint closure reads the PINNED node snapshot, not the
-          // unpinned store filter — the store-layer label filter would
-          // otherwise execute three times (round 16)
-          val pnIds = snapN.select(col("id"))
-          val pe = pe0
-            .join(pnIds.withColumnRenamed("id", "srcId"), Seq("srcId"),
-              "left_semi")
-            .join(pnIds.withColumnRenamed("id", "dstId"), Seq("dstId"),
-              "left_semi")
-          val snapE = pe.iterCheckpoint()
-          val proj = CypherSession.GdsProjection(PropertyGraph(snapN, snapE),
-            snapN.count(), snapE.count())
-          projections(name) = proj
-          spark.range(1).select(lit(name).as("graphName"),
-            lit(proj.nodeCount).as("nodeCount"),
-            lit(proj.relationshipCount).as("relationshipCount"))
-        case "gds.graph.list" =>
-          require(p.args.isEmpty || p.args == Seq("*"),
-            s"gds.graph.list takes no arguments, got ${p.args}")
-          val listed = projections.toSeq.map { case (n, pr) =>
-            (n, pr.nodeCount, pr.relationshipCount)
-          }.sortBy(_._1)
-          spark.createDataFrame(listed)
-            .toDF("graphName", "nodeCount", "relationshipCount")
-        case "gds.graph.drop" =>
-          require(p.args.size == 1, "gds.graph.drop takes exactly one " +
-            s"argument (the graph name), got ${p.args}")
-          val name = p.args.head match {
-            case s: String => s
-            case other => throw new IllegalArgumentException(
-              s"gds.graph.drop's graph name must be a string, got $other")
-          }
-          require(projections.remove(name).isDefined,
-            s"graph '$name' does not exist in the GDS graph catalog")
-          spark.range(1).select(lit(name).as("graphName"))
-        case "db.labels" =>
-          graph.nodes.select(col("label")).distinct().orderBy("label")
-        case "db.relationshipTypes" =>
-          graph.edges.select(col("relType").as("relationshipType"))
-            .distinct().orderBy("relationshipType")
-        case "db.propertyKeys" =>
-          // prop-map keys of both sides, PLUS each label's key property —
-          // stored in the `key` column, not the bag, but a property to any
-          // Cypher reader. bounded: the label list is schema-sized (one row
-          // per label partition) — the collect is O(schema), never O(data).
-          import spark.implicits._
-          val labels = graph.nodes.select(col("label")).distinct()
-            .as[String].collect()
-          val keyNames = labels.map(l => allKeyProps.getOrElse(l, "name"))
-            .distinct.toSeq
-          graph.nodes.select(explode(map_keys(col("props"))).as("propertyKey"))
-            .union(graph.edges.select(explode(map_keys(col("props"))).as("propertyKey")))
-            .union(keyNames.toDF("propertyKey"))
-            .distinct().orderBy("propertyKey")
-        case "dbms.components" =>
-          spark.range(1).select(lit("graft-spark").as("name"),
-            array(lit("5.4.0")).as("versions"), lit("community").as("edition"))
-        // data-modeling introspection (the procedures schema-inference
-        // tools call): properties union the bag keys with each label's
-        // out-of-band KEY property; `mandatory` = present on EVERY node
-        // of the label (the key always is); all store properties are
-        // string-valued. Flattened vs Neo4j: nodeLabels is the single
-        // label (this store's nodes carry exactly one).
-        case "db.schema.nodeTypeProperties" =>
-          import spark.implicits._
-          val totals = pgraph.nodes.groupBy("label")
-            .agg(count(lit(1)).as("__n"))
-          val bagProps = pgraph.nodes
-            .select(col("label"),
-              explode(map_keys(col("props"))).as("propertyName"))
-            .groupBy("label", "propertyName").agg(count(lit(1)).as("__c"))
-            .join(totals, Seq("label"))
-            .select(col("label"), col("propertyName"),
-              (col("__c") === col("__n")).as("mandatory"))
-          // bounded: schema-sized collect — one row per label partition
-          val labels = totals.select(col("label")).as[String].collect().toSeq
-          val keyRows = labels
-            .map(l => (l, allKeyProps.getOrElse(l, "name"), true))
-            .toDF("label", "propertyName", "mandatory")
-          bagProps.unionByName(keyRows)
-            .groupBy("label", "propertyName")
-            .agg(max(col("mandatory")).as("mandatory"))
-            .select(concat(lit(":`"), col("label"), lit("`")).as("nodeType"),
-              col("label").as("nodeLabels"), col("propertyName"),
-              lit("String").as("propertyTypes"), col("mandatory"))
-            .orderBy("nodeType", "propertyName")
-        case "db.schema.relTypeProperties" =>
-          val rTotals = pgraph.edges.groupBy("relType")
-            .agg(count(lit(1)).as("__n"))
-          val rProps = pgraph.edges
-            .select(col("relType"),
-              explode(map_keys(col("props"))).as("propertyName"))
-            .groupBy("relType", "propertyName").agg(count(lit(1)).as("__c"))
-          val typed = rProps.join(rTotals, Seq("relType"))
-            .select(col("relType"), col("propertyName"),
-              lit("String").as("propertyTypes"),
-              (col("__c") === col("__n")).as("mandatory"))
-          // a relType with NO properties anywhere gets one null row, as
-          // Neo4j emits it
-          val bare = rTotals
-            .join(rProps.select("relType").distinct(), Seq("relType"),
-              "left_anti")
-            .select(col("relType"),
-              lit(null).cast("string").as("propertyName"),
-              lit(null).cast("string").as("propertyTypes"),
-              lit(null).cast("boolean").as("mandatory"))
-          typed.unionByName(bare)
-            .select(concat(lit(":`"), col("relType"), lit("`")).as("relType"),
-              col("propertyName"), col("propertyTypes"), col("mandatory"))
-            .orderBy("relType", "propertyName")
-        // APOC's schema census — the procedure LangChain's Neo4jGraph
-        // issues on EVERY refresh_schema (and refuses to init without).
-        // Three row shapes in ONE relation, exactly the triples the three
-        // LangChain statements filter on:
-        //   node properties:        elementType='node', type='STRING'
-        //   relationship topology:  elementType='node', type='RELATIONSHIP',
-        //                           label=start label, property=relType,
-        //                           other=[distinct end labels]
-        //   relationship props:     elementType='relationship', type='STRING'
-        // Everything is schema-cardinality aggregates over the store's
-        // partition columns — node/edge property inventories are one
-        // map_keys explode + grouped count each, topology is two
-        // broadcast-joinable id→label lookups + one groupBy; nothing here
-        // scales with anything but the schema at 100 TB.
-        case "apoc.meta.data" =>
-          import spark.implicits._
-          val noOther = typedlit(Seq.empty[String])
-          val nTotals = pgraph.nodes.groupBy("label")
-            .agg(count(lit(1)).as("count"))
-          // bag properties + each label's out-of-band key property (a
-          // property to every Cypher reader; count = all of the label)
-          val nBag = pgraph.nodes
-            .select(col("label"), explode(map_keys(col("props"))).as("property"))
-            .groupBy("label", "property").agg(count(lit(1)).as("count"))
-          val labelSeq = nTotals.select(col("label"), col("count"))
-            .as[(String, Long)].collect().toSeq // bounded: one row/label
-          val nKey = labelSeq
-            .map { case (l, n) => (l, allKeyProps.getOrElse(l, "name"), n) }
-            .toDF("label", "property", "count")
-          val nodeProps = nBag.unionByName(nKey)
-            .groupBy("label", "property").agg(max(col("count")).as("count"))
-            .select(col("label"), col("property"), col("count"),
-              lit("STRING").as("type"), lit("node").as("elementType"),
-              noOther.as("other"))
-          val srcL = pgraph.nodes
-            .select(col("id").as("srcId"), col("label").as("__sl"))
-          val dstL = pgraph.nodes
-            .select(col("id").as("dstId"), col("label").as("__dl"))
-          val topo = pgraph.edges
-            .join(srcL, Seq("srcId")).join(dstL, Seq("dstId"))
-            .groupBy(col("__sl").as("label"), col("relType"))
-            .agg(count(lit(1)).as("count"),
-              sort_array(collect_set(col("__dl"))).as("other"))
-            .select(col("label"), col("relType").as("property"), col("count"),
-              lit("RELATIONSHIP").as("type"), lit("node").as("elementType"),
-              col("other"))
-          val relProps = pgraph.edges
-            .select(col("relType"), explode(map_keys(col("props"))).as("property"))
-            .groupBy("relType", "property").agg(count(lit(1)).as("count"))
-            .select(col("relType").as("label"), col("property"), col("count"),
-              lit("STRING").as("type"), lit("relationship").as("elementType"),
-              noOther.as("other"))
-          nodeProps.unionByName(topo).unionByName(relProps)
-            .orderBy("elementType", "type", "label", "property")
-        // `SHOW INDEXES YIELD …` — Neo4j 5's FULL column set (list-typed
-        // labelsOrTypes/properties + the options map), bound into the
-        // pipeline by the parser as this pseudo-procedure. This is what
-        // Neo4jVector's retrieve_existing_index / retrieve_existing_fts_
-        // index statements filter on before creating an index. The bare
-        // `SHOW INDEXES` keeps its flat stable columns (c63); this form
-        // carries the Neo4j-shaped schema. Catalog-cardinality rows.
-        case "internal.show.indexes" =>
-          import org.apache.spark.sql.types._
-          import org.apache.spark.sql.Row
-          val lookup = Seq(Row("node_label_lookup", "ONLINE", 100.0,
-            "LOOKUP", "NODE", null, null, "token-lookup-1.0", null,
-            null, null))
-          val backing = constraintCatalog.toSeq.map {
-            case (n, (l, p)) => Row(n, "ONLINE", 100.0, "RANGE", "NODE",
-              Seq(l), Seq(p), "range-1.0", n, null, null)
-          }
-          def entKind(isRel: Boolean) = if (isRel) "RELATIONSHIP" else "NODE"
-          val vec = vectorIndexes.toSeq.map { case (n, d) =>
-            Row(n, "ONLINE", 100.0, "VECTOR", entKind(d.isRel), Seq(d.label),
-              Seq(d.prop), "vector-2.0", null, d.dim.toLong,
-              d.similarityFunction)
-          }
-          val ften = fulltextIndexes.toSeq.map { case (n, d) =>
-            Row(n, "ONLINE", 100.0, "FULLTEXT", entKind(d.isRel), Seq(d.label),
-              d.props, "fulltext-1.0", null, null, null)
-          }
-          val rng = rangeIndexes.toSeq.map { case (n, (l, p)) =>
-            Row(n, "ONLINE", 100.0, "RANGE", "NODE", Seq(l), Seq(p),
-              "range-1.0", null, null, null)
-          }
-          val showSchema = StructType(Seq(
-            StructField("name", StringType), StructField("state", StringType),
-            StructField("populationPercent", DoubleType),
-            StructField("type", StringType),
-            StructField("entityType", StringType),
-            StructField("labelsOrTypes", ArrayType(StringType)),
-            StructField("properties", ArrayType(StringType)),
-            StructField("indexProvider", StringType),
-            StructField("owningConstraint", StringType),
-            StructField("__dims", LongType),
-            StructField("__simfn", StringType)))
-          import scala.jdk.CollectionConverters._
-          spark.createDataFrame(
-              (lookup ++ backing ++ vec ++ ften ++ rng).asJava, showSchema)
-            .select(col("name"), col("state"), col("populationPercent"),
-              col("type"), col("entityType"), col("labelsOrTypes"),
-              col("properties"), col("indexProvider"),
-              col("owningConstraint"),
-              struct(col("indexProvider"),
-                struct(col("__dims").as("vector.dimensions"),
-                  col("__simfn").as("vector.similarity_function"))
-                  .as("indexConfig")).as("options"))
-            .orderBy("name")
-        // GDS-style algorithm procedures: the analytics engine surfaced
-        // through Cypher CALL, the way Neo4j users actually invoke graph
-        // algorithms. Node identity is the KEY (internal ids are engine
-        // noise); pageRank scores ride x02's 6-dp quantization contract.
-        case "gds.pageRank.stream" =>
-          graft.analytics.GraphAlgorithms.pageRank(pgraph, numIter = 10)
-            .select(col("key"), round(col("rank"), 6).as("score"))
-        case "gds.wcc.stream" =>
-          // component identity = the min member key, engine-independent.
-          // GDS's weighted form: {relationshipWeightProperty, threshold}
-          // keeps only edges whose weight EXCEEDS the threshold (missing
-          // weights default to 1.0, the dijkstra convention) — the
-          // similarity-graph clustering idiom; threshold without a weight
-          // property is meaningless and rejects typed.
-          val wccWeight = p.confString("relationshipWeightProperty")
-          val wccThr = p.confDouble("threshold", Double.NegativeInfinity)
-          if (wccThr > Double.NegativeInfinity && wccWeight.isEmpty)
-            throw new IllegalArgumentException("gds.wcc.stream: {threshold} " +
-              "requires {relationshipWeightProperty} — an unweighted graph " +
-              "has nothing to threshold")
-          val wccGraph = wccWeight match {
-            case Some(prop) => pgraph.copy(edges = pgraph.edges.filter(
-              coalesce(element_at(col("props"), prop).cast("double"),
-                lit(1.0)) > wccThr))
-            case None => pgraph
-          }
-          val comps = graft.analytics.GraphAlgorithms.connectedComponents(wccGraph)
-          comps.join(
-              comps.groupBy("component").agg(min("key").as("componentKey")),
-              Seq("component"))
-            .select(col("key"), col("componentKey"))
-        case "gds.scc.stream" =>
-          // DIRECTED components (wcc's directed twin): mutual-reachability
-          // classes, identity = the min member key
-          val comps = graft.analytics.GraphAlgorithms
-            .stronglyConnectedComponents(pgraph)
-          comps.join(
-              comps.groupBy("component").agg(min("key").as("componentKey")),
-              Seq("component"))
-            .select(col("key"), col("componentKey"))
-        case "gds.degree.stream" =>
-          val deg = pgraph.edges.select(col("srcId").as("id"))
-            .union(pgraph.edges.select(col("dstId").as("id")))
-            .groupBy("id").agg(count(lit(1)).as("degree"))
-          pgraph.nodes.join(deg, Seq("id"), "left")
-            .select(col("key"), coalesce(col("degree"), lit(0L)).as("degree"))
-        // The r7 GDS quartet (VERDICT r7 #5) — every one runs the
-        // algorithm over the edge list mapped to node KEYS first, so all
-        // ordering-sensitive internals (pair canonicalization, label
-        // tie-breaks, md5-derived inits) are functions of the stable
-        // user-facing identity, never of internal id values.
-        case "gds.nodeSimilarity.stream" =>
-          // Jaccard over out-neighbor sets, BOUNDED BY DEFAULT exactly as
-          // GDS bounds it (VERDICT r8 #2 / ADVICE r8 #4): topK defaults to
-          // 10 (each node keeps its 10 most similar, both directions, ties
-          // to the smallest key), degreeCutoff defaults to 1 (nodes below
-          // the out-degree floor never enter the comparison), and
-          // similarityCutoff defaults to 1e-42 (GDS's >0 epsilon). The
-          // unbounded full n1 < n2 pair stream — Σdeg² rows by definition,
-          // the answer-set-bound reference shape — remains available as an
-          // EXPLICIT engine extension via {topK: 0}; it can no longer be
-          // produced by accident.
-          val degreeCutoff = p.confLong("degreeCutoff", 1L)
-          val simCutoff = p.confDouble("similarityCutoff", 1e-42)
-          val topK = p.confLong("topK", 10L)
-          require(topK >= 0,
-            s"nodeSimilarity topK must be >= 0 (0 = full pair stream), got $topK")
-          val base = edgeKeys
-          val filtered =
-            if (degreeCutoff <= 1L) base
-            else {
-              val deg = base.dropDuplicates()
-                .groupBy("src").agg(count(lit(1)).as("__deg"))
-              base.join(deg.filter(col("__deg") >= degreeCutoff).select("src"),
-                Seq("src"), "left_semi")
-            }
-          if (topK > 0)
-            // WORK-bounded exact top-k (r9): the hub members that make the
-            // full pair stream Σdeg² take a closed-form window path instead
-            // of the intersection join, so the sf10 row exists — semantics
-            // pinned equal to the naive window form by GraphAlgorithmsSpec
-            graft.analytics.GraphAlgorithms
-              .nodeSimilarityTopK(filtered, topK.toInt, minScore = simCutoff)
-          else
-            graft.analytics.GraphAlgorithms
-              .nodeSimilarity(filtered, minScore = simCutoff)
-              .select(col("n1").as("key1"), col("n2").as("key2"),
-                col("jaccard").as("similarity"))
-        case "gds.labelPropagation.stream" =>
-          // deterministic synchronous LPA, min-key tie break (x15's
-          // contract); config {maxIterations: n} sets the fixed round
-          // budget — default 10, matching GDS (ADVICE r8 #4; was 2);
-          // edgeless nodes stay their own singleton community, matching
-          // GDS's all-nodes output
-          val lp = graft.analytics.GraphAlgorithms
-            .labelPropagation(edgeKeys,
-              rounds = p.confLong("maxIterations", 10L).toInt)
-          pgraph.nodes.select(col("key"))
-            .join(lp.withColumnRenamed("id", "key"), Seq("key"), "left")
-            .select(col("key"),
-              coalesce(col("community"), col("key")).as("communityKey"))
-        case "gds.fastRP.stream" =>
-          // portable md5 ±1-sparse init over the key strings, integer
-          // propagation hops (x18's exact-integer posture). GDS has NO
-          // default embeddingDimension (it is a mandatory parameter), so
-          // the unconfigured form is rejected rather than silently using
-          // a geometry a user could mistake for GDS output (ADVICE r8 #4).
-          require(p.has("embeddingDimension"),
-            "gds.fastRP.stream requires {embeddingDimension: n} — GDS has " +
-              "no default dimension; pass it explicitly (YIELD surface " +
-              "covers e0..e3, i.e. embeddingDimension 4)")
-          // the registered YIELD schema is FIXED at key,e0..e3 — any other
-          // dimension would either fail later with a raw unresolved-column
-          // error (dim<4) or silently drop columns (dim>4); reject typed
-          // instead (ADVICE r9 #5)
-          val fastRpDim = p.confLong("embeddingDimension", 4L)
-          require(fastRpDim == 4L,
-            s"gds.fastRP.stream yields the fixed columns e0..e3, so " +
-              s"embeddingDimension must be 4 (got $fastRpDim) — other " +
-              "dimensions are not representable in the registered YIELD " +
-              "schema")
-          graft.analytics.GraphAlgorithms
-            .fastRPEmbedding(edgeKeys,
-              dim = fastRpDim.toInt,
-              rounds = p.confLong("iterations", 2L).toInt)
-            .withColumnRenamed("id", "key")
-        case "gds.hits.stream" =>
-          // exact-integer rounds + end-only normalization (x19). GDS's
-          // default hitsIterations=20 is not replayable in the exact-
-          // integer design (authority terms grow as deg^(2r) and overflow
-          // 64 bits long before 20 rounds), so the round budget must be
-          // explicit — the unconfigured form is rejected instead of
-          // returning tiny-geometry output a user could mistake for
-          // GDS-equivalent (ADVICE r8 #4).
-          require(p.has("hitsIterations"),
-            "gds.hits.stream requires {hitsIterations: n} — the engine " +
-              "computes exact-integer rounds (end-only normalization); " +
-              "GDS's default 20 is not representable, choose the budget " +
-              "explicitly (e.g. {hitsIterations: 2})")
-          graft.analytics.GraphAlgorithms.hits(edgeKeys,
-              rounds = p.confLong("hitsIterations", 2L).toInt)
-            .withColumnRenamed("id", "key")
-        // ---- triangle census (GDS requires UNDIRECTED orientation for
-        // these; the engine takes the undirected simple view of the edge
-        // list — direction and parallel edges ignored, as gds.graph.
-        // project's UNDIRECTED projection would). Kernel is join-only
-        // (canonical a<b<c listing), never a cartesian.
-        case "gds.triangleCount.stream" =>
-          val t = graft.analytics.GraphAlgorithms.triangleStats(edgeKeys)
-          pgraph.nodes.select(col("key"))
-            .join(t.withColumnRenamed("node", "key"), Seq("key"), "left")
-            .select(col("key"),
-              coalesce(col("triangles"), lit(0L)).as("triangleCount"))
-        case "gds.localClusteringCoefficient.stream" =>
-          val t = graft.analytics.GraphAlgorithms.triangleStats(edgeKeys)
-          pgraph.nodes.select(col("key"))
-            .join(t.withColumnRenamed("node", "key"), Seq("key"), "left")
-            .select(col("key"),
-              coalesce(col("coefficient"), lit(0.0))
-                .as("localClusteringCoefficient"))
-        // ---- path-based centralities + coreness (all over the UNDIRECTED
-        // simple view, the triangle family's posture). These are the GDS
-        // procedures whose cost is inherently super-linear in component
-        // size (all-pairs / per-source BFS state): the PROJECTION is the
-        // scale knob — exactly GDS's own in-memory-graph contract — and
-        // betweenness additionally takes {samplingSize} so the source set,
-        // not |V|, bounds the (source, vertex) state.
-        case "gds.betweenness.stream" =>
-          // Sampled Brandes (x12's machinery): {samplingSize: K} picks the
-          // K md5-lowest node keys as sources — DETERMINISTIC where GDS
-          // samples randomly (documented divergence; reproducibility is
-          // this engine's contract) — and rescales by |V|/K, the standard
-          // unbiased estimator. Unconfigured = exact all-sources Brandes
-          // (GDS's default; O(V·E) — sample at scale). BFS truncation
-          // fails loudly: a silently depth-capped score would under-count.
-          val nNodes = pgraph.nodes.count()
-          val k = p.confLong("samplingSize", 0L)
-          require(k >= 0, s"samplingSize must be >= 0 (0 = exact), got $k")
-          val sampled = k > 0L && k < nNodes
-          val sources =
-            if (sampled)
-              pgraph.nodes.select(col("key"))
-                .orderBy(md5(col("key")), col("key")).limit(k.toInt)
-            else pgraph.nodes.select(col("key"))
-          val scale = if (sampled) nNodes.toDouble / k else 1.0
-          val bc = graft.analytics.GraphAlgorithms.betweennessFromSources(
-            edgeKeys, sources, maxDepth = 100, requireExhausted = true)
-          pgraph.nodes.select(col("key"))
-            .join(bc.withColumnRenamed("id", "key"), Seq("key"), "left")
-            .select(col("key"),
-              round(coalesce(col("betweenness"), lit(0.0)) * lit(scale), 6)
-                .as("score"))
-        case "gds.closeness.stream" | "gds.closeness.harmonic.stream" =>
-          // one all-pairs hop-distance table serves both variants:
-          //   closeness  score(u)     = r(u) / Σ_v d(u,v)   (0 if isolated)
-          //   harmonic   centrality(u) = Σ_v 1/d(u,v) / (|V|-1)
-          // r(u) = |{v : reachable, v != u}| — the reachable-set form that
-          // stays defined on disconnected graphs. 6-dp pinned (x10's float
-          // posture: Σ 1/d association order cannot flip the hash).
-          val nNodes = pgraph.nodes.count()
-          val dists = graft.analytics.GraphAlgorithms.hopDistances(
-            pgraph.nodes.select(col("key")),
-            edgeKeys.unionByName(edgeKeys.select(col("dst").as("src"),
-              col("src").as("dst"))))
-          val agg = dists.groupBy(col("s").as("key"))
-            .agg(count(lit(1)).as("__r"), sum("dist").as("__sd"),
-              sum(lit(1.0) / col("dist")).as("__h"))
-          val joined = pgraph.nodes.select(col("key")).join(agg, Seq("key"), "left")
-          if (p.name == "gds.closeness.stream")
-            joined.select(col("key"),
-              when(col("__sd").isNull, lit(0.0))
-                .otherwise(round(col("__r").cast("double") /
-                  col("__sd").cast("double"), 6)).as("score"))
-          else
-            joined.select(col("key"),
-              round(coalesce(col("__h"), lit(0.0)) /
-                lit(math.max(nNodes - 1L, 1L).toDouble), 6).as("centrality"))
-        case "gds.kcore.stream" =>
-          // full k-core decomposition (coreness per node) by iterated
-          // neighborhood h-index — converges to the peel answer without a
-          // k-by-k ladder; non-convergence inside the round budget fails
-          // loudly (see GraphAlgorithms.coreDecomposition's depth note)
-          graft.analytics.GraphAlgorithms
-            .coreDecomposition(pgraph.nodes.select(col("key")), edgeKeys)
-            .withColumnRenamed("id", "key")
-            .select(col("key"), col("coreValue"))
-        case "gds.louvain.stream" =>
-          // modularity-optimizing community detection — DETERMINISTIC
-          // single-level synchronous local moving with exact integer gain
-          // comparisons and min-label ties (classic Louvain is sequential
-          // and multi-level; this is the labelPropagation-style
-          // pin-the-nondeterminism trade, documented divergence).
-          // {maxIterations: n} bounds the rounds (default 10, GDS's);
-          // community identity = min member key. Edgeless nodes are their
-          // own singleton community, matching GDS's all-nodes output.
-          graft.analytics.GraphAlgorithms.louvainLocalMoving(
-              pgraph.nodes.select(col("key")), edgeKeys,
-              rounds = p.confLong("maxIterations", 10L).toInt)
-            .select(col("id").as("key"), col("community").as("communityKey"))
-        // ---- write-mode procedures (the persist half of the GDS
-        // lifecycle): compute over the projection, write the result back
-        // into the STORE's property bag by internal node id — exactly the
-        // projected node set, as GDS writes it. The store mutation is one
-        // set-oriented left join + map rewrite (never per-row), pinned
-        // with the same snapshot posture as gds.graph.project.
-        case "gds.degree.write" =>
-          val wp = p.confString("writeProperty").getOrElse(
-            throw new IllegalArgumentException("gds.degree.write requires " +
-              "{writeProperty: '…'} — GDS has no default write property"))
-          val deg = pgraph.edges.select(col("srcId").as("id"))
-            .union(pgraph.edges.select(col("dstId").as("id")))
-            .groupBy("id").agg(count(lit(1)).as("__wval"))
-          val vals = pgraph.nodes.select(col("id"))
-            .join(deg, Seq("id"), "left")
-            .select(col("id"),
-              coalesce(col("__wval"), lit(0L)).cast("string").as("__wval"))
-          val written = writeNodeProperty(wp, vals)
-          spark.range(1).select(lit(written).as("nodePropertiesWritten"),
-            lit(wp).as("writeProperty"))
-        case "gds.pageRank.write" =>
-          val wp = p.confString("writeProperty").getOrElse(
-            throw new IllegalArgumentException("gds.pageRank.write requires " +
-              "{writeProperty: '…'} — GDS has no default write property"))
-          // same 10-superstep 6-dp contract as gds.pageRank.stream (x02),
-          // so write-then-MATCH reads exactly what stream yields
-          val pr = graft.analytics.GraphAlgorithms.pageRank(pgraph, numIter = 10)
-            .select(col("id"),
-              round(col("rank"), 6).cast("string").as("__wval"))
-          val written = writeNodeProperty(wp, pr)
-          spark.range(1).select(lit(written).as("nodePropertiesWritten"),
-            lit(wp).as("writeProperty"))
-        case "gds.louvain.write" =>
-          val wp = p.confString("writeProperty").getOrElse(
-            throw new IllegalArgumentException("gds.louvain.write requires " +
-              "{writeProperty: '…'} — GDS has no default write property"))
-          // same deterministic local-moving contract as gds.louvain.stream,
-          // persisted: community identity (min member key) stored as the
-          // property, so write-then-MATCH reads exactly what stream yields
-          val lvw = graft.analytics.GraphAlgorithms.louvainLocalMoving(
-              pgraph.nodes.select(col("key")), edgeKeys,
-              rounds = p.confLong("maxIterations", 10L).toInt)
-          val lvVals = pgraph.nodes.select(col("id"), col("key"))
-            .join(lvw.withColumnRenamed("id", "key"), Seq("key"))
-            .select(col("id"), col("community").as("__wval"))
-          val nComm = lvw.select(col("community")).distinct().count()
-          val lvWritten = writeNodeProperty(wp, lvVals)
-          spark.range(1).select(lit(lvWritten).as("nodePropertiesWritten"),
-            lit(nComm).as("communityCount"), lit(wp).as("writeProperty"))
-        case "gds.labelPropagation.write" =>
-          val wp = p.confString("writeProperty").getOrElse(
-            throw new IllegalArgumentException("gds.labelPropagation.write " +
-              "requires {writeProperty: '…'} — GDS has no default write " +
-              "property"))
-          // stream's deterministic-LPA contract persisted (x15 tie rules,
-          // {maxIterations} honored, edgeless nodes their own community)
-          val lpw = graft.analytics.GraphAlgorithms.labelPropagation(edgeKeys,
-            rounds = p.confLong("maxIterations", 10L).toInt)
-          val lpAll = pgraph.nodes.select(col("key"))
-            .join(lpw.withColumnRenamed("id", "key"), Seq("key"), "left")
-            .select(col("key"),
-              coalesce(col("community"), col("key")).as("community"))
-          val lpVals = pgraph.nodes.select(col("id"), col("key"))
-            .join(lpAll, Seq("key"))
-            .select(col("id"), col("community").as("__wval"))
-          val nLpComm = lpAll.select(col("community")).distinct().count()
-          val lpWritten = writeNodeProperty(wp, lpVals)
-          spark.range(1).select(lit(lpWritten).as("nodePropertiesWritten"),
-            lit(nLpComm).as("communityCount"), lit(wp).as("writeProperty"))
-        case "gds.scc.write" =>
-          val wp = p.confString("writeProperty").getOrElse(
-            throw new IllegalArgumentException("gds.scc.write requires " +
-              "{writeProperty: '…'} — GDS has no default write property"))
-          // stream's min-member-key identity persisted
-          val sccw = graft.analytics.GraphAlgorithms
-            .stronglyConnectedComponents(pgraph)
-          val sccKeyed = sccw.join(
-              sccw.groupBy("component").agg(min("key").as("componentKey")),
-              Seq("component"))
-          val nScc = sccKeyed.select(col("componentKey")).distinct().count()
-          val sccWritten = writeNodeProperty(wp,
-            sccKeyed.select(col("id"), col("componentKey").as("__wval")))
-          spark.range(1).select(lit(sccWritten).as("nodePropertiesWritten"),
-            lit(nScc).as("componentCount"), lit(wp).as("writeProperty"))
-        case "gds.kcore.write" =>
-          val wp = p.confString("writeProperty").getOrElse(
-            throw new IllegalArgumentException("gds.kcore.write requires " +
-              "{writeProperty: '…'} — GDS has no default write property"))
-          val kcw = graft.analytics.GraphAlgorithms
-            .coreDecomposition(pgraph.nodes.select(col("key")), edgeKeys)
-            .withColumnRenamed("id", "key")
-          val kcVals = pgraph.nodes.select(col("id"), col("key"))
-            .join(kcw, Seq("key"))
-            .select(col("id"), col("coreValue").cast("string").as("__wval"))
-          val kcWritten = writeNodeProperty(wp, kcVals)
-          spark.range(1).select(lit(kcWritten).as("nodePropertiesWritten"),
-            lit(wp).as("writeProperty"))
-        case "gds.betweenness.write" =>
-          val wp = p.confString("writeProperty").getOrElse(
-            throw new IllegalArgumentException("gds.betweenness.write " +
-              "requires {writeProperty: '…'} — GDS has no default write " +
-              "property"))
-          // same sampled-Brandes contract as the stream (md5-lowest
-          // {samplingSize} sources, |V|/K rescale, loud truncation)
-          val bwN = pgraph.nodes.count()
-          val bwK = p.confLong("samplingSize", 0L)
-          require(bwK >= 0, s"samplingSize must be >= 0 (0 = exact), got $bwK")
-          val bwSampled = bwK > 0L && bwK < bwN
-          val bwSources =
-            if (bwSampled)
-              pgraph.nodes.select(col("key"))
-                .orderBy(md5(col("key")), col("key")).limit(bwK.toInt)
-            else pgraph.nodes.select(col("key"))
-          val bwScale = if (bwSampled) bwN.toDouble / bwK else 1.0
-          val bw = graft.analytics.GraphAlgorithms.betweennessFromSources(
-            edgeKeys, bwSources, maxDepth = 100, requireExhausted = true)
-          val bwVals = pgraph.nodes.select(col("id"), col("key"))
-            .join(bw.withColumnRenamed("id", "key"), Seq("key"), "left")
-            .select(col("id"),
-              round(coalesce(col("betweenness"), lit(0.0)) * lit(bwScale), 6)
-                .cast("string").as("__wval"))
-          val bwWritten = writeNodeProperty(wp, bwVals)
-          spark.range(1).select(lit(bwWritten).as("nodePropertiesWritten"),
-            lit(wp).as("writeProperty"))
-        case "gds.wcc.write" =>
-          val wp = p.confString("writeProperty").getOrElse(
-            throw new IllegalArgumentException("gds.wcc.write requires " +
-              "{writeProperty: '…'} — GDS has no default write property"))
-          // component identity = the min member key (the engine-independent
-          // contract gds.wcc.stream already pins), stored as the property
-          val comps = graft.analytics.GraphAlgorithms.connectedComponents(pgraph)
-          val keyed = comps.join(
-              comps.groupBy("component").agg(min("key").as("componentKey")),
-              Seq("component"))
-          val nComp = keyed.select(col("componentKey")).distinct().count()
-          val written = writeNodeProperty(wp,
-            keyed.select(col("id"), col("componentKey").as("__wval")))
-          spark.range(1).select(lit(written).as("nodePropertiesWritten"),
-            lit(nComp).as("componentCount"), lit(wp).as("writeProperty"))
-        // ---- single-source shortest paths (GDS's dijkstra surface).
-        // Engine form: frontier-only relaxation to CONVERGENCE (delta
-        // Bellman-Ford — each round's shuffle carries only the improving
-        // edge set; with non-negative weights the fixpoint IS the dijkstra
-        // answer). Weights are exact integers from a relationship property
-        // ({relationshipWeightProperty}; absent → every edge costs 1), so
-        // totalCost hashes without a float contract.
-        case "gds.allShortestPaths.dijkstra.stream" |
-             "gds.shortestPath.dijkstra.stream" =>
-          val srcKey = p.confString("sourceNode").getOrElse(
-            throw new IllegalArgumentException(
-              s"${p.name} requires {sourceNode: " +
-                "'<key>'} — the source node's key property value"))
-          // the source→target form additionally requires targetNode and
-          // returns exactly that row (absent from the result = unreachable,
-          // as GDS returns an empty stream)
-          val targetKey: Option[String] =
-            if (p.name == "gds.shortestPath.dijkstra.stream")
-              Some(p.confString("targetNode").getOrElse(
-                throw new IllegalArgumentException(
-                  "gds.shortestPath.dijkstra.stream requires {targetNode: " +
-                    "'<key>'} — use gds.allShortestPaths.dijkstra.stream " +
-                    "for the full single-source result")))
-            else None
-          val wProp = p.confString("relationshipWeightProperty")
-          val srcIds = pgraph.nodes.filter(col("key") === srcKey)
-            .select(col("id")).limit(2).collect()
-          require(srcIds.length == 1,
-            s"sourceNode '$srcKey' matches ${srcIds.length} node(s) in the " +
-              "graph — it must resolve to exactly one")
-          val wCol = wProp match {
-            case Some(prop) => coalesce(
-              element_at(col("props"), prop).cast("long"), lit(1L))
-            case None => lit(1L)
-          }
-          val edges = pgraph.edges.select(col("srcId").as("src"),
-            col("dstId").as("dst"), wCol.as("w"))
-          // an EXPLICIT {maxIterations: n} selects the bounded-relaxation
-          // form (paths of ≤ n edges — x07's replayable semantics, the
-          // form an oracle can recompute); unconfigured, the engine runs
-          // frontier rounds to the fixpoint, which for non-negative
-          // weights is the exact dijkstra answer
-          val dist =
-            if (p.has("maxIterations"))
-              graft.analytics.GraphAlgorithms.weightedSSSP(edges,
-                srcIds.head.getLong(0),
-                rounds = p.confLong("maxIterations", 6L).toInt)
-            else
-              graft.analytics.GraphAlgorithms.weightedSSSPConverged(edges,
-                srcIds.head.getLong(0), maxRounds = 100)
-          val full = dist.join(pgraph.nodes.select(col("id").as("node"),
-              col("key").as("targetKey")), Seq("node"))
-            .select(lit(srcKey).as("sourceKey"), col("targetKey"),
-              col("dist").as("totalCost"))
-          targetKey.fold(full)(t => full.filter(col("targetKey") === t))
-        // ---- index query procedures (the GraphRAG surface). Vector:
-        // driver-side sign-LSH bucketing of the ONE query vector (96 dot
-        // products), candidates come off the snapshot as a literal
-        // 8-way bucket-equality filter pushed into the scan — no join, no
-        // shuffle except the top-k. Exact cosine re-scores candidates;
-        // score = (1 + cos)/2, Neo4j's cosine score normalization, left-
-        // fold dot products so the doubles replay in the DuckDB oracle.
-        case vq @ ("db.index.vector.queryNodes" |
-            "db.index.vector.queryRelationships") =>
-          val wantRel = vq.endsWith("Relationships")
-          require(p.args.size == 3, s"$vq takes " +
-            s"(indexName, k, queryVector), got ${p.args.size} argument(s)")
-          val idxName = p.args.head match {
-            case s: String => s
-            case other => throw new IllegalArgumentException(
-              s"queryNodes' index name must be a string, got $other")
-          }
-          val k = p.args(1) match {
-            // any integral type (ADVICE r11 #3): a JVM-built params map
-            // naturally carries Int where the parser produces Long
-            case l: Long if l > 0 => l.toInt
-            case i: Int if i > 0 => i
-            case other => throw new IllegalArgumentException(
-              s"queryNodes' k must be a positive integer, got $other")
-          }
-          val qv: Array[Double] = p.args(2) match {
-            case s: Seq[_] => s.map {
-              case d: Double => d
-              case f: Float => f.toDouble
-              case i: Int => i.toDouble
-              case l: Long => l.toDouble
-              case other => throw new IllegalArgumentException(
-                s"query vector components must be numeric, got $other")
-            }.toArray
-            case other => throw new IllegalArgumentException(
-              "queryNodes' query vector must be a list parameter, got " +
-                s"$other")
-          }
-          val vidx = vectorIndexes.getOrElse(idxName,
-            throw new IllegalArgumentException(
-              s"vector index '$idxName' does not exist — SHOW VECTOR " +
-                s"INDEXES lists ${vectorIndexes.keys.mkString(", ")}"))
-          // entity-kind check: a NODE index serves queryNodes, a
-          // RELATIONSHIP index serves queryRelationships — never both
-          if (vidx.isRel != wantRel) throw new IllegalArgumentException(
-            s"vector index '$idxName' indexes " +
-              (if (vidx.isRel) "RELATIONSHIP properties — query it with " +
-                "db.index.vector.queryRelationships"
-               else "NODE properties — query it with " +
-                "db.index.vector.queryNodes"))
-          require(qv.length == vidx.dim,
-            s"query vector has ${qv.length} dimensions; index '$idxName' " +
-              s"expects ${vidx.dim}")
-          val euclidean = vidx.similarityFunction == "euclidean"
-          var qn2 = 0.0
-          qv.foreach(x => qn2 += x * x)
-          // cosine is undefined at zero norm; euclidean legally queries
-          // from the origin
-          if (!euclidean)
-            require(qn2 > 0.0, "query vector must have a nonzero norm")
-          val qn = math.sqrt(qn2)
-          // bucket the query vector driver-side with the SAME plane family
-          // the snapshot used (bit i of table t set iff plane·x >= 0)
-          val planes = graft.functions.DedupKernels.lshPlanes(
-            CypherSession.VectorLshTables, CypherSession.VectorLshBits,
-            vidx.dim)
-          val qb = Array.tabulate(CypherSession.VectorLshTables) { t =>
-            var b = 0L
-            var i = 0
-            while (i < CypherSession.VectorLshBits) {
-              var dot = 0.0
-              var j = 0
-              while (j < vidx.dim) { dot += planes(t)(i)(j) * qv(j); j += 1 }
-              if (dot >= 0.0) b |= 1L << i
-              i += 1
-            }
-            b
-          }
-          val bucketHit = (0 until CypherSession.VectorLshTables)
-            .map(t => element_at(col("bks"), t + 1) === lit(qb(t)))
-            .reduce(_ || _)
-          val cand = vectorServe(idxName, vidx) match {
-            case Left(data) =>
-              // small population: the pinned in-memory frame, literal
-              // bucket-equality filter — a broadcast-scale scan
-              data.filter(bucketHit)
-                .select(col("node"), col("emb"), col("nrm"), col("key"))
-            case Right(sv) =>
-              // persisted layout (VERDICT r11 #2): one partition-pruned
-              // probe per table — the literal pbh prunes directories, the
-              // pushed bucket equality prunes pages — so per-query IO
-              // tracks CANDIDATES, never corpus size. A row colliding in
-              // several tables is kept only at its FIRST matching table
-              // (literal conjunction per probe; no distinct, no shuffle).
-              val probes = (0 until CypherSession.VectorLshTables).map { t =>
-                val pbh = t * 64 + (qb(t) >> 6).toInt
-                var pr = sv.frame
-                  .filter(col("pbh") === lit(pbh) && col("t") === lit(t) &&
-                    col("bucket") === lit(qb(t)))
-                (0 until t).foreach { tp =>
-                  pr = pr.filter(element_at(col("bks"), tp + 1) =!= lit(qb(tp)))
-                }
-                pr.select(col("id"), col("key"), col("node"), col("emb"),
-                  col("nrm"), col("gen"))
-              }.reduce(_ unionByName _)
-              // tombstone mask (round 14): a compacted-over row is dead —
-              // its id carries a (pinned, broadcast) tombstone and its
-              // generation predates it; the superseding rows live in the
-              // appended generation's files of the same pruned partitions
-              val live =
-                if (sv.tombstones == null) probes
-                else probes
-                  .join(broadcast(sv.tombstones), Seq("id"), "left")
-                  .filter(col("dropBelow").isNull ||
-                    col("gen") >= col("dropBelow"))
-                  .drop("dropBelow")
-              // setter patches live in the small pinned overlay: its ids
-              // mask the layout's stale rows, its rows probe in memory
-              val masked = (
-                if (sv.overlayIds == null) live
-                else live.join(broadcast(sv.overlayIds), Seq("id"),
-                  "left_anti")
-              ).drop("gen")
-              val all =
-                if (sv.overlay == null) masked
-                else masked.unionByName(sv.overlay.filter(bucketHit)
-                  .select(col("id"), col("key"), col("node"), col("emb"),
-                    col("nrm")))
-              all.select(col("node"), col("emb"), col("nrm"), col("key"))
-          }
-          val qlit = typedlit(qv.toSeq)
-          val dot = aggregate(zip_with(col("emb"), qlit, (a, b) => a * b),
-            lit(0.0), (acc, x) => acc + x)
-          // Neo4j's score normalizations, left-fold arithmetic so the
-          // doubles replay in the DuckDB oracle: cosine → (1 + cos)/2,
-          // euclidean → 1 / (1 + squared distance)
-          val score =
-            if (euclidean) {
-              val sqd = aggregate(
-                zip_with(col("emb"), qlit, (a, b) => (a - b) * (a - b)),
-                lit(0.0), (acc, x) => acc + x)
-              lit(1.0) / (lit(1.0) + sqd)
-            } else (lit(1.0) + dot / (col("nrm") * lit(qn))) / lit(2.0)
-          cand
-            .select(col("node"), score.as("score"), col("key"))
-            // tie-break at the k boundary (ADVICE r11 #1): (length, lex)
-            // on the key string IS numeric order for canonically-rendered
-            // nonnegative integer keys — the collation the DuckDB oracles
-            // use (ORDER BY vec_id) — and stays total for arbitrary keys,
-            // so exact score ties (duplicate embeddings) select the same
-            // rows in both engines
-            .orderBy(col("score").desc, length(col("key")), col("key"))
-            .limit(k)
-            .select(col("node").as(if (wantRel) "relationship" else "node"),
-              col("score"))
-        // the embedding SETTER (Neo4j 5.13+; LangChain's add_embeddings
-        // issues it per chunk). One set-oriented join writes the rendered
-        // vector into every matched node's bag — the statement-at-a-time
-        // form, exactly the reference's per-record write style; the write
-        // counter yields where Neo4j returns void (additive divergence).
-        // Documented divergence: property reads LATER IN THE SAME
-        // statement observe the pre-write bag (the pipeline's bindings
-        // are compiled against the statement-start graph); read the
-        // written value back with a fresh MATCH, as the lifecycle does.
-        case "db.create.setNodeVectorProperty" =>
-          require(p.args.size == 3, "db.create.setNodeVectorProperty " +
-            s"takes (node, key, vector), got ${p.args.size} argument(s)")
-          val nodeVar = p.args.head match {
-            case ProcVarArg(v) => v
-            case other => throw new IllegalArgumentException(
-              "setNodeVectorProperty's first argument must be a bound " +
-                s"node variable, got $other")
-          }
-          val keyName = p.args(1) match {
-            case s: String => s
-            case other => throw new IllegalArgumentException(
-              s"setNodeVectorProperty's key must be a string, got $other")
-          }
-          require(df != null && df.columns.contains(s"${nodeVar}__id"),
-            s"setNodeVectorProperty targets unbound node variable '$nodeVar'")
-          // the vector slot: a resolved $parameter list renders once
-          // driver-side (the per-record form); a `row.prop` expression
-          // reads per pipeline row (a map/struct binding or a stored
-          // rendered string) — in both cases the write itself is ONE
-          // set-oriented batch through the shared path.
-          val (wvalCol, conflicts) = p.args(2) match {
-            case s: Seq[_] => (lit(renderVectorSeq(s)), false)
-            case ProcPropArg(rv, pp) =>
-              val c = df.schema.fields.find(_.name == rv)
-                .map(_.dataType) match {
-                case Some(_: org.apache.spark.sql.types.StructType) =>
-                  col(rv).getField(pp).cast("string")
-                case Some(_: org.apache.spark.sql.types.MapType) =>
-                  col(rv).getItem(pp).cast("string")
-                case Some(_) => throw new IllegalArgumentException(
-                  s"setNodeVectorProperty's $rv.$pp needs a struct/map-" +
-                    "bound row variable")
-                case None if df.columns.contains(s"${rv}__id") =>
-                  element_at(col(s"${rv}__props"), pp)
-                case None => throw new IllegalArgumentException(
-                  s"setNodeVectorProperty references unbound variable '$rv'")
-              }
-              (c, true)
-            case other => throw new IllegalArgumentException(
-              "setNodeVectorProperty's vector must be a list parameter " +
-                s"or a row-bound var.prop expression, got $other")
-          }
-          val written = setNodeVectorPropertyBatch(keyName,
-            df.select(col(s"${nodeVar}__id").as("id"), wvalCol.as("__wval")),
-            checkConflicts = conflicts)
-          spark.range(1).select(lit(written).as("nodePropertiesWritten"))
-        // the PROCEDURE form of vector-index creation (pre-5.15 Neo4j; the
-        // statement LangChain issued for years — VERDICT r11 #3). Pure
-        // alias onto the CREATE VECTOR INDEX machinery: same validation,
-        // same eager population, same SHOW INDEXES row.
-        case "db.index.vector.createNodeIndex" =>
-          require(p.args.size == 5, "db.index.vector.createNodeIndex " +
-            "takes (indexName, label, propertyKey, vectorDimension, " +
-            s"vectorSimilarityFunction), got ${p.args.size} argument(s)")
-          def strArg(i: Int, what: String): String = p.args(i) match {
-            case s: String => s
-            case other => throw new IllegalArgumentException(
-              s"createNodeIndex's $what must be a string, got $other")
-          }
-          val dim = p.args(3) match {
-            case l: Long if l > 0 && l <= 4096 => l.toInt
-            case i: Int if i > 0 && i <= 4096 => i
-            case other => throw new IllegalArgumentException(
-              "createNodeIndex's vectorDimension must be a positive " +
-                s"integer (<= 4096), got $other")
-          }
-          executeCreateVectorIndex(CreateVectorIndex(
-            Some(strArg(0, "indexName")), ifNotExists = false,
-            strArg(1, "label"), strArg(2, "propertyKey"), dim,
-            strArg(4, "vectorSimilarityFunction").toLowerCase)) match {
-            case CypherRows(r) => r
-            case other => throw new IllegalStateException(
-              s"unexpected createNodeIndex result $other")
-          }
-        case fq @ ("db.index.fulltext.queryNodes" |
-            "db.index.fulltext.queryRelationships") =>
-          val ftWantRel = fq.endsWith("Relationships")
-          require(p.args.size == 2, "db.index.fulltext.queryNodes takes " +
-            s"(indexName, query), got ${p.args.size} argument(s)")
-          val ftName = p.args.head match {
-            case s: String => s
-            case other => throw new IllegalArgumentException(
-              s"queryNodes' index name must be a string, got $other")
-          }
-          val ftQuery = p.args(1) match {
-            case s: String => s
-            case other => throw new IllegalArgumentException(
-              s"the fulltext query must be a string, got $other")
-          }
-          val fidx = fulltextIndexes.getOrElse(ftName,
-            throw new IllegalArgumentException(
-              s"fulltext index '$ftName' does not exist — SHOW FULLTEXT " +
-                s"INDEXES lists ${fulltextIndexes.keys.mkString(", ")}"))
-          if (fidx.isRel != ftWantRel) throw new IllegalArgumentException(
-            s"fulltext index '$ftName' indexes " +
-              (if (fidx.isRel) "RELATIONSHIP properties — query it with " +
-                "db.index.fulltext.queryRelationships"
-               else "NODE properties — query it with " +
-                "db.index.fulltext.queryNodes"))
-          // the options map (Neo4j's third argument; Neo4jVector's hybrid
-          // template passes {limit: $k}) — limit truncates the scored,
-          // score-ordered rows
-          val ftRes0 = fulltextQuery(ftName, fidx, ftQuery)
-          val ftRes =
-            if (ftWantRel) ftRes0.withColumnRenamed("node", "relationship")
-            else ftRes0
-          val ftLim = p.confLong("limit", -1L)
-          if (ftLim >= 0L) ftRes.limit(ftLim.toInt) else ftRes
-        // APOC's data-driven merges — LangChain Neo4jGraph.
-        // add_graph_documents imports LLM-extracted knowledge graphs with
-        // these (labels/types arrive WITH the data): `UNWIND $data AS row
-        // CALL apoc.merge.node([row.type], {id: row.id}, row.properties,
-        // {}) YIELD node …`. Execution is SET-ORIENTED: the whole driving
-        // batch pays one existence probe + one store merge (+ one edge
-        // merge for relationships) — never a per-row loop. The yielded
-        // node/rel binds PER DRIVING ROW (a struct carrying label/key),
-        // so chained merge.node → merge.relationship composes in one
-        // statement exactly as LangChain emits it.
-        case mn @ ("apoc.merge.node" | "apoc.merge.relationship") =>
-          import org.apache.spark.sql.types.{MapType, StructType}
-          require(df != null,
-            s"$mn needs driving rows — UNWIND the $$data batch first")
-          def rowColOf(rv: String, pp: String): Column =
-            df.schema.fields.find(_.name == rv).map(_.dataType) match {
-              case Some(_: StructType) => col(rv).getField(pp)
-              case Some(_: MapType) => col(rv).getItem(pp)
-              case Some(_) => throw new IllegalArgumentException(
-                s"$mn's $rv.$pp needs a struct/map-bound row variable")
-              case None if df.columns.contains(s"${rv}__id") =>
-                element_at(col(s"${rv}__props"), pp)
-              case None => throw new IllegalArgumentException(
-                s"$mn references unbound variable '$rv'")
-            }
-          def scalarArg(a: Any, what: String): Column = a match {
-            case s2: String => lit(s2)
-            case l: Long => lit(l).cast("string")
-            case Param(nm) => lit(params.getOrElse(nm,
-              throw new IllegalArgumentException(
-                s"missing parameter $$$nm")).toString)
-            case ProcPropArg(rv, pp) => rowColOf(rv, pp).cast("string")
-            case ProcVarArg(v) if scalarVars.contains(v) => col(v).cast("string")
-            case other => throw new IllegalArgumentException(
-              s"$mn's $what must be a string literal, a bound variable or " +
-                s"a row expression, got $other")
-          }
-          val emptyBag = typedlit(Map.empty[String, String])
-          def mapArg(a: Any, what: String): Column = a match {
-            case ProcMapArg(entries) if entries.isEmpty => emptyBag
-            case ProcMapArg(entries) => map(entries.flatMap { case (k, v) =>
-              Seq(lit(k), scalarArg(v, s"$what.$k")) }: _*)
-            case ProcPropArg(rv, pp) =>
-              df.schema.fields.find(_.name == rv).map(_.dataType) match {
-                case Some(st: StructType) if st.fieldNames.contains(pp) &&
-                    st(pp).dataType.isInstanceOf[MapType] =>
-                  coalesce(col(rv).getField(pp), emptyBag)
-                case Some(_: StructType) => throw new IllegalArgumentException(
-                  s"$mn's $what ($rv.$pp) must be a MAP-valued row field")
-                case _ => throw new IllegalArgumentException(
-                  s"$mn's $what ($rv.$pp) needs struct-shaped driving rows " +
-                    "(a $data batch whose elements carry a nested " +
-                    "properties map)")
-              }
-            case m: scala.collection.Map[_, _] =>
-              if (m.isEmpty) emptyBag
-              else map(m.toSeq.flatMap { case (k, v) =>
-                Seq(lit(k.toString), lit(v match {
-                  case null => null
-                  case other => other.toString
-                })) }: _*)
-            case other => throw new IllegalArgumentException(
-              s"$mn's $what must be a map literal or a map-valued row " +
-                s"expression, got $other")
-          }
-          // dup-safe map merge (right wins) without knowing keys statically
-          def mergeBags(a: Column, b: Column): Column =
-            map_concat(map_filter(a, (k, _) => !map_contains_key(b, k)), b)
-          val alias = p.yields.headOption.map(_._2)
-            .getOrElse(if (mn == "apoc.merge.node") "node" else "rel")
-          import spark.implicits._
-          if (mn == "apoc.merge.node") {
-            require(p.args.size == 4, "apoc.merge.node takes (labels, " +
-              s"identProps, onCreateProps, onMatchProps), got ${p.args.size}")
-            val labelC = p.args.head match {
-              case items: Seq[_] =>
-                require(items.size == 1, "apoc.merge.node takes exactly ONE " +
-                  "label — this store's nodes carry one label (the label " +
-                  "IS the partition key)")
-                scalarArg(items.head, "label")
-              case other => throw new IllegalArgumentException(
-                s"apoc.merge.node's first argument is a label LIST, got $other")
-            }
-            val (keyName, keyC) = p.args(1) match {
-              case ProcMapArg(Seq((k, v))) =>
-                (k, scalarArg(v, s"identProps.$k"))
-              case ProcMapArg(es) => throw new IllegalArgumentException(
-                "apoc.merge.node's identProps must carry exactly ONE key " +
-                  "property — the store's merge identity is (label, key); " +
-                  s"got {${es.map(_._1).mkString(", ")}}")
-              case other => throw new IllegalArgumentException(
-                s"apoc.merge.node's identProps must be a map, got $other")
-            }
-            val onCreateC = mapArg(p.args(2), "onCreateProps")
-            val onMatchC = mapArg(p.args(3), "onMatchProps")
-            val parent = graph
-            // the onCreate/onMatch split needs an existence probe ONLY
-            // when the two payloads differ; LangChain's chained
-            // source/target merges pass `{}, {}` — identical either way,
-            // so the probe join (a pass over the store per CALL, and a
-            // plan layer every later action re-executes) is skipped
-            // (VERDICT r12 #3: three import merges used to pin the store
-            // separately; the probe was the per-statement pin)
-            def emptyMapA(a: Any): Boolean = a match {
-              case ProcMapArg(es) => es.isEmpty
-              case m: scala.collection.Map[_, _] => m.isEmpty
-              case _ => false
-            }
-            val needProbe = !(emptyMapA(p.args(2)) && emptyMapA(p.args(3)))
-            // ONE existence probe for the whole batch decides which
-            // property payload each row contributes (apoc's onCreate /
-            // onMatch split); then ONE set-oriented node merge
-            val batch =
-              if (!needProbe) df.select(labelC.as("label"), keyC.as("key"),
-                onCreateC.as("props"))
-              else df
-                .select(labelC.as("label"), keyC.as("key"),
-                  onCreateC.as("__oc"), onMatchC.as("__om"))
-                .withColumn("__id",
-                  graft.model.GraphSchema.stableId(col("label"), col("key")))
-                .join(parent.nodes.select(col("id").as("__id"),
-                  lit(true).as("__ex")), Seq("__id"), "left")
-                .select(col("label"), col("key"),
-                  when(col("__ex"), col("__om")).otherwise(col("__oc"))
-                    .as("props"))
-            graph = parent.mergeNodes(batch)
-            // register the data-driven merge identity so later MATCHes on
-            // the key property hit the key column (bounded: ontology-sized
-            // label set of the DRIVING rows — never through the store
-            // probe, whose join would re-execute the whole merge chain
-            // per CALL); lineage records exactly the touched labels
-            val labelsTouched = df.select(labelC.cast("string").as("label"))
-              .distinct().as[String].collect().toSet
-            labelsTouched.foreach { l =>
-              if (!allKeyProps.contains(l)) dynamicKeyProps(l) = keyName }
-            // the id delta likewise derives from the driving rows alone —
-            // the lineage plan must stay store-free so an index patch
-            // never re-executes the merge chain
-            recordWrite(parent, graph, labelsTouched, Set.empty,
-              df.select(graft.model.GraphSchema.stableId(
-                labelC.cast("string"), keyC.cast("string")).as("id"))
-                .distinct())
-            p.yields.foreach { case (c, _) => require(c == "node",
-              s"apoc.merge.node yields 'node', not '$c'") }
-            df = df.withColumn(alias,
-              struct(labelC.as("label"), keyC.as("key"),
-                keyC.as(if (keyName == "label" || keyName == "key") s"__$keyName"
-                  else keyName)))
-            scalarVars += alias
-            return
-          } else {
-            require(p.args.size == 5, "apoc.merge.relationship takes " +
-              "(startNode, relationshipType, identProps, props, endNode), " +
-              s"got ${p.args.size}")
-            def nodeRef(a: Any, what: String): (Column, Column) = a match {
-              case ProcVarArg(v) =>
-                if (df.columns.contains(s"${v}__id"))
-                  (col(s"${v}__label"), col(s"${v}__key"))
-                else df.schema.fields.find(_.name == v).map(_.dataType) match {
-                  case Some(st: StructType)
-                      if st.fieldNames.contains("label") &&
-                        st.fieldNames.contains("key") =>
-                    (col(v).getField("label"), col(v).getField("key"))
-                  case _ => throw new IllegalArgumentException(
-                    s"apoc.merge.relationship's $what '$v' is not a node " +
-                      "binding (bind it with MATCH or apoc.merge.node)")
-                }
-              case other => throw new IllegalArgumentException(
-                s"apoc.merge.relationship's $what must be a bound node " +
-                  s"variable, got $other")
-            }
-            val (sl, sk) = nodeRef(p.args.head, "start node")
-            val relC = scalarArg(p.args(1), "relationshipType")
-            val identC = mapArg(p.args(2), "identProps")
-            val propsC = mapArg(p.args(3), "props")
-            val (tl, tk) = nodeRef(p.args(4), "end node")
-            val parent = graph
-            // identProps distinguish PARALLEL relationships in apoc; this
-            // store keys edges on (src, dst, type), so ident entries fold
-            // into the property bag (documented divergence — one edge per
-            // triple, apoc's common case and LangChain's only case: {})
-            val batch = df.select(sl.cast("string").as("srcLabel"),
-              sk.cast("string").as("srcKey"),
-              tl.cast("string").as("dstLabel"), tk.cast("string").as("dstKey"),
-              relC.as("relType"), mergeBags(identC, propsC).as("props"))
-            graph = parent.mergeEdgesByKey(batch)
-            val typesTouched = batch.select(col("relType")).distinct()
-              // bounded: schema-bounded distinct relType set of one batch
-              .as[String].collect().toSet
-            recordWrite(parent, graph, Set.empty, typesTouched,
-              null,
-              // exact edge-pair delta (round 15): ids derive from the
-              // label+key identities the merge itself keys on
-              batch.select(
-                graft.model.GraphSchema.stableId(col("srcLabel"),
-                  col("srcKey")).as("srcId"),
-                graft.model.GraphSchema.stableId(col("dstLabel"),
-                  col("dstKey")).as("dstId")).distinct())
-            p.yields.foreach { case (c, _) => require(c == "rel",
-              s"apoc.merge.relationship yields 'rel', not '$c'") }
-            df = df.withColumn(alias, struct(sk.as("srcKey"),
-              relC.as("relType"), tk.as("dstKey")))
-            scalarVars += alias
-            return
-          }
-        case other => throw new IllegalArgumentException(s"unknown procedure '$other'")
-      }
-      val selected =
-        if (p.yields.isEmpty) rows
-        else rows.select(p.yields.map { case (c, a) => col(c).as(a) }: _*)
-      df = if (df == null) selected else df.crossJoin(selected)
-      p.boundNames.foreach(scalarVars += _)
+    def applyProc(p: ProcCall): Unit = {
+      val (next, names) = callProcedure(p, params, df, scalarVars)
+      df = next
+      scalarVars ++= names
     }
 
     def applyUnwind(u: Unwind): Unit = {

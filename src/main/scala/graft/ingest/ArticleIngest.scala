@@ -55,11 +55,4 @@ object ArticleIngest {
       lit("Publisher").as("dstLabel"), col("publisher").as("dstKey"))
     g.mergeNodes(articleNodes.unionByName(publisherNodes)).mergeEdgesByKey(edges)
   }
-
-  /** Attach observable run metrics (I12: the `total_saved` counter,
-    * /root/reference/src/crwling.py:90,175) — read them via
-    * `org.apache.spark.sql.Observation`. */
-  def withMetrics(recs: DataFrame, name: String = "ingest"): DataFrame =
-    recs.observe(name, count(lit(1)).as("n_saved"),
-      count(col("publisher")).as("n_with_publisher"))
 }

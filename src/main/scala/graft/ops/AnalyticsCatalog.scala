@@ -5498,13 +5498,11 @@ object AnalyticsCatalog {
   private val c70 = Entry("c70_cypher_show_procedures",
     (s, dir) => {
       // SHOW PROCEDURES (VERDICT r10 #6) — Browser and cypher-shell issue
-      // it on connect. Rows project the procedure REGISTRY (signature from
-      // the registered YIELD schema, mode from the side-effect classifier
-      // EXPLAIN trusts), so there is no second list to drift; CypherSpec
-      // derives the full-listing expectations from the registry. The
-      // oracle hashes the STABLE subset — the db.*/dbms.* introspection
-      // and index procedures, which are Neo4j's own surface (the gds.*
-      // tail grows round over round and is spec-verified instead).
+      // it on connect. Rows project the CypherAst.Procedures table (name,
+      // signature from the entry's yields, mode, description); CypherSpec
+      // derives the full-listing expectations from that table. The
+      // oracle hashes the db.*/dbms.* subset — Neo4j's own introspection
+      // and index surface; the gds.* and apoc.* rows are spec-verified.
       val g = docGraph(s, dir)
       val sess = new graft.cypher.CypherSession(g,
         keyProps = Map("Article" -> "doc_id", "Publisher" -> "name"))

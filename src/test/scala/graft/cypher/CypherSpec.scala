@@ -292,6 +292,32 @@ class CypherSpec extends SparkTestBase {
     assert(noArgs.getMessage.contains("no positional arguments"))
   }
 
+  test("gds.graph.project from two threads on one session: exactly one registers the name") {
+    val sess = freshSession
+    sess.run("""MERGE (a:N {name: 'a'}) MERGE (b:N {name: 'b'})
+               |MERGE (a)-[:L]->(b)""".stripMargin)
+    // the catalog check and insert have two count jobs between them; the
+    // session write lock serializes the calls so the second sees the first
+    val start = new java.util.concurrent.CountDownLatch(1)
+    val outcomes = new java.util.concurrent.ConcurrentLinkedQueue[scala.util.Try[_]]()
+    val threads = (1 to 2).map { _ =>
+      val t = new Thread(() => {
+        start.await()
+        outcomes.add(scala.util.Try(
+          sess.run("CALL gds.graph.project('g', '*', '*')")))
+      })
+      t.start(); t
+    }
+    start.countDown()
+    threads.foreach(_.join(300000))
+    import scala.jdk.CollectionConverters._
+    val done = outcomes.asScala.toSeq
+    assert(done.size === 2)
+    assert(done.count(_.isSuccess) === 1, done)
+    val err = done.flatMap(_.failed.toOption).head
+    assert(err.getMessage.contains("already exists"), err.getMessage)
+  }
+
   test("multi-label patterns and SET n:Label reject typed, citing the single-label model") {
     val sess = freshSession
     sess.run("MERGE (u:User {name: 'alice'})")
@@ -2572,6 +2598,46 @@ class CypherSpec extends SparkTestBase {
     val noWp = intercept[IllegalArgumentException](
       sess.run("CALL gds.kcore.write()"))
     assert(noWp.getMessage.contains("writeProperty"), noWp.getMessage)
+    // every (stream, write) pair: the read-back property is the stream
+    // value cast to string for every key; a component/community counter
+    // is the distinct count of that value
+    Seq("degree" -> "degree", "pageRank" -> "score", "wcc" -> "componentKey",
+        "scc" -> "componentKey", "louvain" -> "communityKey",
+        "labelPropagation" -> "communityKey", "kcore" -> "coreValue",
+        "betweenness" -> "score").foreach { case (alg, v) =>
+      val streamed = rows(s"CALL gds.$alg.stream() YIELD key, $v RETURN key, $v")
+        .select(col("key"), col(v).cast("string"))
+        .as[(String, String)].collect().toMap
+      val w = rows(s"CALL gds.$alg.write({writeProperty: 'p_$alg'})")
+      val counters = w.columns.zip(w.collect().head.toSeq).toMap
+      assert(counters("nodePropertiesWritten") === 5L, alg)
+      assert(counters("writeProperty") === s"p_$alg", alg)
+      counters.keys.filter(_.endsWith("Count")).foreach { c =>
+        assert(counters(c) === streamed.values.toSet.size.toLong, s"$alg $c")
+      }
+      val readBack = rows(s"MATCH (n:N) RETURN n.name AS k, n.p_$alg AS v")
+        .as[(String, String)].collect().toMap
+      assert(readBack === streamed, alg)
+    }
+    // wcc.write honours the stream's {relationshipWeightProperty,
+    // threshold}: the weak b–c edge is dropped on both sides
+    val ws = freshSession
+    ws.run("""MERGE (a:N {name: 'a'}) MERGE (b:N {name: 'b'})
+             |MERGE (a)-[:L {w: '0.9'}]->(b)""".stripMargin)
+    ws.run("""MERGE (b:N {name: 'b'}) MERGE (c:N {name: 'c'})
+             |MERGE (b)-[:L {w: '0.2'}]->(c)""".stripMargin)
+    val thr = "relationshipWeightProperty: 'w', threshold: 0.5"
+    val thrStream = ws.run(
+      s"CALL gds.wcc.stream({$thr}) YIELD key, componentKey RETURN key, componentKey")
+      .asInstanceOf[CypherRows].df.as[(String, String)].collect().toMap
+    val thrCount = ws.run(
+      s"CALL gds.wcc.write({writeProperty: 'wc', $thr}) YIELD componentCount RETURN componentCount")
+      .asInstanceOf[CypherRows].df.as[Long].collect().head
+    val thrWritten = ws.run("MATCH (n:N) RETURN n.name AS k, n.wc AS c")
+      .asInstanceOf[CypherRows].df.as[(String, String)].collect().toMap
+    assert(thrStream === Map("a" -> "a", "b" -> "a", "c" -> "c"))
+    assert(thrWritten === thrStream)
+    assert(thrCount === 2L)
   }
 
   test("round-10: gds.kcore.stream — coreness per node, not just fixed-k membership") {
@@ -2602,10 +2668,27 @@ class CypherSpec extends SparkTestBase {
     assert(procs.size === Procedures.all.size)
     assert(procs.map(_._1) === Procedures.all.keys.toSeq.sorted)
     procs.foreach { case (name, sig, mode, desc) =>
-      assert(sig === s"$name() :: (${Procedures.all(name).mkString(", ")})")
-      assert(mode === (if (Procedures.sideEffecting(name)) "WRITE" else "READ"),
-        name)
+      assert(sig === s"$name() :: (${Procedures.all(name).yields.mkString(", ")})")
+      assert(mode === Procedures.all(name).mode, name)
+      assert(desc === Procedures.all(name).description, name)
       assert(desc.nonEmpty, name)
+    }
+    // the WRITE set (session write lock, EXPLAIN/PROFILE rejection) pinned
+    assert(procs.filter(_._3 == "WRITE").map(_._1).toSet === Set(
+      "gds.degree.write", "gds.pageRank.write", "gds.wcc.write",
+      "gds.scc.write", "gds.louvain.write", "gds.labelPropagation.write",
+      "gds.kcore.write", "gds.betweenness.write",
+      "gds.graph.project", "gds.graph.drop",
+      "db.create.setNodeVectorProperty", "db.index.vector.createNodeIndex",
+      "apoc.merge.node", "apoc.merge.relationship"))
+    // …and EVERY listed procedure reaches its body: called with no
+    // arguments it runs or fails on its own terms, never as unknown
+    procs.foreach { case (name, _, _, _) =>
+      scala.util.Try(sess.run(s"CALL $name()").asInstanceOf[CypherRows]
+          .df.collect()).failed.foreach { e =>
+        assert(!String.valueOf(e.getMessage).contains("unknown procedure"),
+          s"$name: ${e.getMessage}")
+      }
     }
     // SHOW FUNCTIONS: rows match the registry…
     val fns = sess.run("SHOW FUNCTIONS").asInstanceOf[CypherRows].df
