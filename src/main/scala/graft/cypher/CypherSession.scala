@@ -4099,11 +4099,12 @@ final class CypherSession(
             relC.as("relType"), tk.as("dstKey"))), Seq(alias))
         }
       case name =>
+        // project to the yielded columns (a gds stream's `id` stays behind)
         val yields =
           if (p.yields.nonEmpty) p.yields else proc.yields.map(c => (c, c))
         val selected =
           rowsOf(name).select(yields.map { case (c, a) => col(c).as(a) }: _*)
-        (if (df == null) selected else df.crossJoin(selected), yields.map(_._2))
+        (if (df == null) selected else df.crossJoin(selected), p.boundNames)
     }
   }
 
