@@ -301,7 +301,7 @@ object CypherAst {
       config: Map[String, Any] = Map.empty, args: Seq[Any] = Nil) {
     /** Column names this call binds into the pipeline. */
     def boundNames: Seq[String] =
-      if (yields.nonEmpty) yields.map(_._2) else Procedures(name).yields
+      if (yields.nonEmpty) yields.map(_._2) else Procedures.bound(name).yields
     /** A PRESENT but mistyped key raises instead of silently using the
       * default (ADVICE r8 #5 — {topK: 1.5} used to fall through). */
     def confLong(key: String, default: Long): Long =
@@ -535,21 +535,30 @@ object CypherAst {
         write = true, args = Positional))
 
     /** Pseudo-procedures the PARSER binds into a pipeline but which are
-      * not user-callable names (no SHOW PROCEDURES row): `SHOW INDEXES
-      * YIELD …` compiles to a first-stage binding of this relation —
-      * Neo4j 5's FULL SHOW INDEXES column set (list-typed labelsOrTypes /
-      * properties and the options map), the shape Neo4jVector's
-      * retrieve_existing_index statement filters on. The bare `SHOW
-      * INDEXES` keeps its stable flat columns (c63's hashed subset). */
+      * not user-callable names (no SHOW PROCEDURES row, CALL rejects
+      * them): `SHOW INDEXES YIELD …` compiles to a first-stage binding of
+      * `internal.show.indexes` — Neo4j 5's FULL SHOW INDEXES column set
+      * (list-typed labelsOrTypes / properties and the options map), the
+      * shape Neo4jVector's retrieve_existing_index statement filters on;
+      * the bare `SHOW INDEXES` keeps its stable flat columns (c63's hashed
+      * subset). `SHOW PROCEDURES YIELD …` binds `internal.show.procedures`,
+      * the bare statement's rows (Neo4j Browser issues the YIELD form on
+      * connect). */
     val internal: Map[String, Procedure] = Map(
       "internal.show.indexes" -> Procedure(Seq("name", "state",
         "populationPercent", "type", "entityType", "labelsOrTypes",
-        "properties", "indexProvider", "owningConstraint", "options"), ""))
+        "properties", "indexProvider", "owningConstraint", "options"), ""),
+      "internal.show.procedures" -> Procedure(
+        Seq("name", "signature", "mode", "description"), ""))
 
+    /** A user-callable procedure: the name a CALL may use. */
     def apply(name: String): Procedure =
-      all.getOrElse(name, internal.getOrElse(name,
-        throw new IllegalArgumentException(
-          s"unknown procedure '$name' — supported: ${all.keys.toSeq.sorted.mkString(", ")}")))
+      all.getOrElse(name, throw new IllegalArgumentException(
+        s"unknown procedure '$name' — supported: ${all.keys.toSeq.sorted.mkString(", ")}"))
+
+    /** Any procedure a parsed pipeline binds: a callable one or one of the
+      * parser's [[internal]] pseudo-procedures. */
+    def bound(name: String): Procedure = internal.getOrElse(name, apply(name))
   }
 
   /** The scalar/temporal/aggregate FUNCTION surface the expression compiler

@@ -232,39 +232,15 @@ object CypherParser {
             next(); ShowConstraints
           case Some(Ident(c)) if c.equalsIgnoreCase("indexes") =>
             next()
-            if (peekSoft("YIELD")) {
-              // `SHOW INDEXES YIELD … [WHERE …] [RETURN …]` — the index-
-              // existence statement Neo4jVector issues before creating an
-              // index. The YIELD binds Neo4j's FULL column set (arrays +
-              // options map) into an ordinary pipeline; everything after
-              // composes like any CALL: seed the pipeline's first stage
-              // with the pseudo-procedure and parse the rest normally.
-              next()
-              val cols = Procedures.internal("internal.show.indexes").yields
-              val yields = ArrayBuffer.empty[(String, String)]
-              if (peek.contains(Sym("*"))) {
-                next(); cols.foreach(c0 => yields += ((c0, c0)))
-              } else {
-                def yieldItem(): Unit = {
-                  val c0 = ident()
-                  if (!cols.contains(c0))
-                    fail(s"SHOW INDEXES does not yield '$c0' " +
-                      s"(yields: ${cols.mkString(", ")})")
-                  val a =
-                    if (peek.contains(Kw("AS"))) { next(); ident() } else c0
-                  yields += ((c0, a))
-                }
-                yieldItem()
-                while (peek.contains(Sym(","))) { next(); yieldItem() }
-              }
-              pendingProcs =
-                Seq(ProcCall("internal.show.indexes", yields.toSeq, Map.empty, Nil))
-              statementFromPipeline()
-            } else ShowIndexes
+            if (peekSoft("YIELD")) showYield("INDEXES", "internal.show.indexes")
+            else ShowIndexes
           case Some(Ident(c)) if c.equalsIgnoreCase("databases") =>
             next(); ShowDatabases
           case Some(Ident(c)) if c.equalsIgnoreCase("procedures") =>
-            next(); ShowProcedures
+            next()
+            if (peekSoft("YIELD"))
+              showYield("PROCEDURES", "internal.show.procedures")
+            else ShowProcedures
           case Some(Ident(c)) if c.equalsIgnoreCase("functions") =>
             next(); ShowFunctions
           case Some(Ident(c)) if c.equalsIgnoreCase("vector") =>
@@ -528,6 +504,36 @@ object CypherParser {
       out.toMap
     }
 
+    /** `SHOW INDEXES|PROCEDURES YIELD … [WHERE …] [RETURN …]` (at the
+      * YIELD): the YIELD binds the pseudo-procedure `proc`'s columns into
+      * an ordinary pipeline and everything after composes like any CALL —
+      * seed the pipeline's first stage with it and parse the rest
+      * normally. `SHOW INDEXES YIELD` is the index-existence statement
+      * Neo4jVector issues before creating an index (Neo4j's FULL column
+      * set: arrays + options map); `SHOW PROCEDURES YIELD` is what Neo4j
+      * Browser issues on connect. */
+    private def showYield(what: String, proc: String): Statement = {
+      next()
+      val cols = Procedures.internal(proc).yields
+      val yields = ArrayBuffer.empty[(String, String)]
+      if (peek.contains(Sym("*"))) {
+        next(); cols.foreach(c0 => yields += ((c0, c0)))
+      } else {
+        def yieldItem(): Unit = {
+          val c0 = ident()
+          if (!cols.contains(c0))
+            fail(s"SHOW $what does not yield '$c0' " +
+              s"(yields: ${cols.mkString(", ")})")
+          val a = if (peek.contains(Kw("AS"))) { next(); ident() } else c0
+          yields += ((c0, a))
+        }
+        yieldItem()
+        while (peek.contains(Sym(","))) { next(); yieldItem() }
+      }
+      pendingProcs = Seq(ProcCall(proc, yields.toSeq, Map.empty, Nil))
+      statementFromPipeline()
+    }
+
     private def statementFromPipeline(): Statement = {
         val first = matchStatement()
         if (!peek.contains(Kw("UNION"))) first
@@ -602,9 +608,11 @@ object CypherParser {
     private def matchStatement(): Statement = {
       val stages = ArrayBuffer.empty[MatchStage]
       // EOF after a procedure-call stage is a complete statement
-      // (standalone `CALL db.labels()` — implicit RETURN synthesized below)
-      while (!pipelineEnd(peek) &&
-          !(peek.isEmpty && stages.lastOption.exists(_.procs.nonEmpty))) {
+      // (standalone `CALL db.labels()` — implicit RETURN synthesized below);
+      // a SHOW … YIELD's pending pseudo-procedure is a stage even when
+      // RETURN follows the YIELD at once
+      while (pendingProcs.nonEmpty || (!pipelineEnd(peek) &&
+          !(peek.isEmpty && stages.lastOption.exists(_.procs.nonEmpty)))) {
         val loads = parseLoads()
         val unwinds = ArrayBuffer.empty[Unwind]
         while (peek.contains(Kw("UNWIND"))) {

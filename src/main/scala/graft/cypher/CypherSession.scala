@@ -231,7 +231,7 @@ final class CypherSession(
 
   private def rejectSideEffectingProcs(verb: String,
       procs: Seq[ProcCall]): Unit = {
-    val bad = procs.map(_.name).filter(Procedures(_).write)
+    val bad = procs.map(_.name).filter(Procedures.bound(_).write)
     if (bad.nonEmpty) throw new IllegalArgumentException(
       s"$verb cannot inspect a statement calling ${bad.distinct.mkString(", ")} " +
         "— write-mode and graph-catalog procedures execute their side " +
@@ -335,16 +335,18 @@ final class CypherSession(
 
   /** `SHOW PROCEDURES` — one row per [[CypherAst.Procedures]] table
     * entry (Browser and cypher-shell issue this on connect): the signature
-    * from the entry's yields, its mode and its description. */
-  private def executeShowProcedures(): CypherResult = {
+    * from the entry's yields, its mode and its description. `SHOW
+    * PROCEDURES YIELD …` binds the same rows as `internal.show.procedures`. */
+  private def procedureRows(): DataFrame = {
     val spark = graph.nodes.sparkSession
     import spark.implicits._
-    val rows = CypherAst.Procedures.all.toSeq.map { case (name, proc) =>
+    CypherAst.Procedures.all.toSeq.map { case (name, proc) =>
       (name, s"$name() :: (${proc.yields.mkString(", ")})", proc.mode,
         proc.description)
-    }.sortBy(_._1)
-    CypherRows(rows.toDF("name", "signature", "mode", "description"))
+    }.sortBy(_._1).toDF("name", "signature", "mode", "description")
   }
+
+  private def executeShowProcedures(): CypherResult = CypherRows(procedureRows())
 
   /** `SHOW FUNCTIONS` — one row per [[CypherAst.Functions]] registry
     * entry; CypherSpec additionally evaluates a sample invocation per
@@ -2160,7 +2162,7 @@ final class CypherSession(
       case ShowVectorIndexes => executeShowKindIndexes("VECTOR")
       case ShowFulltextIndexes => executeShowKindIndexes("FULLTEXT")
       case m: MatchStatement
-          if m.stages.exists(_.procs.exists(p => Procedures(p.name).write)) =>
+          if m.stages.exists(_.procs.exists(p => Procedures.bound(p.name).write)) =>
         sessionWriteLock.synchronized {
           compactForRead()
           CypherRows(compileMatch(m, params))
@@ -2172,7 +2174,7 @@ final class CypherSession(
       // like a bare pipeline would — it takes the same lock (ADVICE r13)
       case u: UnionStatement
           if u.parts.exists(_.stages.exists(_.procs.exists(p =>
-            Procedures(p.name).write))) =>
+            Procedures.bound(p.name).write))) =>
         sessionWriteLock.synchronized {
           compactForRead()
           CypherRows(compileUnion(u, params))
@@ -2962,7 +2964,7 @@ final class CypherSession(
           throw new IllegalArgumentException(s"missing parameter $$$nm"))
         case kv => kv
       })
-    val proc = Procedures(p.name)
+    val proc = Procedures.bound(p.name)
     // Graph-name first argument on the gds algorithm surface: the
     // algorithm runs over the NAMED projection's snapshot instead of
     // the whole store; an unknown name fails typed.
@@ -3242,6 +3244,8 @@ final class CypherSession(
             noOther.as("other"))
         nodeProps.unionByName(topo).unionByName(relProps)
           .orderBy("elementType", "type", "label", "property")
+      // `SHOW PROCEDURES YIELD …`: the bare statement's rows
+      case "internal.show.procedures" => procedureRows()
       // `SHOW INDEXES YIELD …` — Neo4j 5's FULL column set (list-typed
       // labelsOrTypes/properties + the options map), bound into the
       // pipeline by the parser as this pseudo-procedure. This is what
@@ -3607,15 +3611,16 @@ final class CypherSession(
         // form (paths of ≤ n edges — x07's replayable semantics, the
         // form an oracle can recompute); unconfigured, the engine runs
         // frontier rounds to the fixpoint, which for non-negative
-        // weights is the exact dijkstra answer
-        val dist =
+        // weights is the exact dijkstra answer, and refuses to return
+        // distances still improving after 100 rounds
+        import graft.analytics.Superstep.{FailAfter, StopAfter}
+        val dist = graft.analytics.GraphAlgorithms.weightedSSSP(edges,
+          srcIds.head.getLong(0),
           if (p.has("maxIterations"))
-            graft.analytics.GraphAlgorithms.weightedSSSP(edges,
-              srcIds.head.getLong(0),
-              rounds = p.confLong("maxIterations", 6L).toInt)
-          else
-            graft.analytics.GraphAlgorithms.weightedSSSPConverged(edges,
-              srcIds.head.getLong(0), maxRounds = 100)
+            StopAfter(p.confLong("maxIterations", 6L).toInt)
+          else FailAfter(100, _ =>
+            "weightedSSSP did not reach a fixpoint within 100 rounds — " +
+              "raise {maxIterations} or check for a negative-weight cycle"))
         val full = dist.join(pgraph.nodes.select(col("id").as("node"),
             col("key").as("targetKey")), Seq("node"))
           .select(lit(srcKey).as("sourceKey"), col("targetKey"),
@@ -4381,8 +4386,8 @@ final class CypherSession(
               // result is one row per endpoint pair at its minimum hop.
               //
               // A label/prop-anchored endpoint seeds the frontier from the
-              // anchored node set instead of every edge — the landmark-BFS
-              // shape of GraphAlgorithms.shortestPaths: per-level work is
+              // anchored node set instead of every edge — the multi-source
+              // BFS shape of GraphAlgorithms.hopDistances: per-level work is
               // bounded by the anchor set's reach, not the whole graph's
               // pair count (the common real query anchors on a selective
               // label; the unanchored form stays available but is answer-

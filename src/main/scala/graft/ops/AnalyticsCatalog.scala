@@ -7182,7 +7182,8 @@ object AnalyticsCatalog {
           ((col("id") + 1) % n).as("dst"), (col("id") % 7 + 1).as("w"))
         .unionByName(ids.select(col("id").as("src"),
           ((col("id") * 3 + 1) % n).as("dst"), (col("id") % 5 + 2).as("w")))
-      GraphAlgorithms.weightedSSSP(edges, source = 0L, rounds = 6)
+      GraphAlgorithms.weightedSSSP(edges, source = 0L,
+        graft.analytics.Superstep.StopAfter(6))
         .orderBy("dist", "node").limit(25)
     },
     Some("""WITH RECURSIVE
@@ -7269,7 +7270,8 @@ object AnalyticsCatalog {
           ((col("id") + 1) % n).as("dst"), lit(1L).as("w"))
         .unionByName(ids.select(col("id").as("src"),
           ((col("id") * 3 + 1) % n).as("dst"), lit(1L).as("w")))
-      GraphAlgorithms.weightedSSSP(edges, source = 0L, rounds = 6)
+      GraphAlgorithms.weightedSSSP(edges, source = 0L,
+        graft.analytics.Superstep.StopAfter(6))
         .filter(col("dist") > 0)
         .agg(count(lit(1)).as("n_reached"),
           round(sum(lit(1.0) / col("dist")), 6).as("harmonic"),

@@ -240,13 +240,21 @@ class GraphAlgorithmsSpec extends SparkTestBase {
       (0L, 3L, 10L), (0L, 1L, 1L), (1L, 2L, 1L), (2L, 3L, 1L),
       (3L, 4L, 2L), (5L, 0L, 1L)
     ).toDF("src", "dst", "w")
-    val d = GraphAlgorithms.weightedSSSP(edges, source = 0L, rounds = 6)
+    val d = GraphAlgorithms.weightedSSSP(edges, source = 0L, Superstep.StopAfter(6))
       .as[(Long, Long)].collect().toMap
     assert(d === Map(0L -> 0L, 1L -> 1L, 2L -> 2L, 3L -> 3L, 4L -> 5L))
     // a 1-round bound only sees direct edges
-    val d1 = GraphAlgorithms.weightedSSSP(edges, source = 0L, rounds = 1)
+    val d1 = GraphAlgorithms.weightedSSSP(edges, source = 0L, Superstep.StopAfter(1))
       .as[(Long, Long)].collect().toMap
     assert(d1 === Map(0L -> 0L, 1L -> 1L, 3L -> 10L))
+    // the fixpoint form: a budget that ends with distances still improving
+    // fails loudly instead of returning them
+    val e = intercept[IllegalStateException](GraphAlgorithms.weightedSSSP(edges,
+      source = 0L, Superstep.FailAfter(2, _ => "sssp budget spent")).collect())
+    assert(e.getMessage === "sssp budget spent")
+    assert(GraphAlgorithms.weightedSSSP(edges, source = 0L,
+      Superstep.FailAfter(6, _ => "sssp budget spent")).as[(Long, Long)]
+      .collect().toMap === d)
   }
 
   test("betweenness: path center 2.0, star center k(k-1), triangle all 0") {
@@ -507,5 +515,106 @@ class GraphAlgorithmsSpec extends SparkTestBase {
         maxDepth = 4, requireExhausted = true)
       .as[(String, Double)].collect().toMap
     assert(bc("b") === 2.0 && bc("c") === 1.0 && bc("d") === 0.0)
+  }
+
+  test("sccColoringDF equals brute-force reachability; loud when maxRounds is too small") {
+    // SCC(v) = the vertices v reaches that also reach v; label = min id
+    def reference(ids: Seq[Long], edges: Seq[(Long, Long)]): Map[Long, Long] = {
+      val out = edges.groupBy(_._1).map { case (u, es) => u -> es.map(_._2) }
+      def reach(v: Long): Set[Long] = {
+        var seen = Set(v); var todo = List(v)
+        while (todo.nonEmpty) {
+          val u = todo.head; todo = todo.tail
+          out.getOrElse(u, Nil).filterNot(seen).foreach { w =>
+            seen += w; todo ::= w }
+        }
+        seen
+      }
+      val r = ids.map(v => v -> reach(v)).toMap
+      ids.map(v => v -> r(v).filter(w => r(w).contains(v)).min).toMap
+    }
+    def scc(ids: Seq[Long], edges: Seq[(Long, Long)], maxRounds: Int = 30) =
+      GraphAlgorithms.sccColoringDF(ids.toDF("id"), edges.toDF("src", "dst"),
+        maxRounds).as[(Long, Long)].collect().toMap
+    def check(ids: Seq[Long], edges: Seq[(Long, Long)]): Unit =
+      assert(scc(ids, edges) === reference(ids, edges), s"edges: $edges")
+    // seeded random digraphs, sparse enough to leave trimmable tails and
+    // dense enough to form multi-vertex SCCs
+    for (seed <- Seq(3, 11, 29)) {
+      val rnd = new scala.util.Random(seed)
+      check((0L until 24L), Seq.fill(36)((rnd.nextInt(24).toLong, rnd.nextInt(24).toLong)))
+    }
+    // a chain of 3-cycles whose ids fall along the chain: the max color
+    // floods every cycle downstream, so each outer round peels only the
+    // most upstream cycle — three rounds — and the tail 100 → 101 is
+    // trimmed
+    val cycles = Seq(20L, 10L, 0L).flatMap(b =>
+      Seq((b, b + 1), (b + 1, b + 2), (b + 2, b)))
+    val chain = cycles ++ Seq((21L, 11L), (12L, 2L), (0L, 100L), (100L, 101L))
+    val chainIds = cycles.map(_._1) ++ Seq(100L, 101L)
+    check(chainIds, chain)
+    val e = intercept[IllegalStateException](scc(chainIds, chain, maxRounds = 1))
+    assert(e.getMessage.contains("6 vertices unresolved after 1 rounds"), e.getMessage)
+    // a self-loop is no cycle of two; an isolated vertex is its own SCC
+    check(Seq(1L, 2L, 3L, 4L), Seq((1L, 1L), (2L, 3L), (3L, 2L)))
+    // empty input: no rows, the (id, component) schema
+    val empty = GraphAlgorithms.sccColoringDF(Seq.empty[Long].toDF("id"),
+      Seq.empty[(Long, Long)].toDF("src", "dst"))
+    assert(empty.columns.toSeq === Seq("id", "component"))
+    assert(empty.count() === 0L)
+  }
+
+  test("one Spark action per superstep: hop BFS and core decomposition job counts") {
+    import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
+    // A superstep is ONE action on its pin: one SQL execution. AQE runs
+    // each of that execution's exchanges and broadcasts as a job of its
+    // own under the same execution id, so the listener counts both the
+    // jobs and the distinct execution ids of a block.
+    def jobs(body: => Unit): (Int, Int) = {
+      val sc = spark.sparkContext
+      val n = new java.util.concurrent.atomic.AtomicInteger
+      val execs = java.util.concurrent.ConcurrentHashMap.newKeySet[String]()
+      val listener = new SparkListener {
+        override def onJobStart(e: SparkListenerJobStart): Unit = {
+          n.incrementAndGet()
+          execs.add(String.valueOf(e.properties.getProperty("spark.sql.execution.id")))
+        }
+      }
+      org.apache.spark.ListenerBusDrain(sc)
+      sc.addSparkListener(listener)
+      try { body; org.apache.spark.ListenerBusDrain(sc) }
+      finally sc.removeSparkListener(listener)
+      (n.get, execs.size)
+    }
+    // Stage jobs per superstep: a BFS level's plan has at most five
+    // exchanges/broadcasts plus its result stage.
+    val JobsPerStep = 6
+    // An n-node chain is n − 1 BFS levels plus the empty one that stops
+    // the loop, one action each. C = 3 is the rest: the edge pin, the
+    // seed pin and the collect; the visited set's re-pin adds one more
+    // action per 8 levels.
+    val C = 3
+    for (n <- Seq(12, 24, 48)) {
+      val chain = (0L until n - 1L).map(i => (i, i + 1)).toDF("src", "dst")
+      val (hopJobs, hopSteps) = jobs(GraphAlgorithms.hopDistances(
+        Seq(0L).toDF("id"), chain).collect())
+      assert(hopSteps <= n + n / 8 + C,
+        s"hopDistances on a $n-chain ran $hopSteps actions")
+      assert(hopJobs <= JobsPerStep * hopSteps,
+        s"hopDistances on a $n-chain ran $hopJobs jobs in $hopSteps actions")
+    }
+    // h-index erosion on a 16-node path: one action per round; C = 3 is
+    // the sym pin, the degree pin and the final join's collect. The
+    // round count is the smallest budget the erosion fits in.
+    val path = (0L until 15L).map(i => (i, i + 1)).toDF("u", "v")
+    val ids = (0L to 15L).toDF("id")
+    val rounds = (1 to 50).find(r => scala.util.Try(GraphAlgorithms
+      .coreDecomposition(ids, path, maxRounds = r).collect()).isSuccess).get
+    val (coreJobs, coreSteps) = jobs(GraphAlgorithms.coreDecomposition(ids, path,
+      maxRounds = rounds).collect())
+    assert(coreSteps <= rounds + C,
+      s"coreDecomposition ran $coreSteps actions over $rounds rounds")
+    assert(coreJobs <= JobsPerStep * coreSteps,
+      s"coreDecomposition ran $coreJobs jobs in $coreSteps actions")
   }
 }

@@ -3760,6 +3760,29 @@ class CypherSpec extends SparkTestBase {
     assert(e.getMessage.contains("does not yield"), e.getMessage)
   }
 
+  test("SHOW PROCEDURES YIELD composes like SHOW INDEXES YIELD; CALL " +
+      "rejects the parser's internal pseudo-procedures") {
+    val sess = freshSession
+    def names(q: String): Seq[String] =
+      sess.run(q).asInstanceOf[CypherRows].df.as[String].collect().toSeq
+    assert(names("SHOW PROCEDURES YIELD name WHERE name STARTS WITH " +
+      "'gds.wcc' RETURN name").sorted === Seq("gds.wcc.stream", "gds.wcc.write"))
+    // Neo4j Browser's statement on connect: lower-case yield, no RETURN
+    val browser = sess.run("SHOW PROCEDURES yield name, description, signature")
+      .asInstanceOf[CypherRows].df
+    assert(browser.columns.toSeq === Seq("name", "description", "signature"))
+    assert(browser.count() === CypherAst.Procedures.all.size.toLong)
+    assert(sess.run("SHOW PROCEDURES").asInstanceOf[CypherRows].df
+      .columns.toSeq === Seq("name", "signature", "mode", "description"))
+    // only SHOW … YIELD reaches the pseudo-procedures; CALL does not
+    for (p <- CypherAst.Procedures.internal.keys) {
+      val e = intercept[IllegalArgumentException](
+        sess.run(s"CALL $p() YIELD name RETURN name"))
+      assert(e.getMessage.contains("unknown procedure"), e.getMessage)
+    }
+    assert(names("SHOW INDEXES YIELD name RETURN name") === Seq("node_label_lookup"))
+  }
+
   test("label-scoped index invalidation: a foreign-LABEL write adopts the " +
       "serving state; same-label writes patch through the id delta (r13)") {
     val sess = chunkSession
