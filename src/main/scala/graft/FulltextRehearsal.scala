@@ -9,8 +9,8 @@ import org.apache.spark.sql.functions._
   * article per loop iteration and readers search between writes) — at
   * the 100×-the-gate document count.
   *
-  * Measures the write-path cost model the round-15 compaction completes
-  * (the fulltext twin of GraphRagRehearsal's vector drill):
+  * Measures the write-path cost model of [[graft.index.LiveIndex]] on a
+  * fulltext index (GraphRagRehearsal drives a vector index through it):
   *   - index CREATE = the full build (one tokenize pass over N docs,
   *     persisted term-bucketed postings layout);
   *   - write→query rounds = the INCREMENTAL path: O(|delta|)
@@ -83,8 +83,8 @@ object FulltextRehearsal {
     // must track the OVERLAY (≈2× between them), never the 500k corpus.
     spark.conf.set(cypher.CypherSession.IndexMemThresholdKey, "4000")
     val comp0 = sess.fulltextIndexCompactions.get
-    def compactNanos = sess.fulltextIndexCompactionNanos.get
-    def rewriteNanos = sess.fulltextIndexLayoutRewriteNanos.get
+    def compactNanos = sess.indexes.fulltextCounters.compactionNanos.get
+    def rewriteNanos = sess.indexes.fulltextCounters.layoutRewriteNanos.get
     // ≈10 postings/doc at this title shape: 450 docs ≈ 4.5k ≥ 4000
     ingest("ca", 450) // overlay past threshold: the NEXT write compacts
     query("spark")
@@ -104,11 +104,11 @@ object FulltextRehearsal {
     // reclamation events = rewrites + prunes (round 16, VERDICT r15 #8:
     // the counters are now DISJOINT — a fresh-insert drill resolves as a
     // zero-IO prune and must not masquerade as a rewrite)
-    val rw0 = sess.fulltextIndexLayoutRewrites.get
-    val pr00 = sess.fulltextIndexTombstonePrunes.get
+    val rw0 = sess.indexes.fulltextCounters.layoutRewrites.get
+    val pr00 = sess.indexes.fulltextCounters.tombstonePrunes.get
     def reclamations =
-      sess.fulltextIndexLayoutRewrites.get +
-        sess.fulltextIndexTombstonePrunes.get
+      sess.indexes.fulltextCounters.layoutRewrites.get +
+        sess.indexes.fulltextCounters.tombstonePrunes.get
     val rc0 = reclamations
     var extraRounds = 0
     while (reclamations == rc0 && extraRounds < 20) {
@@ -116,8 +116,8 @@ object FulltextRehearsal {
       ingest(s"ce$extraRounds-", 1600)
       query("spark")
     }
-    val rewrites = sess.fulltextIndexLayoutRewrites.get - rw0
-    val prunes = sess.fulltextIndexTombstonePrunes.get - pr00
+    val rewrites = sess.indexes.fulltextCounters.layoutRewrites.get - rw0
+    val prunes = sess.indexes.fulltextCounters.tombstonePrunes.get - pr00
     val rewriteSec = rewriteNanos / 1e9
     val rebuildsDuringDrill = sess.fulltextIndexFullBuilds.get - fullBefore
     spark.conf.set(cypher.CypherSession.IndexMemThresholdKey,

@@ -147,8 +147,8 @@ object GraphRagRehearsal {
     // compacting WRITE statement also pays unrelated write-path costs
     // (MERGE anti-joins against the 200k store, graph lineage
     // compaction) that a wall clock would charge to compaction
-    def compactNanos = sess.vectorIndexCompactionNanos.get
-    def rewriteNanos = sess.vectorIndexLayoutRewriteNanos.get
+    def compactNanos = sess.indexes.vectorCounters.compactionNanos.get
+    def rewriteNanos = sess.indexes.vectorCounters.layoutRewriteNanos.get
     ingest("ca", 4000) // overlay ≈5005 ≥ 4000: the NEXT write compacts
     val cn0 = compactNanos
     val (_, compactAWallSec) = timed { ingest("cb", 1); query(qvecs(2L)) }
@@ -165,21 +165,21 @@ object GraphRagRehearsal {
     // round 16 (VERDICT r15 #8): rewrites and zero-IO prunes are now
     // DISJOINT counters — this fresh-insert drill masks nothing, so the
     // expected outcome is prunes=1, rewrites=0, partitions=0
-    val rw0 = sess.vectorIndexLayoutRewrites.get
-    val pru0 = sess.vectorIndexTombstonePrunes.get
-    val rp0 = sess.vectorIndexLayoutRewritePartitions.get
+    val rw0 = sess.indexes.vectorCounters.layoutRewrites.get
+    val pru0 = sess.indexes.vectorCounters.tombstonePrunes.get
+    val rp0 = sess.indexes.vectorCounters.layoutRewritePartitions.get
     ingest("ce", 4000)
     val rn0 = rewriteNanos
     val (_, rewriteWallSec) = timed { ingest("cf", 1); query(qvecs(4L)) }
     val rewriteSec = (rewriteNanos - rn0) / 1e9
-    val rewrites = sess.vectorIndexLayoutRewrites.get - rw0
-    val prunes = sess.vectorIndexTombstonePrunes.get - pru0
+    val rewrites = sess.indexes.vectorCounters.layoutRewrites.get - rw0
+    val prunes = sess.indexes.vectorCounters.tombstonePrunes.get - pru0
     // round 15 (VERDICT r14 #7): rewrite IO is PARTITION-SCOPED — the
     // partitions counter attributes how many of the 512 pbh dirs the
     // reclamation actually copied (a tombstone masking nothing prunes
     // for free, so a fresh-insert drill may copy none at all)
     val rewrotePartitions =
-      sess.vectorIndexLayoutRewritePartitions.get - rp0
+      sess.indexes.vectorCounters.layoutRewritePartitions.get - rp0
     val rebuildsDuringCompaction =
       sess.vectorIndexFullBuilds.get - fullBeforeCompaction
 
@@ -196,19 +196,19 @@ object GraphRagRehearsal {
         .stripMargin,
       Map("data" -> (0 until m).map(i =>
         Map("id" -> s"$tag$i", "embedding" -> qvecs((i + shift) % 8L)))))
-    val urw0 = sess.vectorIndexLayoutRewrites.get
-    val urp0 = sess.vectorIndexLayoutRewritePartitions.get
+    val urw0 = sess.indexes.vectorCounters.layoutRewrites.get
+    val urp0 = sess.indexes.vectorCounters.layoutRewritePartitions.get
     val urn0 = rewriteNanos
     reingest("ca", 4000, 1); query(qvecs(5L))
     reingest("cc", 10000, 1); query(qvecs(6L))
     var updateRounds = 0
-    while (sess.vectorIndexLayoutRewrites.get == urw0 && updateRounds < 6) {
+    while (sess.indexes.vectorCounters.layoutRewrites.get == urw0 && updateRounds < 6) {
       updateRounds += 1
       reingest("ce", 4000, updateRounds); query(qvecs(7L))
     }
-    val updateRewrites = sess.vectorIndexLayoutRewrites.get - urw0
+    val updateRewrites = sess.indexes.vectorCounters.layoutRewrites.get - urw0
     val updateRewritePartitions =
-      sess.vectorIndexLayoutRewritePartitions.get - urp0
+      sess.indexes.vectorCounters.layoutRewritePartitions.get - urp0
     val updateRewriteSec = (rewriteNanos - urn0) / 1e9
     val rebuildsAfterUpdates =
       sess.vectorIndexFullBuilds.get - fullBeforeCompaction

@@ -79,9 +79,9 @@ object GraphAlgorithms {
     * [[connectedComponents]]. Component label = the lowest member vertex
     * id, which for key-derived stable ids is deterministic. `numIter`
     * bounds the outer peel rounds; if a graph's color-chain depth
-    * exceeds it the call FAILS (IllegalArgumentException from the
-    * helper's budget check) rather than returning a silently partial
-    * labeling — raise `numIter` for adversarially deep graphs
+    * exceeds it the call FAILS (an IllegalStateException from the
+    * helper's `Superstep.FailAfter` budget) rather than returning a
+    * silently partial labeling — raise `numIter` for adversarially deep graphs
     * (ADVICE r15: documented here where callers look, not only on the
     * helper). Runs [[sccColoringDF]]. */
   def stronglyConnectedComponents(g: PropertyGraph,

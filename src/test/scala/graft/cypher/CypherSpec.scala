@@ -3635,6 +3635,61 @@ class CypherSpec extends SparkTestBase {
       .asInstanceOf[CypherRows].df.as[String].collect().toSeq === Seq("x"))
   }
 
+  test("index and constraint names share one schema namespace, both directions") {
+    val sess = freshSession
+    sess.run("MERGE (x:X {name: 'a'}) SET x.k = 'k1', x.y = 'y1', " +
+      "x.emb = '1.0,0.0', x.txt = 'hello world'")
+    def added(q: String): Boolean = sess.run(q).asInstanceOf[CypherRows].df
+      .select("added").as[Boolean].collect().head
+    def clash(q: String): Unit = {
+      val e = intercept[IllegalArgumentException](sess.run(q))
+      assert(e.getMessage.contains("already exists"), e.getMessage)
+    }
+    val creates = Seq(
+      "CREATE INDEX %s%s FOR (n:X) ON (n.y)",
+      "CREATE VECTOR INDEX %s%s FOR (n:X) ON n.emb " +
+        "OPTIONS {indexConfig: {`vector.dimensions`: 2}}",
+      "CREATE FULLTEXT INDEX %s%s FOR (n:X) ON EACH [n.txt]")
+    // constraint first: no index kind may take its name
+    assert(added("CREATE CONSTRAINT uc FOR (n:X) REQUIRE n.k IS UNIQUE"))
+    creates.foreach { c =>
+      clash(c.format("uc", ""))
+      assert(!added(c.format("uc", " IF NOT EXISTS")))
+    }
+    // index first: a constraint may not take an index's name
+    Seq("ri", "vi", "fi").zip(creates).foreach { case (n, c) =>
+      assert(added(c.format(n, "")))
+      clash(s"CREATE CONSTRAINT $n FOR (n:X) REQUIRE n.y IS UNIQUE")
+      assert(!added(
+        s"CREATE CONSTRAINT $n IF NOT EXISTS FOR (n:X) REQUIRE n.y IS UNIQUE"))
+      sess.run(s"DROP INDEX $n")
+    }
+    val names = sess.run("SHOW INDEXES").asInstanceOf[CypherRows].df
+      .select("name").as[String].collect().toSeq
+    assert(names.count(_ == "uc") === 1, names)
+    assert(sess.run("SHOW CONSTRAINTS").asInstanceOf[CypherRows].df
+      .select("name").as[String].collect().toSeq === Seq("uc"))
+  }
+
+  test("CREATE FULLTEXT INDEX rejects an equivalent definition unless IF NOT EXISTS") {
+    val sess = freshSession
+    sess.run("MERGE (d:Doc {name: 'a'}) SET d.title = 'spark', d.body = 'graph'")
+    sess.run("CREATE FULLTEXT INDEX ft1 FOR (d:Doc) ON EACH [d.title, d.body]")
+    val e = intercept[IllegalArgumentException](sess.run(
+      "CREATE FULLTEXT INDEX ft2 FOR (d:Doc) ON EACH [d.title, d.body]"))
+    assert(e.getMessage.contains("equivalent"), e.getMessage)
+    assert(sess.run(
+      "CREATE FULLTEXT INDEX ft2 IF NOT EXISTS FOR (d:Doc) ON EACH [d.title, d.body]")
+      .asInstanceOf[CypherRows].df.as[(String, Boolean)].collect().head ===
+      (("ft2", false)))
+    // another property list, or the relationship kind, is not equivalent
+    assert(sess.run("CREATE FULLTEXT INDEX ft3 FOR (d:Doc) ON EACH [d.title]")
+      .asInstanceOf[CypherRows].df.as[(String, Boolean)].collect().head ===
+      (("ft3", true)))
+    assert(sess.run("SHOW FULLTEXT INDEXES").asInstanceOf[CypherRows].df
+      .select("name").as[String].collect().toSeq.sorted === Seq("ft1", "ft3"))
+  }
+
   test("round-12: euclidean vector indexes — 1/(1+d2) scores, origin legal, cosine still rejects zero") {
     val sess = chunkSession
     Seq("a" -> "1.0,0.0", "b" -> "0.0,2.0", "o" -> "0.0,0.0").foreach {

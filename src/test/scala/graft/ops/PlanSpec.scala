@@ -816,8 +816,8 @@ class PlanSpec extends SparkTestBase {
         .map(_.getString(0)).toSeq
       top(Seq(1.0, 1.0, 1.0, 1.0)) // build the layout
       val full0 = sess.vectorIndexFullBuilds.get
-      val rw0 = sess.vectorIndexLayoutRewrites.get
-      val pr0 = sess.vectorIndexTombstonePrunes.get
+      val rw0 = sess.indexes.vectorCounters.layoutRewrites.get
+      val pr0 = sess.indexes.vectorCounters.tombstonePrunes.get
       // five 70-id batches: each write past the first finds a 70-row
       // overlay ≥ 64 and compacts; distinct tombstoned ids accumulate
       // 70 → 140 → 210 → 280, crossing the 4×64 = 256 rewrite trigger on
@@ -832,11 +832,11 @@ class PlanSpec extends SparkTestBase {
             Map("name" -> s"t${b}x$i", "emb" -> s"$b.0,1.0,0.0,0.0"))))
         top(Seq(1.0, 1.0, 1.0, 1.0))
       }
-      assert(sess.vectorIndexTombstonePrunes.get === pr0 + 1,
+      assert(sess.indexes.vectorCounters.tombstonePrunes.get === pr0 + 1,
         "crossing factor×threshold tombstones must reclaim once — and " +
           "fresh-insert tombstones mask nothing, so the event is a " +
           "zero-IO prune")
-      assert(sess.vectorIndexLayoutRewrites.get === rw0,
+      assert(sess.indexes.vectorCounters.layoutRewrites.get === rw0,
         "a zero-IO prune must NOT count as a layout rewrite (round 16: " +
           "disjoint counters)")
       assert(sess.vectorIndexFullBuilds.get === full0,
@@ -1046,8 +1046,8 @@ class PlanSpec extends SparkTestBase {
         .map(_.getString(0)).toSeq
       names("spark") // build the layout
       val full0 = sess.fulltextIndexFullBuilds.get
-      val rw0 = sess.fulltextIndexLayoutRewrites.get
-      val pr0 = sess.fulltextIndexTombstonePrunes.get
+      val rw0 = sess.indexes.fulltextCounters.layoutRewrites.get
+      val pr0 = sess.indexes.fulltextCounters.tombstonePrunes.get
       // five 70-key FRESH batches: each write past the first finds a
       // 210-row overlay ≥ 64 and compacts; distinct tombstoned KEYS
       // accumulate 70 → 140 → 210 → 280, crossing the 4×64 = 256
@@ -1062,9 +1062,9 @@ class PlanSpec extends SparkTestBase {
             Map("name" -> s"t${b}x$i", "title" -> s"word$b filler$b$i tail"))))
         names(s"word$b")
       }
-      assert(sess.fulltextIndexTombstonePrunes.get === pr0 + 1,
+      assert(sess.indexes.fulltextCounters.tombstonePrunes.get === pr0 + 1,
         "fresh-key tombstones mask nothing — the event is a zero-IO prune")
-      assert(sess.fulltextIndexLayoutRewrites.get === rw0,
+      assert(sess.indexes.fulltextCounters.layoutRewrites.get === rw0,
         "a zero-IO prune must NOT count as a layout rewrite (round 16: " +
           "the counters are disjoint)")
       assert(sess.fulltextIndexFullBuilds.get === full0,
@@ -1078,8 +1078,8 @@ class PlanSpec extends SparkTestBase {
       // already-indexed corpus — their superseded generations are real
       // garbage, so the next trigger crossing must pay the actual
       // layout rewrite (dropping the dead rows), not a prune
-      val rw1 = sess.fulltextIndexLayoutRewrites.get
-      val pr1 = sess.fulltextIndexTombstonePrunes.get
+      val rw1 = sess.indexes.fulltextCounters.layoutRewrites.get
+      val pr1 = sess.indexes.fulltextCounters.tombstonePrunes.get
       (1 to 5).foreach { b =>
         sess.run(
           "UNWIND $data AS row MERGE (d:Doc {name: row.name}) " +
@@ -1093,10 +1093,10 @@ class PlanSpec extends SparkTestBase {
       // garbage-free keys still diluting the set) resolves as another
       // prune at 210 remaining < 256; the second sees 280 keys of
       // GENUINE superseded rows and must pay the actual rewrite
-      assert(sess.fulltextIndexTombstonePrunes.get === pr1 + 1,
+      assert(sess.indexes.fulltextCounters.tombstonePrunes.get === pr1 + 1,
         "exactly one of the two reclamation events is garbage-free " +
           "(prune)")
-      assert(sess.fulltextIndexLayoutRewrites.get === rw1 + 1,
+      assert(sess.indexes.fulltextCounters.layoutRewrites.get === rw1 + 1,
         "the other reclamation event sees genuine superseded rows and " +
           "must pay the REWRITE path (disjoint counters: 1 prune + 1 " +
           "rewrite, never 2 rewrites)")
@@ -1136,8 +1136,8 @@ class PlanSpec extends SparkTestBase {
         .map(_.getString(0)).head
       top(Seq(1.0, 1.0, 1.0, 1.0)) // build the layout
       val full0 = sess.vectorIndexFullBuilds.get
-      val rw0 = sess.vectorIndexLayoutRewrites.get
-      val rp0 = sess.vectorIndexLayoutRewritePartitions.get
+      val rw0 = sess.indexes.vectorCounters.layoutRewrites.get
+      val rp0 = sess.indexes.vectorCounters.layoutRewritePartitions.get
       def write(ids: String, dir: Int): Unit = {
         sess.run(
           """UNWIND $data AS row MERGE (d:Doc {name: row.name})
@@ -1154,8 +1154,8 @@ class PlanSpec extends SparkTestBase {
       // free, and never touch the other ~500 partitions.
       write("A", 1); write("B", 2); write("A", 9)
       write("C", 3); write("D", 4); write("E", 5)
-      assert(sess.vectorIndexLayoutRewrites.get === rw0 + 1)
-      val touched1 = sess.vectorIndexLayoutRewritePartitions.get - rp0
+      assert(sess.indexes.vectorCounters.layoutRewrites.get === rw0 + 1)
+      val touched1 = sess.indexes.vectorCounters.layoutRewritePartitions.get - rp0
       assert(touched1 < graft.cypher.CypherSession.VectorPartDirs,
         s"skewed garbage must rewrite partition-scoped, touched $touched1")
       assert(touched1 > 0,
@@ -1169,9 +1169,9 @@ class PlanSpec extends SparkTestBase {
       // rewrites B's old dirs; probes then span the twice-masked old
       // segment plus two newer ones and must still see every survivor
       write("B", 8); write("F", 6); write("G", 7); write("H", 11)
-      assert(sess.vectorIndexLayoutRewrites.get === rw0 + 2,
+      assert(sess.indexes.vectorCounters.layoutRewrites.get === rw0 + 2,
         "the second tombstone accumulation must reclaim again")
-      val touchedTotal = sess.vectorIndexLayoutRewritePartitions.get - rp0
+      val touchedTotal = sess.indexes.vectorCounters.layoutRewritePartitions.get - rp0
       assert(touchedTotal < 2 * graft.cypher.CypherSession.VectorPartDirs)
       Seq("A" -> 9, "B" -> 8, "C" -> 3, "D" -> 4, "E" -> 5,
         "F" -> 6, "G" -> 7, "H" -> 11).foreach { case (t, d0) =>
@@ -1183,6 +1183,79 @@ class PlanSpec extends SparkTestBase {
     } finally spark.conf.set(
       graft.cypher.CypherSession.IndexMemThresholdKey,
       graft.cypher.CypherSession.IndexMemThresholdDefault.toString)
+  }
+
+  test("retired index layouts outlive DROP INDEX through the grace window; " +
+      "at grace 0 a drop deletes every directory the index owned") {
+    import graft.cypher.CypherSession
+    val stageKey = "spark.graft.stageDir"
+    val graceKey = "spark.graft.indexRetireGraceMs"
+    val roots = Seq.fill(2)(java.nio.file.Files.createTempDirectory("graft_retire").toFile)
+    def dirs(root: java.io.File, prefix: String): Set[String] =
+      Option(root.listFiles).toSeq.flatten.map(_.getName)
+        .filter(_.startsWith(prefix)).toSet
+    // a persisted vector index with two segments (one partition-scoped
+    // rewrite) and a persisted fulltext index, both under `root`
+    def build(root: java.io.File): CypherSession = {
+      spark.conf.set(stageKey, root.getAbsolutePath)
+      val sess = new CypherSession(graft.graph.PropertyGraph.empty(spark))
+      sess.run(
+        """UNWIND $data AS row MERGE (d:Doc {name: row.name})
+          |SET d.embedding = row.emb, d.title = row.title""".stripMargin,
+        Map("data" -> (0 until 300).map { i =>
+          Map("name" -> s"n$i", "title" -> s"spark doc number $i",
+            "emb" -> Seq.tabulate(4)(j => (i * 4 + j) % 7 - 3.0).mkString(","))
+        }))
+      sess.run("""CREATE VECTOR INDEX vr FOR (d:Doc) ON d.embedding
+                 |OPTIONS {indexConfig: {`vector.dimensions`: 4}}""".stripMargin)
+      sess.run("CREATE FULLTEXT INDEX fr FOR (d:Doc) ON EACH [d.title]")
+      def write(ids: String, dir: Int): Unit = {
+        sess.run(
+          """UNWIND $data AS row MERGE (d:Doc {name: row.name})
+            |SET d.embedding = row.emb""".stripMargin,
+          Map("data" -> (0 until 70).map(i =>
+            Map("name" -> s"${ids}$i", "emb" -> s"$dir.0,1.0,0.0,0.0"))))
+        sess.run("CALL db.index.vector.queryNodes('vr', 1, $q) YIELD node " +
+          "RETURN node.name AS nm", Map("q" -> Seq(dir.toDouble, 1.0, 0.0, 0.0)))
+          .asInstanceOf[graft.cypher.CypherRows].df.collect()
+      }
+      write("A", 1); write("B", 2); write("A", 9)
+      write("C", 3); write("D", 4); write("E", 5)
+      assert(sess.indexes.vectorCounters.layoutRewrites.get === 1)
+      assert(sess.indexes.vectorCounters.layoutRewritePartitions.get <
+        CypherSession.VectorPartDirs, "the rewrite must be partition-scoped")
+      assert(dirs(root, "vec-").size === 2, "two vector segments on disk")
+      assert(dirs(root, "ft-").size === 1)
+      sess
+    }
+    spark.conf.set(CypherSession.IndexMemThresholdKey, "64")
+    try {
+      // default grace: in-flight probes may still read a dropped layout
+      val kept = build(roots(0))
+      val before = dirs(roots(0), "")
+      kept.run("DROP INDEX vr")
+      kept.run("DROP INDEX fr")
+      assert(dirs(roots(0), "") === before,
+        "DROP INDEX must retire, not delete, within the grace window")
+      // grace 0: a drop deletes the index's directories, segments included,
+      // and leaves the other, live index's directories alone
+      spark.conf.set(graceKey, "0")
+      val swept = build(roots(1))
+      val ftDirs = dirs(roots(1), "ft-")
+      swept.run("DROP INDEX vr")
+      assert(dirs(roots(1), "vec-").isEmpty,
+        "every vector segment must be deleted at grace 0")
+      assert(dirs(roots(1), "ft-") === ftDirs,
+        "the live fulltext index keeps its layout")
+      swept.run("DROP INDEX fr")
+      assert(dirs(roots(1), "ft-").isEmpty)
+    } finally {
+      spark.conf.set(CypherSession.IndexMemThresholdKey,
+        CypherSession.IndexMemThresholdDefault.toString)
+      spark.conf.unset(stageKey)
+      spark.conf.unset(graceKey)
+      roots.foreach(r => org.apache.commons.io.FileUtils.deleteQuietly(r))
+    }
   }
 
   test("round-12: persisted fulltext postings — a term probe prunes to its bucket's directory") {
