@@ -395,8 +395,8 @@ final class CypherSession(
 
   /** Render a JVM-side vector value the way the store's string bag carries
     * embeddings (comma-joined components through DOUBLE) — the exact
-    * format [[graft.index.VectorIndex.parseVector]] reads back and the c71 oracle proves
-    * round-trips. */
+    * format [[graft.index.VectorIndex.parseVector]] reads back and the
+    * c71 oracle proves round-trips. */
   private def renderVectorSeq(s: Seq[_]): String = s.map {
     case d: Double => d.toString
     case f: Float => f.toDouble.toString
@@ -1068,7 +1068,8 @@ final class CypherSession(
     // edge-only MERGE records the empty set — index snapshots read only
     // the label's node rows, so it invalidates nothing)
     indexes.lineage.record(preStatementGraph, g2,
-      bindings.values.map(_.label).toSet, (edgeList.map(_.relType) ++ createEdgeList.map(_.relType)).toSet,
+      bindings.values.map(_.label).toSet,
+      (edgeList.map(_.relType) ++ createEdgeList.map(_.relType)).toSet,
       if (bindings.nonEmpty) statementWrittenIds else null,
       if (edgeList.nonEmpty || createEdgeList.nonEmpty)
         statementWrittenPairs else null)
