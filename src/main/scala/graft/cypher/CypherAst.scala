@@ -51,8 +51,12 @@ object CypherAst {
     * ignored for the null tests). */
   final case class Predicate(lhs: ReturnExpr, op: String, rhs: ReturnExpr)
 
+  /** Any expression node: a value ([[ReturnExpr]]) or a predicate
+    * ([[BoolExpr]]). Analyses walk both through [[children]]. */
+  sealed trait Expr
+
   /** WHERE expression tree; AND binds tighter than OR, NOT tightest. */
-  sealed trait BoolExpr
+  sealed trait BoolExpr extends Expr
   final case class Cmp(pred: Predicate) extends BoolExpr
   final case class AndE(l: BoolExpr, r: BoolExpr) extends BoolExpr
   final case class OrE(l: BoolExpr, r: BoolExpr) extends BoolExpr
@@ -70,7 +74,7 @@ object CypherAst {
   final case class ListPred(fn: String, variable: String, src: ReturnExpr,
     where: BoolExpr) extends BoolExpr
 
-  sealed trait ReturnExpr
+  sealed trait ReturnExpr extends Expr
   final case class RetVar(variable: String) extends ReturnExpr
   final case class RetProp(ref: PropRef) extends ReturnExpr
   /** Scalar function over nested expressions (composable): toLower,
@@ -167,25 +171,63 @@ object CypherAst {
   final case class RetSlice(src: ReturnExpr, lo: Option[ReturnExpr],
     hi: Option[ReturnExpr]) extends ReturnExpr
 
+  /** The immediate sub-expressions of `e`, left to right in source order.
+    * This is the one structural descent over expressions outside the
+    * compilers (`itemCol`, `compileBool`) and the printer
+    * (`ReturnItem.exprName`): every analysis is a [[collect]] or
+    * [[exists]] over it. The match names every node kind and has no
+    * wildcard arm, so a node kind added to the AST without a case here is
+    * a compile error (`match may not be exhaustive`), never a subtree an
+    * analysis silently skips. Subquery patterns (`COUNT { }`, `EXISTS
+    * { }`, pattern comprehensions) contribute their WHERE and projection;
+    * their path property values are [[Value]]s, not expressions. */
+  def children(e: Expr): Seq[Expr] = e match {
+    case Cmp(Predicate(l, _, r)) => Seq(l, r)
+    case AndE(l, r) => Seq(l, r)
+    case OrE(l, r) => Seq(l, r)
+    case NotE(x) => Seq(x)
+    case ExistsPat(_, where) => where.toSeq
+    case ListPred(_, _, src, where) => Seq(src, where)
+    case _: RetVar | _: RetProp | _: RetLit | _: RetAgg => Nil
+    case RetFn(_, args) => args
+    case RetBin(_, l, r) => Seq(l, r)
+    case RetCase(whens, default) =>
+      whens.flatMap { case (c, v) => Seq(c, v) } ++ default
+    case RetAggExpr(_, arg, _, _) => Seq(arg)
+    case RetCountSub(_, where) => where.toSeq
+    case RetExistsSub(sub) => Seq(sub)
+    case RetPatternComp(_, where, proj) => where.toSeq :+ proj
+    case RetListLit(items) => items
+    case RetMapLit(pairs) => pairs.map(_._2)
+    case RetListComp(_, src, where, proj) => src +: (where.toSeq ++ proj)
+    case RetReduce(_, init, _, src, body) => Seq(init, src, body)
+    case RetMapProj(_, _, _, overrides) => overrides.map(_._2)
+    case RetTemporalCtor(_, pairs) => pairs.map(_._2)
+    case RetIndex(src, idx) => Seq(src, idx)
+    case RetSlice(src, lo, hi) => src +: (lo.toSeq ++ hi)
+  }
+
+  /** Pre-order, left-to-right: `pf`'s value for every node it is defined
+    * at; a matching node stops the descent below it. */
+  def collect[A](e: Expr)(pf: PartialFunction[Expr, A]): Seq[A] =
+    pf.andThen(Seq(_)).applyOrElse(e, (x: Expr) => children(x).flatMap(collect(_)(pf)))
+
+  /** [[collect]]'s short-circuiting test: true when `p` answers true at
+    * some node it is defined at; a matching node stops the descent. */
+  def exists(e: Expr)(p: PartialFunction[Expr, Boolean]): Boolean =
+    p.applyOrElse(e, (x: Expr) => children(x).exists(exists(_)(p)))
+
   /** True when the expression tree contains an aggregate call — such an
     * item is an aggregation output, everything else is an implicit
-    * grouping key. Lambda bodies (comprehension/reduce) cannot aggregate;
-    * their *source* lists can (`reduce(… IN collect(x) | …)`). */
-  def containsAgg(e: ReturnExpr): Boolean = e match {
-    case _: RetAgg => true
-    case _: RetAggExpr => true
-    case RetBin(_, l, r) => containsAgg(l) || containsAgg(r)
-    case RetFn(_, as) => as.exists(containsAgg)
-    case RetCase(ws, d) => ws.exists(w => containsAgg(w._2)) || d.exists(containsAgg)
-    case RetListLit(items) => items.exists(containsAgg)
-    case RetMapLit(pairs) => pairs.exists(p => containsAgg(p._2))
+    * grouping key. Lambda bodies (comprehension/reduce/list predicate)
+    * cannot aggregate; their *source* lists can (`reduce(… IN collect(x)
+    * | …)`). A subquery's expressions belong to the subquery's scope. */
+  def containsAgg(e: Expr): Boolean = exists(e) {
+    case _: RetAgg | _: RetAggExpr => true
     case RetListComp(_, src, _, _) => containsAgg(src)
     case RetReduce(_, init, _, src, _) => containsAgg(init) || containsAgg(src)
-    case RetIndex(src, idx) => containsAgg(src) || containsAgg(idx)
-    case RetSlice(src, lo, hi) => containsAgg(src) ||
-      lo.exists(containsAgg) || hi.exists(containsAgg)
-    case RetTemporalCtor(_, pairs) => pairs.exists(p => containsAgg(p._2))
-    case _ => false
+    case ListPred(_, _, src, _) => containsAgg(src)
+    case _: RetCountSub | _: RetPatternComp | _: ExistsPat => false
   }
 
   final case class ReturnItem(expr: ReturnExpr, alias: Option[String]) {
@@ -645,6 +687,33 @@ object CypherAst {
   final case class MatchStatement(stages: Seq[MatchStage],
     ret: Seq[ReturnItem], orderBy: Seq[OrderItem], limit: Option[Int],
     distinct: Boolean = false, skip: Option[Int] = None) extends Statement
+
+  /** An ORDER BY key as an expression: a property key reads as `v.p`; a
+    * bare alias names a projected column and is no expression. */
+  def orderExpr(o: OrderItem): Option[ReturnExpr] =
+    o.expr.orElse(o.key.toOption.map(RetProp))
+
+  /** The expression positions of one stage, in compile order: WHERE, the
+    * WITH items, the WITH WHERE, the WITH ORDER BY keys, then the UNWIND
+    * sources. A WITH item passing a binding through under its own name
+    * (`WITH a`) reads nothing and is left out. */
+  def stageExprs(st: MatchStage): Seq[Expr] =
+    st.where.toSeq ++ st.withClause.toSeq.flatMap { w =>
+      w.items.filter {
+        case ReturnItem(RetVar(v), alias) => !alias.forall(_ == v)
+        case _ => true
+      }.map(_.expr) ++ w.where ++ w.orderBy.flatMap(orderExpr)
+    } ++ st.unwinds.map(_.expr)
+
+  /** A statement's own expression positions after its stages': the
+    * RETURN items, then the ORDER BY keys (the expression keys among them
+    * compile as hidden RETURN items). */
+  def returnExprs(m: MatchStatement): Seq[Expr] =
+    m.ret.map(_.expr) ++ m.orderBy.flatMap(orderExpr)
+
+  /** Every expression position of a statement (not its CALL subqueries). */
+  def statementExprs(m: MatchStatement): Seq[Expr] =
+    m.stages.flatMap(stageExprs) ++ returnExprs(m)
 
   /** `<query> UNION [ALL] <query> …` — parts must project the same column
     * names (Neo4j's rule). A trailing ORDER BY / SKIP / LIMIT parsed with

@@ -90,4 +90,47 @@ class CypherExpressionProperties extends SparkTestBase {
       }
     }
   }
+
+  /** An expression context the parser accepts around a value: its text
+    * with `X` for the hole, and the value the wrapped expression has. */
+  case class Wrap(text: String, eval: Long => Long)
+  private val wraps = Seq(
+    Wrap("[X][0]", identity),
+    Wrap("[x IN [1] | X][0]", identity),
+    Wrap("reduce(acc = 0, x IN [1] | acc + X)", identity),
+    Wrap("CASE WHEN 1 = 1 THEN X ELSE 0 END", identity),
+    Wrap("CASE WHEN X > 1 THEN 1 ELSE 0 END", v => if (v > 1) 1 else 0),
+    Wrap("coalesce(X, 0)", identity))
+  private def wrapsGen(depth: Int): Gen[Seq[Wrap]] =
+    Gen.choose(1, depth).flatMap(Gen.listOfN(_, Gen.oneOf(wraps)))
+
+  test("COUNT { }, pattern comprehensions and path lists read the same in any wrapping context") {
+    val sess = new CypherSession(PropertyGraph.empty(spark))
+    sess.run("""MERGE (a:Tech {name: 'a'}) MERGE (b:Tech {name: 'b'})
+               |MERGE (c:Tech {name: 'c'})
+               |MERGE (a)-[:NEXT]->(b) MERGE (b)-[:NEXT]->(c)
+               |MERGE (a)-[:NEXT]->(c)""".stripMargin)
+    val probes = Seq("COUNT { (n)-[:NEXT]->() }",
+      "size([(n)-[:NEXT]->(m) | m.name])", "size(relationships(p))")
+    val matchText = "MATCH p = (n:Tech)-[:NEXT*1..2]->(t:Tech) "
+    def rows(q: String): Seq[(String, Long)] =
+      sess.run(q).asInstanceOf[CypherRows].df.collect().toSeq
+        .map(r => (r.getString(0), r.getAs[Number](1).longValue))
+    // one row per walk, keyed by the walk's node names
+    val walk = "n.name + '>' + t.name + ':' + toString(size(relationships(p)))"
+    val plain = probes.map(pr =>
+      pr -> rows(matchText + s"RETURN $walk AS w, $pr AS v ORDER BY w"))
+    assert(plain.forall(_._2.size == 4))
+    assert(plain.head._2.map(_._2) === Seq(2L, 2L, 2L, 1L)) // a, a, a, b
+    (1L to 10L).foreach { seed =>
+      val stack = sample(wrapsGen(3), seed)
+      plain.foreach { case (pr, want) =>
+        val text = stack.foldLeft(pr)((e, w) => w.text.replace("X", e))
+        val expect = want.map { case (w, v) => (w, stack.foldLeft(v)((x, wr) => wr.eval(x))) }
+        // the wrapped value, and the same expression as an ORDER BY key
+        val got = rows(matchText + s"RETURN $walk AS w, $text AS v ORDER BY $text DESC, w")
+        assert(got === expect.sortBy { case (w, v) => (-v, w) }, s"seed=$seed expr=$text")
+      }
+    }
+  }
 }

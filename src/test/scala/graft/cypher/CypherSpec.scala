@@ -4284,4 +4284,76 @@ class CypherSpec extends SparkTestBase {
     assert(rl === Set(("User", "INTERESTED_IN", "Tech"),
       ("User", "KNOWS", "User")))
   }
+
+  /** (a:Tech)-[:NEXT {w:'2'}]->(b:Tech)-[:NEXT {w:'3'}]->(c:Tech). */
+  private def chainSession = {
+    val sess = freshSession
+    sess.run("""MERGE (a:Tech {name: 'a'}) MERGE (b:Tech {name: 'b'})
+               |MERGE (c:Tech {name: 'c'})
+               |MERGE (a)-[:NEXT {w: '2'}]->(b)
+               |MERGE (b)-[:NEXT {w: '3'}]->(c)""".stripMargin)
+    sess
+  }
+
+  test("path lists, COUNT { } and pattern comprehensions compile nested in any expression position") {
+    val sess = chainSession
+    def rows(q: String): Seq[Row] =
+      sess.run(q).asInstanceOf[CypherRows].df.collect().toSeq
+    def col0(q: String): Seq[Any] = rows(q).map(_.get(0))
+    val fromA = "MATCH p = (x:Tech {name: 'a'})-[:NEXT*1..2]->(y:Tech) "
+    def byY(expr: String): Seq[Any] =
+      rows(fromA + s"RETURN y.name AS name, $expr AS v ORDER BY name").map(_.get(1))
+    // relationships()/nodes() inside a comprehension, a reduce, an UNWIND
+    // source, a list literal and an ORDER BY key
+    // (path relationship lists carry srcId/dstId/relType, no property bag)
+    assert(byY("[r IN relationships(p) | r]").map(_.asInstanceOf[collection.Seq[Row]]
+      .map(_.getAs[String]("relType"))) === Seq(Seq("NEXT"), Seq("NEXT", "NEXT")))
+    assert(byY("reduce(s = 0, r IN relationships(p) | s + 1)") === Seq(1L, 2L))
+    assert(col0(fromA + "UNWIND nodes(p) AS n RETURN count(*) AS k") === Seq(5L))
+    assert(byY("[nodes(p)]").map(_.asInstanceOf[collection.Seq[collection.Seq[_]]].map(_.size)) ===
+      Seq(Seq(2), Seq(3)))
+    assert(col0(fromA + "RETURN y.name AS name ORDER BY size(relationships(p)) DESC") ===
+      Seq("c", "b"))
+    // COUNT { } / EXISTS { } / pattern comprehensions nested in lists, maps,
+    // aggregates, comprehension bodies and ORDER BY keys
+    val byName = "MATCH (n:Tech) RETURN n.name AS name, "
+    val out = "COUNT { (n)-[:NEXT]->() }"
+    assert(rows(byName + s"[$out] AS c ORDER BY name").map(_.getSeq[Long](1)) ===
+      Seq(Seq(1L), Seq(1L), Seq(0L)))
+    assert(col0(s"MATCH (n:Tech) RETURN sum($out) AS s") === Seq(2.0))
+    assert(rows(byName + s"{c: $out} AS m ORDER BY name")
+      .map(_.getStruct(1).getLong(0)) === Seq(1L, 1L, 0L))
+    assert(rows(byName + s"[x IN [1] | $out] AS c ORDER BY name")
+      .map(_.getSeq[Long](1)) === Seq(Seq(1L), Seq(1L), Seq(0L)))
+    assert(col0(s"MATCH (n:Tech) RETURN n.name AS name ORDER BY $out DESC, n.name") ===
+      Seq("a", "b", "c"))
+    assert(col0(s"MATCH (n:Tech) WITH n ORDER BY $out DESC, n.name LIMIT 1 " +
+      "RETURN n.name AS name") === Seq("a"))
+    assert(col0("MATCH (n:Tech) RETURN n.name AS name " +
+      "ORDER BY size([(n)-[:NEXT]->(m) | m.name]) DESC, n.name") === Seq("a", "b", "c"))
+    // attached before a WITH that projects it away, read again after
+    assert(rows(s"MATCH (n:Tech) WITH n WHERE $out > 0 RETURN n.name AS name, $out AS c " +
+      "ORDER BY name").map(r => (r.getString(0), r.getLong(1))) === Seq(("a", 1L), ("b", 1L)))
+    assert(rows(byName + "[EXISTS { (n)-[:NEXT]->() }] AS e ORDER BY name")
+      .map(_.getSeq[Boolean](1)) === Seq(Seq(true), Seq(true), Seq(false)))
+    // (map projection values render to strings, as the property bag's do)
+    assert(rows(byName + "n {.name, out: [(n)-[:NEXT]->(m) | m.name]} AS m " +
+      "ORDER BY name").map(_.getMap[String, String](1).toMap) === Seq(
+        Map("name" -> "a", "out" -> "[b]"), Map("name" -> "b", "out" -> "[c]"),
+        Map("name" -> "c", "out" -> "[]")))
+    // an aggregate inside a CASE condition makes the item an aggregation
+    assert(rows(byName + "CASE WHEN count(*) > 0 THEN 'y' ELSE 'n' END AS has ORDER BY name")
+      .map(r => (r.getString(0), r.getString(1))) ===
+      Seq(("a", "y"), ("b", "y"), ("c", "y")))
+  }
+
+  test("RETURN DISTINCT over node bindings dedups on node identity") {
+    val sess = chainSession
+    val ms = sess.run("MATCH (:Tech)-[:NEXT*1..2]->(m:Tech) RETURN DISTINCT m, m.name AS name " +
+      "ORDER BY name").asInstanceOf[CypherRows].df.collect().toSeq
+    assert(ms.map(_.getString(1)) === Seq("b", "c"))
+    assert(ms.map(_.getStruct(0).getAs[String]("key")) === Seq("b", "c"))
+    assert(sess.run("MATCH (n:Tech) RETURN DISTINCT n").asInstanceOf[CypherRows]
+      .df.count() === 3)
+  }
 }
